@@ -26,6 +26,7 @@ import sys
 
 def parse_args(argv):
     from pipe_segment_spark.cli import parse_segmenter_params, valid_daterange
+    from pipe_segment_spark.streaming.segmenter_stream import STREAM_MODES
 
     p = argparse.ArgumentParser(description="pipe-segment-spark segmenter")
     p.add_argument("--input", required=True, help="token table path (parquet)")
@@ -50,19 +51,12 @@ def parse_args(argv):
     p.add_argument("--watermark", default="0 seconds")
     p.add_argument(
         "--stream-mode",
-        choices=["low_latency", "day_close", "sorted_prefix", "tws_sorted_prefix"],
+        choices=STREAM_MODES,
         default="low_latency",
-        help="stream mode emission contract: low_latency (tagged rows emit "
-        "per microbatch; batch-identity for in-order feeds), day_close "
-        "(whole-day replay at watermark close; batch-identity under "
-        "arbitrary intra-day disorder), sorted_prefix (incremental "
-        "watermark-confirmed release; day_close's identity guarantee at "
-        "near-low_latency emission), tws_sorted_prefix (EXPERIMENTAL: same "
-        "semantics on the Spark 4 transformWithState operator — append-only "
-        "RocksDB ListState buffer, per-batch state I/O bounded by the "
-        "arriving batch + released suffix; the operator path needs "
-        "google.protobuf in the Python env and has only fake-state unit "
-        "coverage where protobuf is absent)",
+        help="stream mode release cut: low_latency (the whole arriving "
+        "microbatch releases; batch-identity for per-day in-order feeds) or "
+        "sorted_prefix (only records below the watermark release; "
+        "batch-identity under arbitrary intra-day disorder)",
     )
     p.add_argument(
         "--available-now",
@@ -74,7 +68,6 @@ def parse_args(argv):
     p.add_argument("--max-dtok-rate", type=float, default=30.0)
     p.add_argument("--buffer-hours", type=float, default=0.5)
     p.add_argument("--hours-exp", type=float, default=0.5)
-    p.add_argument("--salted", action="store_true", help="salted fragmenter")
     return p.parse_args(argv)
 
 

@@ -104,41 +104,6 @@ def sort_group(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.iloc[order]
 
 
-def fragment_group(
-    pdf: pd.DataFrame,
-    params: SegmenterParams,
-    state: list[OpenFragState] | None = None,
-    next_k: int = 1,
-) -> tuple[np.ndarray, list[OpenFragState], int]:
-    """Assign a frag_id (or None) to every row of one sorted (doc_id, window)
-    group. Returns (frag_ids, open_state, next_k) so the streaming path can
-    carry state across windows.
-    """
-    n = len(pdf)
-    frag_ids = np.empty(n, dtype=object)
-    if n == 0:
-        return frag_ids, state or [], next_k
-
-    doc_id = pdf["doc_id"].iloc[0]
-    ts_us = pdf["timestamp"].to_numpy("datetime64[us]").astype(np.int64)
-    n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
-    if "has_payload" in pdf.columns:
-        noise_arr = ~pdf["has_payload"].to_numpy(dtype=bool) | np.isnan(n_tok)
-    else:
-        tokens = pdf["tokens"].to_numpy()
-        noise_arr = np.fromiter(
-            (t is None or len(t) == 0 for t in tokens), dtype=bool, count=n
-        ) | np.isnan(n_tok)
-    is_ident = pdf["rec_type"].to_numpy() == "IDENT"
-
-    open_frags: list[OpenFragState] = list(state or [])
-    out, state_out, nk = _fragment_loop(
-        doc_id, ts_us, n_tok, noise_arr, is_ident, open_frags, next_k, params
-    )
-    frag_ids[:] = out
-    return frag_ids, state_out, nk
-
-
 def _fragment_loop(
     doc_id, ts_us, n_tok, noise_arr, is_ident, open_frags, next_k, params
 ):

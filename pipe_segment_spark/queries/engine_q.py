@@ -11,6 +11,8 @@ enforced in pytest against the independent pure-Python oracle
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -114,105 +116,60 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_segmenter_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Structured Streaming segmenter end-to-end: feed the sf-derived
-    stream through applyInPandasWithState (watermark day-closing) into the
-    exactly-once sink via availableNow, return the drained output. Output
-    equals the batch engine on closed days (tests/test_streaming.py)."""
-    import tempfile
+_STREAM_COLS = (
+    "kind", "doc_id", "timestamp", "msgid", "frag_id", "seg_id", "date",
+)
 
-    from pipe_segment_spark.streaming.segmenter_stream import (
-        INPUT_SCHEMA_DDL,
-        stream_segment,
-    )
+
+def _drain(spark: SparkSession, tmp: str, transform) -> DataFrame:
+    """Run ``transform`` over the record stream watching ``{tmp}/in`` into
+    the exactly-once sink ``{tmp}/out`` via availableNow; returns the
+    drained sink. Re-running on the same ``tmp`` resumes from its
+    checkpoint."""
+    from pipe_segment_spark.streaming.segmenter_stream import INPUT_SCHEMA_DDL
     from pipe_segment_spark.streaming.sink import idempotent_batch_writer, read_sink
 
-    tmp = tempfile.mkdtemp(prefix="seg_stream_q_")
     in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-    token_stream(spark, sf_dir).coalesce(4).write.mode("overwrite").parquet(in_dir)
     q = (
         spark.readStream.schema(INPUT_SCHEMA_DDL)
+        .option("recursiveFileLookup", "true")
         .parquet(in_dir)
-        .transform(lambda df: stream_segment(df, DEFAULT_PARAMS))
+        .transform(transform)
         .writeStream.foreachBatch(idempotent_batch_writer(out_dir))
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination(600)
-    return read_sink(spark, out_dir).select(
-        "kind", "doc_id", "timestamp", "msgid", "frag_id", "seg_id", "date"
-    )
+    return read_sink(spark, out_dir)
 
 
-def q_segmenter_streaming_dayclose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The day_close streaming mode end-to-end: raw records buffer per
-    (key, day) and each day replays the exact batch kernel at watermark
-    close (segmenter_stream.make_day_close_segmenter). Drained output is
-    byte-identical to the batch engine — same recursive-CTE oracle as
-    segmenter_streaming. Cross-microbatch intra-day disorder equality is
-    additionally pinned in tests/test_streaming.py."""
+def _stream_input(spark: SparkSession, sf_dir: str, prefix: str) -> str:
+    """A fresh ``_drain`` directory whose watched input holds the
+    sf-derived token stream as one feed."""
     import tempfile
 
-    from pipe_segment_spark.streaming.segmenter_stream import (
-        INPUT_SCHEMA_DDL,
-        stream_segment,
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    token_stream(spark, sf_dir).coalesce(4).write.mode("overwrite").parquet(
+        f"{tmp}/in"
     )
-    from pipe_segment_spark.streaming.sink import idempotent_batch_writer, read_sink
-
-    tmp = tempfile.mkdtemp(prefix="seg_stream_dc_q_")
-    in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-    token_stream(spark, sf_dir).coalesce(4).write.mode("overwrite").parquet(in_dir)
-    q = (
-        spark.readStream.schema(INPUT_SCHEMA_DDL)
-        .parquet(in_dir)
-        .transform(
-            lambda df: stream_segment(df, DEFAULT_PARAMS, mode="day_close")
-        )
-        .writeStream.foreachBatch(idempotent_batch_writer(out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    return read_sink(spark, out_dir).select(
-        "kind", "doc_id", "timestamp", "msgid", "frag_id", "seg_id", "date"
-    )
+    return tmp
 
 
-def q_segmenter_streaming_sortedprefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sorted_prefix streaming mode end-to-end: records buffer per
-    (key, day) and the watermark-confirmed prefix releases through the
-    kernel incrementally (sorted, carried per-day state) — day_close's
-    byte-identity under arbitrary intra-day disorder with near-immediate
-    emission and out-of-order-suffix-bounded state. Same recursive-CTE
-    oracle as segmenter_streaming."""
-    import tempfile
+def q_segmenter_streaming(
+    spark: SparkSession, sf_dir: str, mode: str = "low_latency"
+) -> DataFrame:
+    """The Structured Streaming segmenter end-to-end in one stream mode:
+    feed the sf-derived stream through applyInPandasWithState (watermark
+    day-closing) into the exactly-once sink via availableNow, return the
+    drained output. Both modes equal the batch engine on closed days
+    (tests/test_streaming.py), so both share one recursive-CTE oracle."""
+    from pipe_segment_spark.streaming.segmenter_stream import stream_segment
 
-    from pipe_segment_spark.streaming.segmenter_stream import (
-        INPUT_SCHEMA_DDL,
-        stream_segment,
-    )
-    from pipe_segment_spark.streaming.sink import idempotent_batch_writer, read_sink
-
-    tmp = tempfile.mkdtemp(prefix="seg_stream_sp_q_")
-    in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-    token_stream(spark, sf_dir).coalesce(4).write.mode("overwrite").parquet(in_dir)
-    q = (
-        spark.readStream.schema(INPUT_SCHEMA_DDL)
-        .parquet(in_dir)
-        .transform(
-            lambda df: stream_segment(df, DEFAULT_PARAMS, mode="sorted_prefix")
-        )
-        .writeStream.foreachBatch(idempotent_batch_writer(out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    return read_sink(spark, out_dir).select(
-        "kind", "doc_id", "timestamp", "msgid", "frag_id", "seg_id", "date"
-    )
+    tmp = _stream_input(spark, sf_dir, f"seg_stream_{mode}_q_")
+    return _drain(
+        spark, tmp, lambda df: stream_segment(df, DEFAULT_PARAMS, mode=mode)
+    ).select(*_STREAM_COLS)
 
 
 def q_segmenter_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,14 +178,9 @@ def q_segmenter_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint between them (pipeline.py:231-242 daily reruns). The drained
     sink must equal the one-shot run byte-for-byte — same recursive-CTE
     oracle as segmenter_streaming."""
-    import os
     import tempfile
 
-    from pipe_segment_spark.streaming.segmenter_stream import (
-        INPUT_SCHEMA_DDL,
-        stream_segment,
-    )
-    from pipe_segment_spark.streaming.sink import idempotent_batch_writer, read_sink
+    from pipe_segment_spark.streaming.segmenter_stream import stream_segment
 
     records = token_stream(spark, sf_dir)
     days = sorted(
@@ -238,35 +190,22 @@ def q_segmenter_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     mid = days[len(days) // 2]
-
     tmp = tempfile.mkdtemp(prefix="seg_incr_q_")
-    in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-    os.makedirs(in_dir, exist_ok=True)
 
     def run_once():
-        q = (
-            spark.readStream.schema(INPUT_SCHEMA_DDL)
-            .option("recursiveFileLookup", "true")
-            .parquet(in_dir)
-            .transform(lambda df: stream_segment(df, DEFAULT_PARAMS))
-            .writeStream.foreachBatch(idempotent_batch_writer(out_dir))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        return _drain(
+            spark, tmp, lambda df: stream_segment(df, DEFAULT_PARAMS)
         )
-        q.awaitTermination(600)
 
     records.where(F.to_date("timestamp") <= F.lit(str(mid))).coalesce(
         2
-    ).write.mode("overwrite").parquet(f"{in_dir}/feed_0")
+    ).write.mode("overwrite").parquet(f"{tmp}/in/feed_0")
     run_once()  # first installment, engine stops
     records.where(F.to_date("timestamp") > F.lit(str(mid))).coalesce(
         2
-    ).write.mode("overwrite").parquet(f"{in_dir}/feed_1")
-    run_once()  # restart from checkpoint, drain the rest
-    return read_sink(spark, out_dir).select(
-        "kind", "doc_id", "timestamp", "msgid", "frag_id", "seg_id", "date"
-    )
+    ).write.mode("overwrite").parquet(f"{tmp}/in/feed_1")
+    # restart from checkpoint, drain the rest
+    return run_once().select(*_STREAM_COLS)
 
 
 def _identity_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,43 +228,23 @@ def q_stream_identity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT-joined against the slowly-changing identity lookup INSIDE each
     microbatch (Spark re-plans stream-static joins per batch), drained via
     availableNow into the exactly-once sink."""
-    import tempfile
-
     from pipe_segment_spark.streaming.identity_join import join_identity_static
-    from pipe_segment_spark.streaming.segmenter_stream import (
-        INPUT_SCHEMA_DDL,
-        stream_segment,
-    )
-    from pipe_segment_spark.streaming.sink import idempotent_batch_writer, read_sink
+    from pipe_segment_spark.streaming.segmenter_stream import stream_segment
 
+    cols = (
+        "doc_id", "timestamp", "msgid", "frag_id",
+        "ident_since", "shipname", "callsign",
+    )
     ident = _identity_lookup(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="seg_ijoin_q_")
-    in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
-    token_stream(spark, sf_dir).coalesce(4).write.mode("overwrite").parquet(in_dir)
+    tmp = _stream_input(spark, sf_dir, "seg_ijoin_q_")
 
     def joined(df: DataFrame) -> DataFrame:
         tagged = stream_segment(df, DEFAULT_PARAMS).where(
             F.col("kind") == "tagged"
         )
-        return join_identity_static(tagged, ident).select(
-            "doc_id", "timestamp", "msgid", "frag_id",
-            "ident_since", "shipname", "callsign",
-        )
+        return join_identity_static(tagged, ident).select(*cols)
 
-    q = (
-        spark.readStream.schema(INPUT_SCHEMA_DDL)
-        .parquet(in_dir)
-        .transform(joined)
-        .writeStream.foreachBatch(idempotent_batch_writer(out_dir))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(600)
-    return read_sink(spark, out_dir).select(
-        "doc_id", "timestamp", "msgid", "frag_id",
-        "ident_since", "shipname", "callsign",
-    )
+    return _drain(spark, tmp, joined).select(*cols)
 
 
 QUERIES = {
@@ -333,8 +252,9 @@ QUERIES = {
     "segmenter_full_fragments": q_segmenter_full_fragments,
     "segmenter_full_tagged": q_segmenter_full_tagged,
     "segmenter_streaming": q_segmenter_streaming,
-    "segmenter_streaming_dayclose": q_segmenter_streaming_dayclose,
-    "segmenter_streaming_sorted_prefix": q_segmenter_streaming_sortedprefix,
+    "segmenter_streaming_sorted_prefix": partial(
+        q_segmenter_streaming, mode="sorted_prefix"
+    ),
     "segmenter_incremental": q_segmenter_incremental,
     "stream_identity_join": q_stream_identity_join,
     "multimodal_features": q_multimodal_features,
@@ -356,7 +276,6 @@ ORACLES: dict[str, str] = {
     "segmenter_full_fragments": oracle_full_fragments(DEFAULT_PARAMS),
     "segmenter_full_tagged": oracle_full_tagged(DEFAULT_PARAMS),
     "segmenter_streaming": oracle_streaming(DEFAULT_PARAMS),
-    "segmenter_streaming_dayclose": oracle_streaming(DEFAULT_PARAMS),
     "segmenter_streaming_sorted_prefix": oracle_streaming(DEFAULT_PARAMS),
     "segmenter_incremental": oracle_streaming(DEFAULT_PARAMS),
     "stream_identity_join": oracle_stream_identity_join(DEFAULT_PARAMS),

@@ -6,34 +6,37 @@ read_fragments.py). Here it's native: a keyed ``applyInPandasWithState``
 stateful operator with event-time watermarks.
 
 Per key (doc_id), GroupState carries:
-  - open fragments (the multi-open fragmenter state, kernel.OpenFragState)
+  - open fragments + next fragment counter per day (kernel.OpenFragState)
   - per-day fragment summaries not yet segment-assigned
   - open segments (seg_id -> last fragment boundary) for cross-day matching
-  - next fragment counter per day
+  - ``sorted_prefix`` only: the buffered out-of-order record suffix
 
-Emission contract (append mode), two operating modes:
-  - ``low_latency`` (default): tagged records emit immediately
-    (kind='tagged', frag_id assigned in the arriving microbatch); when the
-    watermark passes the end of a day, that day's fragments run the greedy
-    matcher and segmap rows emit (kind='segmap'). Byte-identical to the
-    batch engine for per-day in-order arrival; an in-watermark record that
-    arrives AFTER later same-day records scores 0 against fragments it
-    precedes (0<=hours gate) and starts a new fragment.
-  - ``day_close``: raw records buffer per (key, day); the whole day replays
-    the batch kernel (6-key sort -> fragmenter -> greedy merge) when the
-    watermark closes it. Byte-identical to the batch engine under ARBITRARY
-    intra-day disorder, at day-close emission latency.
+Both modes run released records through ONE per-day run (``_run_sorted``:
+6-key sort -> ``_fragment_loop`` with carried per-day state ->
+``_merge_pending`` boundary summaries -> tagged frame) and close a day's
+summaries through the greedy matcher (kind='segmap') once the watermark
+passes it. They differ only in the release cut:
+  - ``low_latency`` (default): the whole arriving microbatch releases, so
+    tagged rows emit immediately. Byte-identical to the batch engine for
+    per-day in-order arrival; an in-watermark record that arrives AFTER
+    later same-day records scores 0 against fragments it precedes
+    (0<=hours gate) and starts a new fragment.
+  - ``sorted_prefix``: records buffer per (key, day) and only those strictly
+    below the watermark release. Byte-identical to the batch engine under
+    ARBITRARY intra-day disorder, at per-watermark-advance emission latency.
   - late records older than the watermark are dropped by Spark upstream
     (reference analog: cross-day late data starts a new segment / next run)
 
-State is serialized as JSON in a single string column — small (O(open
-fragments + open segments) per key, bounded by max_open_fragments).
+State is serialized as JSON in a single string column — O(open fragments +
+open segments) per key (bounded by max_open_fragments), plus the
+out-of-order suffix in ``sorted_prefix``.
 """
 
 from __future__ import annotations
 
 import json
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -50,14 +53,15 @@ from pyspark.sql.types import (
 
 from pipe_segment_spark.config import DEFAULT_PARAMS, SegmenterParams
 from pipe_segment_spark.operators.kernel import (
-    MICROS_PER_HOUR,
     OpenFragState,
-    fragment_group,
+    _fragment_loop,
     greedy_merge,
     sort_group,
 )
 
 US_PER_DAY = 86_400_000_000
+
+STREAM_MODES = ("low_latency", "sorted_prefix")
 
 # canonical input-stream schema (BASELINE.json input_hint shape)
 INPUT_SCHEMA_DDL = (
@@ -84,7 +88,7 @@ OUTPUT_SCHEMA = StructType(
 STATE_SCHEMA = StructType([StructField("js", StringType())])
 
 
-def _encode_state(frag_days, open_segs, pending_frags, buf=None) -> tuple:
+def _encode_state(frag_days, open_segs, pending_frags, buf) -> tuple:
     """frag_days: {day_us(int) -> (open_frags list, next_k)} — per-day
     fragmenter state, so late-but-in-watermark records for an earlier day
     can never clobber a newer day's open fragments (each day's state machine
@@ -105,7 +109,7 @@ def _encode_state(frag_days, open_segs, pending_frags, buf=None) -> tuple:
         "os": open_segs,
         "pf": pending_frags,
     }
-    if buf is not None:
+    if buf:
         d["buf"] = {str(k): v for k, v in buf.items()}
     return (json.dumps(d),)
 
@@ -184,7 +188,6 @@ def _merge_pending(pending, fid_m, t_m, nt_m, day_m, mid_m):
     not a '' coalesce, which would tie NULL against ''."""
     if len(fid_m) == 0:
         return
-    import numpy as np
 
     # pure-numpy group first/last (processed order == positional min/max
     # index, exactly what a groupby(sort=False) first/last computes) —
@@ -242,40 +245,83 @@ def _merge_pending(pending, fid_m, t_m, nt_m, day_m, mid_m):
 _BUF_COLS = ("t", "nt", "msgid", "rec", "hp", "src", "iv")
 
 
-def _release_day(doc_id, day_us, rel_cols, frag_days, pending, params):
-    """Run ONE day's released columnar slice through the kernel with carried
-    (open-fragments, counter) state: 6-key sort -> _fragment_loop ->
-    boundary-summary merge into ``pending``. Returns the tagged output
-    frame. Shared by the sorted_prefix applyInPandasWithState mode and the
-    transformWithState variant (segmenter_tws.py) — the release semantics
-    (and therefore the batch byte-identity argument) are identical."""
-    import numpy as np
+def _has_payload(tokens) -> np.ndarray:
+    """The batch kernel's payload rule: a null OR EMPTY token array is
+    noise."""
+    return np.fromiter(
+        (t is not None and len(t) > 0 for t in tokens),
+        dtype=bool,
+        count=len(tokens),
+    )
 
-    from pipe_segment_spark.operators.kernel import _fragment_loop
 
-    pdf = _sorted_pdf_from_cols(doc_id, rel_cols)
-    ts_us = pdf["t_us"].to_numpy("int64")
+def _run_sorted(doc_id, pdf, frag_days, pending, params):
+    """The per-day run both modes release through. ``pdf`` is one key's
+    released records in ``sort_group`` order with a ``has_payload`` column;
+    each day's slice runs ``_fragment_loop`` with that day's carried
+    (open-fragments, counter) state, positional rows with a frag_id merge
+    into the ``pending`` summaries, and the tagged output frame is
+    returned."""
+    ts_us = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
+    day_us = (ts_us // US_PER_DAY) * US_PER_DAY
     n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
     noise = ~pdf["has_payload"].to_numpy(dtype=bool) | np.isnan(n_tok)
-    is_ident = pdf["rec_type"].to_numpy() == "IDENT"
-    of, nk = frag_days.get(day_us, ([], 1))
-    frag_ids, of, nk = _fragment_loop(
-        doc_id, ts_us, n_tok, noise, is_ident, of, nk, params
-    )
-    frag_days[day_us] = (of, nk)
+    is_ident = pdf["rec_type"].to_numpy(dtype=object) == "IDENT"
+    frag_ids: list = []
+    # timestamp-sorted, so every day is one contiguous slice
+    cuts = [0, *(np.flatnonzero(np.diff(day_us)) + 1).tolist(), len(ts_us)]
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        day = int(day_us[lo])
+        of, nk = frag_days.get(day, ([], 1))
+        ids, of, nk = _fragment_loop(
+            doc_id,
+            ts_us[lo:hi],
+            n_tok[lo:hi],
+            noise[lo:hi],
+            is_ident[lo:hi],
+            of,
+            nk,
+            params,
+        )
+        frag_days[day] = (of, nk)
+        frag_ids.extend(ids)
     fid_arr = np.array(frag_ids, dtype=object)
-    pos = np.not_equal(fid_arr, None) & (
-        pdf["rec_type"].to_numpy(dtype=object) != "IDENT"
-    )
+    pos = np.not_equal(fid_arr, None) & ~is_ident
     _merge_pending(
         pending,
         fid_arr[pos],
         ts_us[pos],
         n_tok[pos].astype("int64"),
-        np.full(int(pos.sum()), day_us, dtype="int64"),
+        day_us[pos],
         pdf["msgid"].to_numpy(dtype=object)[pos],
     )
     return _tagged_frame(doc_id, pdf, fid_arr)
+
+
+def _release_below(doc_id, buf, frag_days, pending, cut_us, params):
+    """sorted_prefix's release cut: the buffered records strictly below
+    ``cut_us`` leave the buffer through ``_run_sorted``, one day at a time;
+    the rest stay buffered. Returns the tagged frames."""
+    tagged = []
+    for day_us in sorted(buf):
+        cols = buf[day_us]
+        rel = np.asarray(cols["t"], dtype="int64") < cut_us
+        if not rel.any():
+            continue
+        if rel.all():
+            rel_cols = buf.pop(day_us)
+        else:
+            rel_cols = {
+                c: np.asarray(cols[c], dtype=object)[rel].tolist()
+                for c in _BUF_COLS
+            }
+            buf[day_us] = {
+                c: np.asarray(cols[c], dtype=object)[~rel].tolist()
+                for c in _BUF_COLS
+            }
+        pdf = _sorted_pdf_from_cols(doc_id, rel_cols)
+        tagged.append(_run_sorted(doc_id, pdf, frag_days, pending, params))
+    return tagged
 
 
 def _consume_seeds(batch, open_segs):
@@ -295,20 +341,12 @@ def _consume_seeds(batch, open_segs):
     return batch
 
 
-def _append_to_buffer(buf, batch):
-    """Columnar per-day append of one microbatch into the keyed buffer.
-    The payload test matches the batch kernel's noise rule exactly: a null
-    OR EMPTY token array is noise (fragment_group)."""
-    import numpy as np
 
+def _append_to_buffer(buf, batch):
+    """Columnar per-day append of one microbatch into the keyed buffer."""
     ts_us_all = batch["timestamp"].to_numpy("datetime64[us]").astype("int64")
     day_us_all = (ts_us_all // US_PER_DAY) * US_PER_DAY
-    tokens_np = batch["tokens"].to_numpy()
-    hp = np.fromiter(
-        (t is not None and len(t) > 0 for t in tokens_np),
-        dtype=bool,
-        count=len(batch),
-    )
+    hp = _has_payload(batch["tokens"].to_numpy())
     nt_f = batch["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
     nt_obj = np.array(
         [None if v != v else int(v) for v in nt_f.tolist()], dtype=object
@@ -340,11 +378,11 @@ def _sorted_pdf_from_cols(doc_id, cols):
     """Columnar buffer slice -> 6-key-sorted pandas frame (full sort
     identity with the batch engine: source and ident_value are tie keys in
     sort_group)."""
-    import numpy as np
-
     pdf = pd.DataFrame(
         {
-            "t_us": np.asarray(cols["t"], dtype="int64"),
+            "timestamp": pd.to_datetime(
+                np.asarray(cols["t"], dtype="int64"), unit="us"
+            ),
             "n_tok": pd.Series(cols["nt"], dtype=object),
             "msgid": pd.Series(cols["msgid"], dtype=object),
             "rec_type": pd.Series(cols["rec"], dtype=object),
@@ -355,14 +393,11 @@ def _sorted_pdf_from_cols(doc_id, cols):
         copy=False,
     )
     pdf["doc_id"] = doc_id
-    pdf["timestamp"] = pd.to_datetime(pdf["t_us"], unit="us")
     return sort_group(pdf)
 
 
 def _tagged_frame(doc_id, pdf, fid_arr):
     """Columnar tagged-record output frame in OUTPUT_SCHEMA order."""
-    import numpy as np
-
     n = len(pdf)
     none_col = np.full(n, None, dtype=object)
     return pd.DataFrame(
@@ -383,289 +418,24 @@ def _tagged_frame(doc_id, pdf, fid_arr):
     )
 
 
-def make_stateful_segmenter(params: SegmenterParams = DEFAULT_PARAMS):
+def make_stateful_segmenter(
+    params: SegmenterParams = DEFAULT_PARAMS, mode: str = "low_latency"
+):
     """Returns the (key, pdf_iter, state) -> iter[pdf] function for
-    applyInPandasWithState."""
+    applyInPandasWithState in one of ``STREAM_MODES``.
 
-    def close_days(doc_id, open_segs, pending_frags, up_to_day_us):
-        return _close_pending_days(
-            doc_id, open_segs, pending_frags, up_to_day_us, params
-        )
-
-    def fn(key, pdf_iter, state: GroupState):
-        import numpy as np
-
-        doc_id = key[0]
-        if state.exists:
-            frag_days, open_segs, pending, _ = _decode_state(state.get)
-        else:
-            frag_days, open_segs, pending = {}, {}, []
-
-        rows_out = []
-
-        if state.hasTimedOut:
-            # watermark passed: close every pending day
-            out, open_segs, pending = close_days(
-                doc_id, open_segs, pending, float("inf")
-            )
-            rows_out.extend(out)
-            state.update(_encode_state(frag_days, open_segs, pending))
-        else:
-            batch = pd.concat(list(pdf_iter), ignore_index=True)
-            # state bootstrap (reference ReadFragments, read_fragments.py:12-99)
-            batch = _consume_seeds(batch, open_segs)
-            if len(batch):
-                batch = sort_group(batch)
-                ts_us_all = (
-                    batch["timestamp"].to_numpy("datetime64[us]").astype("int64")
-                )
-                day_us_all = (ts_us_all // US_PER_DAY) * US_PER_DAY
-                # fragmenter state is per (doc_id, day), carried in a
-                # day-keyed dict: a late-but-in-watermark record for an
-                # earlier day continues THAT day's state machine and cannot
-                # reset a newer day's open fragments / frag counter
-                frag_ids: list = []
-                for day in pd.unique(day_us_all):
-                    mask = day_us_all == day
-                    of, nk = frag_days.get(int(day), ([], 1))
-                    ids, of, nk = fragment_group(batch.loc[mask], params, of, nk)
-                    frag_days[int(day)] = (of, nk)
-                    frag_ids.extend(ids)
-                # tagged records out — columnar (no per-row Python loop)
-                n = len(batch)
-                fid_arr = np.array(frag_ids, dtype=object)
-                none_col = np.full(n, None, dtype=object)
-                rows_tagged = pd.DataFrame(
-                    {
-                        "kind": np.full(n, "tagged", dtype=object),
-                        "doc_id": np.full(n, doc_id, dtype=object),
-                        "timestamp": batch["timestamp"].to_numpy(),
-                        "msgid": batch["msgid"].to_numpy(dtype=object),
-                        "n_tok": pd.array(batch["n_tok"], dtype="Int32"),
-                        "frag_id": fid_arr,
-                        "seg_id": none_col,
-                        "date": none_col,
-                        "msg_count": pd.array([None] * n, dtype="Int64"),
-                        "first_us": pd.array([None] * n, dtype="Int64"),
-                        "last_us": pd.array([None] * n, dtype="Int64"),
-                    },
-                    copy=False,
-                )
-                yield rows_tagged
-                # pending fragment-summary updates: groupby over POS rows
-                # with a frag_id — O(fragments) python work, not O(records).
-                # Min/max-merged against stored boundaries so a late-but-in-
-                # watermark record that precedes the fragment's current
-                # first record moves first_us down without regressing
-                # last_us (summary equals a one-shot sorted run's).
-                pos_mask = np.not_equal(fid_arr, None) & (
-                    batch["rec_type"].to_numpy() != "IDENT"
-                )
-                _merge_pending(
-                    pending,
-                    fid_arr[pos_mask],
-                    ts_us_all[pos_mask],
-                    batch["n_tok"].to_numpy()[pos_mask].astype("int64"),
-                    day_us_all[pos_mask],
-                    batch["msgid"].to_numpy(dtype=object)[pos_mask],
-                )
-
-            # close days that the watermark has fully passed
-            wm_ms = state.getCurrentWatermarkMs()
-            if wm_ms > 0:
-                closed_day_us = (wm_ms * 1000 // US_PER_DAY) * US_PER_DAY
-                out, open_segs, pending = close_days(
-                    doc_id, open_segs, pending, closed_day_us
-                )
-                rows_out.extend(out)
-                # fragmenter state for closed days can never be touched
-                # again (records older than the watermark are dropped
-                # upstream) — prune it so state stays O(open days)
-                frag_days = {
-                    d: v for d, v in frag_days.items() if d >= closed_day_us
-                }
-
-            state.update(_encode_state(frag_days, open_segs, pending))
-            if pending:
-                next_close = min(f["day_us"] for f in pending) + US_PER_DAY
-                state.setTimeoutTimestamp(max(next_close // 1000, wm_ms + 1))
-
-        if rows_out:
-            yield pd.DataFrame(rows_out)
-
-    return fn
-
-
-def make_day_close_segmenter(params: SegmenterParams = DEFAULT_PARAMS):
-    """Day-buffered variant: per (doc_id, day) the RAW records are buffered
-    in keyed state and the whole day runs through the batch kernel (sort ->
-    fragment -> summaries -> greedy merge) when the watermark closes the
-    day. Output (tagged + segmap) is byte-identical to the one-shot batch
-    engine under ARBITRARY intra-day disorder across microbatches — the
-    reference's daily-scheduled batch semantics
-    (pipeline.py:231-242 runs whole days at once over the 19-key sort,
-    transform/fragment.py:115-140). Trade-off vs the low-latency mode:
-    tagged rows emit at day close (not per microbatch) and state is
-    O(records per open day per key) instead of O(open fragments)."""
-
-    def close_buffered_days(doc_id, buf, open_segs, up_to_day_us):
-        import numpy as np
-
-        from pipe_segment_spark.operators.kernel import _fragment_loop
-
-        rows_out = []
-        tagged_dfs = []
-        for day_us in sorted(d for d in list(buf) if d < up_to_day_us):
-            cols = buf.pop(day_us)
-            pdf = _sorted_pdf_from_cols(doc_id, cols)
-            ts_us = pdf["t_us"].to_numpy("int64")
-            n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
-            noise = ~pdf["has_payload"].to_numpy(dtype=bool) | np.isnan(n_tok)
-            is_ident = pdf["rec_type"].to_numpy() == "IDENT"
-
-            frag_ids, _frags, _nk = _fragment_loop(
-                doc_id, ts_us, n_tok, noise, is_ident, [], 1, params
-            )
-            fid_arr = np.array(frag_ids, dtype=object)
-            tagged_dfs.append(_tagged_frame(doc_id, pdf, fid_arr))
-            # fragment summaries over POS rows (sorted -> first/last == min/max);
-            # NULL rec_type counts as positional (kernel + oracle semantics)
-            fmask = np.not_equal(fid_arr, None) & (
-                pdf["rec_type"].to_numpy(dtype=object) != "IDENT"
-            )
-            if not fmask.any():
-                continue
-            fr = pd.DataFrame(
-                {
-                    "frag_id": fid_arr[fmask],
-                    "t": ts_us[fmask],
-                    "nt": n_tok[fmask].astype("int64"),
-                }
-            )
-            agg = fr.groupby("frag_id", sort=True).agg(
-                first_us=("t", "first"),
-                last_us=("t", "last"),
-                first_n_tok=("nt", "first"),
-                last_n_tok=("nt", "last"),
-                msg_count=("t", "size"),
-            )
-            day_frags = agg.reset_index()
-            day_frags["day_us"] = day_us
-            day_frags["date"] = pd.to_datetime(
-                day_frags["day_us"], unit="us"
-            ).dt.date
-            segmap, open_segs = greedy_merge(doc_id, day_frags, params, open_segs)
-            by_frag = day_frags.set_index("frag_id")
-            for _, r in segmap.iterrows():
-                f = by_frag.loc[r["frag_id"]]
-                rows_out.append(
-                    {
-                        "kind": "segmap",
-                        "doc_id": doc_id,
-                        "timestamp": pd.Timestamp(day_us, unit="us"),
-                        "msgid": None,
-                        "n_tok": None,
-                        "frag_id": r["frag_id"],
-                        "seg_id": r["seg_id"],
-                        "date": str(r["date"]),
-                        "msg_count": int(f["msg_count"]),
-                        "first_us": int(f["first_us"]),
-                        "last_us": int(f["last_us"]),
-                    }
-                )
-        return rows_out, tagged_dfs, open_segs
-
-    def fn(key, pdf_iter, state: GroupState):
-        doc_id = key[0]
-        if state.exists:
-            st = json.loads(state.get[0])
-            buf = {int(k): v for k, v in st["buf"].items()}
-            open_segs = {k: tuple(v) for k, v in st["os"].items()}
-        else:
-            buf, open_segs = {}, {}
-
-        rows_out, tagged_dfs = [], []
-        if state.hasTimedOut:
-            rows_out, tagged_dfs, open_segs = close_buffered_days(
-                doc_id, buf, open_segs, float("inf")
-            )
-        else:
-            batch = pd.concat(list(pdf_iter), ignore_index=True)
-            batch = _consume_seeds(batch, open_segs)
-            if len(batch):
-                _append_to_buffer(buf, batch)
-            wm_ms = state.getCurrentWatermarkMs()
-            if wm_ms > 0:
-                closed_day_us = (wm_ms * 1000 // US_PER_DAY) * US_PER_DAY
-                rows_out, tagged_dfs, open_segs = close_buffered_days(
-                    doc_id, buf, open_segs, closed_day_us
-                )
-
-        state.update(
-            (
-                json.dumps(
-                    {
-                        "buf": {str(k): v for k, v in buf.items()},
-                        "os": open_segs,
-                    }
-                ),
-            )
-        )
-        if buf:
-            wm_ms = state.getCurrentWatermarkMs()
-            next_close = min(buf) + US_PER_DAY
-            state.setTimeoutTimestamp(max(next_close // 1000, wm_ms + 1))
-        out_parts = list(tagged_dfs)
-        if rows_out:
-            out_parts.append(pd.DataFrame(rows_out))
-        for part in out_parts:
-            yield part
-
-    return fn
-
-
-def make_sorted_prefix_segmenter(params: SegmenterParams = DEFAULT_PARAMS):
-    """Watermark-sorted incremental variant: arriving records buffer per
-    (key, day); every batch, the buffered records STRICTLY BELOW the current
-    watermark are released — sorted, run through the per-day fragmenter
-    kernel with carried (open-fragments, counter) state, and their tagged
-    rows emitted immediately. The watermark contract guarantees no future
-    record can precede a released one (late rows are dropped upstream), and
-    a tied timestamp group can never straddle the release boundary (release
-    is a strict cut at the watermark, future rows are >= it), so the
+    ``sorted_prefix``: arriving records buffer per (key, day); every batch,
+    the buffered records STRICTLY BELOW the current watermark release. The
+    watermark contract guarantees no future record can precede a released
+    one (late rows are dropped upstream), and a tied timestamp group can
+    never straddle the release boundary (future rows are >= it), so the
     concatenated released blocks replay the batch kernel's one-shot sorted
-    run EXACTLY — byte-identity under arbitrary intra-day disorder, like
-    ``day_close``, but with per-watermark-advance emission latency and
-    per-key state bounded by the out-of-order suffix (records in
-    [watermark, max event time]) + open-fragment summaries, NOT by the
-    whole day."""
-
-    def release_prefix(doc_id, buf, frag_days, pending, release_below_us):
-        import numpy as np
-
-        tagged = []
-        for day_us in sorted(buf):
-            cols = buf[day_us]
-            t = np.asarray(cols["t"], dtype="int64")
-            rel = t < release_below_us
-            if not rel.any():
-                continue
-            if rel.all():
-                rel_cols = buf.pop(day_us)
-            else:
-                keep = ~rel
-                rel_cols = {
-                    c: np.asarray(cols[c], dtype=object)[rel].tolist()
-                    for c in _BUF_COLS
-                }
-                buf[day_us] = {
-                    c: np.asarray(cols[c], dtype=object)[keep].tolist()
-                    for c in _BUF_COLS
-                }
-            tagged.append(
-                _release_day(doc_id, day_us, rel_cols, frag_days, pending, params)
-            )
-        return tagged
+    run EXACTLY, with per-key state bounded by the out-of-order suffix
+    (records in [watermark, max event time]) + open-fragment summaries.
+    ``low_latency`` releases the whole arriving batch instead."""
+    if mode not in STREAM_MODES:
+        raise ValueError(f"unknown stream mode {mode!r}")
+    buffered = mode == "sorted_prefix"
 
     def fn(key, pdf_iter, state: GroupState):
         doc_id = key[0]
@@ -673,59 +443,58 @@ def make_sorted_prefix_segmenter(params: SegmenterParams = DEFAULT_PARAMS):
             frag_days, open_segs, pending, buf = _decode_state(state.get)
         else:
             frag_days, open_segs, pending, buf = {}, {}, [], {}
+        wm_ms = state.getCurrentWatermarkMs()
 
-        rows_out, tagged_dfs = [], []
+        tagged = []
         if state.hasTimedOut:
-            # terminal drain (same contract as the other modes): release and
-            # close everything still held
-            tagged_dfs = release_prefix(
-                doc_id, buf, frag_days, pending, float("inf")
-            )
-            rows_out, open_segs, pending = _close_pending_days(
-                doc_id, open_segs, pending, float("inf"), params
-            )
-            frag_days = {}
-            state.update(_encode_state(frag_days, open_segs, pending, buf))
+            # terminal drain (bounded-feed contract): release and close
+            # everything the key still holds
+            release_us = close_day_us = float("inf")
         else:
             batch = pd.concat(list(pdf_iter), ignore_index=True)
+            # state bootstrap (reference ReadFragments, read_fragments.py:12-99)
             batch = _consume_seeds(batch, open_segs)
-            if len(batch):
+            if len(batch) and buffered:
                 _append_to_buffer(buf, batch)
-            wm_ms = state.getCurrentWatermarkMs()
-            if wm_ms > 0:
-                wm_us = wm_ms * 1000
-                tagged_dfs = release_prefix(
-                    doc_id, buf, frag_days, pending, wm_us
+            elif len(batch):
+                # low_latency: the whole arriving batch is the release
+                batch["has_payload"] = _has_payload(batch["tokens"])
+                tagged.append(
+                    _run_sorted(
+                        doc_id, sort_group(batch), frag_days, pending, params
+                    )
                 )
-                closed_day_us = (wm_us // US_PER_DAY) * US_PER_DAY
-                out, open_segs, pending = _close_pending_days(
-                    doc_id, open_segs, pending, closed_day_us, params
-                )
-                rows_out.extend(out)
-                frag_days = {
-                    d: v for d, v in frag_days.items() if d >= closed_day_us
-                }
-            state.update(_encode_state(frag_days, open_segs, pending, buf))
-            if pending or buf:
-                next_close = (
-                    min([f["day_us"] for f in pending] + list(buf))
-                    + US_PER_DAY
-                )
-                state.setTimeoutTimestamp(max(next_close // 1000, wm_ms + 1))
+            release_us = wm_ms * 1000 if wm_ms > 0 else None
+            close_day_us = (
+                (release_us // US_PER_DAY) * US_PER_DAY if release_us else None
+            )
 
-        for part in tagged_dfs:
-            yield part
-        if rows_out:
-            yield pd.DataFrame(rows_out)
+        segmap = []
+        if release_us is not None:
+            tagged += _release_below(
+                doc_id, buf, frag_days, pending, release_us, params
+            )
+            segmap, open_segs, pending = _close_pending_days(
+                doc_id, open_segs, pending, close_day_us, params
+            )
+            # fragmenter state for closed days can never be touched again
+            # (records older than the watermark are dropped upstream) —
+            # prune it so state stays O(open days)
+            frag_days = {
+                d: v for d, v in frag_days.items() if d >= close_day_us
+            }
+        state.update(_encode_state(frag_days, open_segs, pending, buf))
+        if pending or buf:
+            next_close = (
+                min([f["day_us"] for f in pending] + list(buf)) + US_PER_DAY
+            )
+            state.setTimeoutTimestamp(max(next_close // 1000, wm_ms + 1))
+
+        yield from tagged
+        if segmap:
+            yield pd.DataFrame(segmap)
 
     return fn
-
-
-_MODE_MAKERS = {
-    "low_latency": make_stateful_segmenter,
-    "day_close": make_day_close_segmenter,
-    "sorted_prefix": make_sorted_prefix_segmenter,
-}
 
 
 def stream_segment(
@@ -736,40 +505,22 @@ def stream_segment(
 ) -> DataFrame:
     """records stream -> union-typed output (tagged records + segmap rows).
 
-    ``mode``:
+    ``mode`` (``STREAM_MODES``; anything else raises ``ValueError``):
       - ``low_latency`` (default): tagged rows emit in the arriving
         microbatch; batch/stream byte-identity guaranteed for per-day
         in-order arrival (intra-day disorder across microbatches starts new
         fragments instead of crashing — see the 0<=hours kernel gate).
-      - ``day_close``: raw records buffer per (key, day) and the whole day
-        replays the batch kernel when the watermark closes it —
-        byte-identical to the one-shot batch engine under ARBITRARY
-        intra-day disorder, at the cost of day-close emission latency and
-        O(records per open day) state.
       - ``sorted_prefix``: buffered records release through the kernel as
         the watermark confirms them (sorted, carried per-day state) —
-        day_close's byte-identity guarantee with near-low_latency emission
-        and state bounded by the out-of-order suffix, not the day.
-      - ``tws_sorted_prefix``: sorted_prefix semantics on the Spark 4
-        transformWithState operator (segmenter_tws.py) — the record buffer
-        is an append-only RocksDB ListState, so per-batch state I/O is
-        O(arriving batch + released suffix) instead of O(whole buffer).
+        byte-identical to the one-shot batch engine under ARBITRARY
+        intra-day disorder, with state bounded by the out-of-order suffix.
 
-    Event-time timeout semantics (all modes): a fired timeout DRAINS all
+    Event-time timeout semantics (both modes): a fired timeout DRAINS all
     held state (close-everything), matching the batch engine at end of a
     bounded feed. Continuous deployments should size ``watermark`` to the
     feed's real disorder so day closes happen on the data path.
     """
-    if mode == "tws_sorted_prefix":
-        from pipe_segment_spark.streaming.segmenter_tws import (
-            transform_with_state_segmenter,
-        )
-
-        return transform_with_state_segmenter(records_stream, params, watermark)
-    try:
-        fn = _MODE_MAKERS[mode](params)
-    except KeyError:
-        raise ValueError(f"unknown stream mode {mode!r}") from None
+    fn = make_stateful_segmenter(params, mode)
     return (
         records_stream.withWatermark("timestamp", watermark)
         .groupBy("doc_id")

@@ -23,18 +23,15 @@ def idempotent_batch_writer(out_dir: str):
     partition overwrite."""
 
     def write(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # per-write option, not the session conf: streams sharing a
+        # session must not race on a global setting
+        (
+            df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(out_dir)
+        )
 
     return write
 

@@ -10,7 +10,7 @@ from pipe_segment_spark.session import build_session  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = build_session(app_name="pipe-segment-spark-tests", cores=8)
+    s = build_session(app_name="pipe-segment-spark-tests")
     yield s
     s.stop()
 

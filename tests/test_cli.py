@@ -77,12 +77,11 @@ def test_job_arg_probes():
 
 
 def test_stream_mode_flag():
-    """--stream-mode surfaces all four modes and rejects unknown ones
+    """--stream-mode surfaces both modes and rejects unknown ones
     (ADVICE r03 item #3: the modes must be reachable from the CLI)."""
     import jobs.run_segment as job
 
-    for mode in ("low_latency", "day_close", "sorted_prefix",
-                 "tws_sorted_prefix"):
+    for mode in ("low_latency", "sorted_prefix"):
         args = job.parse_args(
             ["--input", "i", "--output", "o", "--mode", "stream",
              "--stream-mode", mode]
@@ -94,5 +93,5 @@ def test_stream_mode_flag():
     )
     with pytest.raises(SystemExit):
         job.parse_args(
-            ["--input", "i", "--output", "o", "--stream-mode", "dayclose"]
+            ["--input", "i", "--output", "o", "--stream-mode", "buffered"]
         )

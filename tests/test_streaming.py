@@ -356,14 +356,13 @@ def test_fragment_loop_carried_state_earlier_timestamp():
     assert ids[0] is not None and ids[0] != "f1"  # new fragment, no crash
 
 
-@pytest.mark.parametrize("mode", ["day_close", "sorted_prefix"])
+@pytest.mark.parametrize("mode", ["sorted_prefix"])
 def test_buffered_modes_intra_day_disorder_equals_batch(spark, tmp_path, mode):
-    """day_close + sorted_prefix modes: the same day's records split ACROSS
-    microbatches in shuffled order must produce output byte-identical to the
-    one-shot batch engine (reference daily-batch semantics: whole days run
-    through the 19-key sort at once — VERDICT r02 ask #7; sorted_prefix
-    gives the same guarantee with watermark-released incremental kernel
-    runs)."""
+    """sorted_prefix mode: the same day's records split ACROSS microbatches
+    in shuffled order must produce output byte-identical to the one-shot
+    batch engine (reference daily-batch semantics: whole days run through
+    the 19-key sort at once — VERDICT r02 ask #7; sorted_prefix gives that
+    guarantee with watermark-released incremental kernel runs)."""
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1)
@@ -450,12 +449,11 @@ def test_buffered_modes_intra_day_disorder_equals_batch(spark, tmp_path, mode):
     assert got_tagged["i0"] == exp_tagged["i0"]
 
 
-@pytest.mark.parametrize("mode", ["day_close", "sorted_prefix"])
+@pytest.mark.parametrize("mode", ["low_latency", "sorted_prefix"])
 def test_buffered_modes_empty_token_array_is_noise(spark, tmp_path, mode):
     """A record with an EMPTY (non-null) token array is noise in the batch
-    kernel (fragment_group: len==0 -> noise). Buffered-mode ingestion must
-    apply the same payload rule — tokens=[] may not open or extend a
-    fragment."""
+    kernel (len==0 -> noise). Both stream modes' ingestion must apply the
+    same payload rule — tokens=[] may not open or extend a fragment."""
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1)
@@ -551,10 +549,10 @@ def test_sorted_prefix_state_bounded_by_suffix():
     from pipe_segment_spark.operators.kernel import _fragment_loop
     from pipe_segment_spark.streaming.segmenter_stream import (
         _decode_state,
-        make_sorted_prefix_segmenter,
+        make_stateful_segmenter,
     )
 
-    fn = make_sorted_prefix_segmenter(PARAMS)
+    fn = make_stateful_segmenter(PARAMS, "sorted_prefix")
     base = dt.datetime(2024, 1, 1)
     hour_us = 3_600_000_000
 
@@ -614,6 +612,90 @@ def test_sorted_prefix_state_bounded_by_suffix():
         "d1", ts, [10.0, 12.0, 14.0], [False] * 3, [False] * 3, [], 1, PARAMS
     )
     assert [all_frag["a0"], all_frag["a2"], all_frag["a3"]] == ids
+
+
+def test_modes_agree_on_in_order_feed():
+    """Both modes release through the same per-day run and differ only in
+    the release cut, so on an in-order feed (no record precedes one already
+    delivered) they emit identical tagged and segmap rows — sorted_prefix
+    just emits them later. Spark-free: drives the mode functions with a
+    fake GroupState over one watermark schedule."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from pipe_segment_spark.streaming.segmenter_stream import (
+        make_stateful_segmenter,
+    )
+
+    base = dt.datetime(2024, 1, 1)
+    rows = [
+        (
+            base + dt.timedelta(minutes=75 * i),  # distinct, spans 3+ days
+            90 if i % 11 == 0 else (i * 7) % 50,  # rate jumps: new fragments
+            f"m{i:02d}",
+            "IDENT" if i % 9 == 4 else "POS",
+            [] if i % 13 == 6 else [1, 2],  # empty token array: noise
+        )
+        for i in range(60)
+    ]
+    batches = [rows[0:7], rows[7:20], rows[20:21], rows[21:45], rows[45:]]
+
+    def frame(b):
+        return pd.DataFrame(
+            {
+                "doc_id": ["d1"] * len(b),
+                "source": ["s"] * len(b),
+                "timestamp": [r[0] for r in b],
+                "tokens": [r[4] for r in b],
+                "n_tok": [r[1] for r in b],
+                "msgid": [r[2] for r in b],
+                "rec_type": [r[3] for r in b],
+                "ident_value": [None] * len(b),
+            }
+        )
+
+    def run(mode):
+        fn = make_stateful_segmenter(PARAMS, mode)
+        st = _FakeGroupState()
+        parts = []
+        for b in batches:
+            parts += fn(("d1",), iter([frame(b)]), st)
+            # 6-hour watermark delay behind the newest delivered record
+            newest_ms = (b[-1][0] - dt.datetime(1970, 1, 1)).total_seconds()
+            st.wm_ms = int(newest_ms * 1000) - 6 * 3_600_000
+        st.hasTimedOut = True
+        parts += fn(("d1",), iter([]), st)
+        out = pd.concat(parts, ignore_index=True)
+        tagged = sorted(
+            zip(out.loc[out["kind"] == "tagged", "msgid"],
+                out.loc[out["kind"] == "tagged", "frag_id"])
+        )
+        segmap = sorted(
+            tuple(r)
+            for r in out.loc[
+                out["kind"] == "segmap",
+                ["frag_id", "seg_id", "date", "msg_count", "first_us",
+                 "last_us"],
+            ].itertuples(index=False)
+        )
+        return tagged, segmap
+
+    ll_tagged, ll_segmap = run("low_latency")
+    sp_tagged, sp_segmap = run("sorted_prefix")
+    assert len(ll_tagged) == len(rows)
+    assert len({d for _, _, d, *_ in ll_segmap}) >= 3  # several days closed
+    assert len({f for _, f in ll_tagged if f is not None}) > 3
+    assert ll_tagged == sp_tagged
+    assert ll_segmap == sp_segmap
+
+
+def test_stream_segment_rejects_unknown_mode():
+    from pipe_segment_spark.streaming.segmenter_stream import STREAM_MODES
+
+    assert STREAM_MODES == ("low_latency", "sorted_prefix")
+    with pytest.raises(ValueError, match="unknown stream mode"):
+        stream_segment(None, PARAMS, mode="buffered")
 
 
 def test_merge_pending_boundary_tie_breaks_on_msgid():

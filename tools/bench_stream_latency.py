@@ -3,7 +3,7 @@
 RELEASE LATENCY and PEAK STATE in the continuous small-batch regime.
 
 The availableNow drain (tools/bench_stream_modes.py) is the buffered
-modes' documented WORST case: the watermark lags one giant batch, so the
+mode's documented WORST case: the watermark lags one giant batch, so the
 whole input round-trips through keyed state. The claimed deployment
 regime for sorted_prefix — release within ~one microbatch of arrival,
 state bounded by the real disorder window — had no measurement. This tool
@@ -27,7 +27,7 @@ identically 0 — that is the built-in canary that the file->batch mapping
 holds (FileStreamSource consumes files oldest-mtime-first at one per
 trigger).
 
-Usage: python tools/bench_stream_latency.py [low_latency day_close ...]
+Usage: python tools/bench_stream_latency.py [low_latency sorted_prefix]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 """
 
@@ -39,6 +39,8 @@ import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pipe_segment_spark.streaming.segmenter_stream import STREAM_MODES  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -175,7 +177,7 @@ print(json.dumps({
     "records_per_sec": round(n / wall, 1),
     "tagged": tagged_sink, "tagged_lag_joined": stats["n"],
     "segmap": segmap,
-    # buffered modes correctly retain the final not-yet-watermark-confirmed
+    # the buffered mode correctly retains the final not-yet-watermark-confirmed
     # suffix when a LIVE (non-terminating) stream is stopped — the
     # watermark only advances with new data, so the last half-day can
     # never be confirmed. availableNow drains flush it via the terminal
@@ -204,7 +206,7 @@ def ensure_input():
 
 
 def main():
-    modes = sys.argv[1:] or ["low_latency", "day_close", "sorted_prefix"]
+    modes = sys.argv[1:] or list(STREAM_MODES)
     ensure_input()
     results = []
     for mode in modes:

@@ -1,16 +1,16 @@
 #!/usr/bin/env python
-"""Streaming-mode throughput comparison (the BENCH/BASELINE.md 3-mode
+"""Streaming-mode throughput comparison (the BENCH/BASELINE.md stream-mode
 table, reproducible): drains the SAME replicated token input through the
 segmenter in each stream mode — fresh JVM + fresh checkpoint per mode —
 and verifies output-identity (tagged + segmap counts) across modes.
 
-Usage: python tools/bench_stream_modes.py [low_latency day_close ...]
+Usage: python tools/bench_stream_modes.py [low_latency sorted_prefix]
 Env: SCALE_REPLICATION (default 256; uses bench_scaling's cached input at
 /tmp/spark_graft_scale_input_r{N}, generating it if missing),
 SPARK_GRAFT_CPUS (default 32).
 
 Protocol caveat (BENCH/BASELINE.md): availableNow drains are the buffered
-modes' WORST case — the watermark lags one microbatch, so most records
+mode's WORST case — the watermark lags one microbatch, so most records
 round-trip through keyed state before the terminal drain; continuous
 small-batch deployments release within ~one batch of arrival.
 """
@@ -23,6 +23,8 @@ import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pipe_segment_spark.streaming.segmenter_stream import STREAM_MODES  # noqa: E402
 
 REPLICATION = int(os.environ.get("SCALE_REPLICATION", "256"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -102,7 +104,7 @@ def ensure_input():
 
 
 def main():
-    modes = sys.argv[1:] or ["low_latency", "day_close", "sorted_prefix"]
+    modes = sys.argv[1:] or list(STREAM_MODES)
     ensure_input()
     results = []
     for mode in modes:
@@ -118,8 +120,8 @@ def main():
         r = json.loads(line)
         results.append(r)
         sys.stderr.write(f"{r}\n")
-    # output identity across modes (tagged always; segmap equal between the
-    # two disorder-proof modes and low_latency on the in-order feed)
+    # output identity across modes (tagged always; segmap equal because
+    # low_latency matches sorted_prefix on the in-order feed)
     tagged = {r["tagged"] for r in results}
     segmap = {r["segmap"] for r in results}
     print(json.dumps({"results": results,
