@@ -7,7 +7,6 @@ per sub-plan, and to dump .explain("formatted") for plan-diff evidence.
 
 Usage:
   python bench_extra.py queries [name ...]   # noop-time headline queries
-  python bench_extra.py flagship            # stage-by-stage flagship split
   python bench_extra.py plans OUTDIR [name ...]  # dump explain files
 """
 
@@ -59,56 +58,6 @@ def cmd_queries(names: list[str]) -> None:
     spark.stop()
 
 
-def cmd_flagship() -> None:
-    """Split the flagship pipeline into its sequential pieces; each timed
-    with a noop sink, persists mirroring run_batch_pipeline."""
-    from pyspark.storagelevel import StorageLevel
-
-    from pipe_segment_spark.config import DEFAULT_PARAMS
-    from pipe_segment_spark.operators.fragment import (
-        attach_counted_arrays,
-        fragment_base,
-        tag_fragments_narrow,
-    )
-    from pipe_segment_spark.operators.segment_map import create_segment_map
-    from pipe_segment_spark.operators.segments import create_segments
-    from pipe_segment_spark.operators.tag import tag_fragments_with_seg_id
-    from pipe_segment_spark.queries import QUERIES
-    from pipe_segment_spark.sources.token_stream import token_stream
-
-    spark = _session()
-    QUERIES["token_stream"](spark, SF_DIR).count()  # warm
-
-    steps = {}
-    records = token_stream(spark, SF_DIR)
-    steps["scan_token_stream"] = _noop(records)
-
-    narrow = tag_fragments_narrow(records, DEFAULT_PARAMS).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    steps["kernel_narrow_pass"] = _noop(narrow)
-
-    base = fragment_base(narrow).persist(StorageLevel.MEMORY_AND_DISK)
-    steps["fragment_base_agg"] = _noop(base)
-
-    segmap = create_segment_map(base, DEFAULT_PARAMS).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    steps["segmap_greedy"] = _noop(segmap)
-
-    fragments = attach_counted_arrays(base, narrow, records)
-    steps["attach_counted_arrays"] = _noop(fragments)
-
-    frags_out = tag_fragments_with_seg_id(fragments, segmap)
-    segments = create_segments(frags_out)
-    steps["create_segments_full"] = _noop(segments)
-
-    for k, v in steps.items():
-        print(f"{k}: {v:.3f}s")
-    print({"total": round(sum(steps.values()), 3), "steps": {k: round(v, 3) for k, v in steps.items()}})
-    spark.stop()
-
-
 def cmd_plans(outdir: str, names: list[str]) -> None:
     from pipe_segment_spark.queries import QUERIES
 
@@ -133,8 +82,6 @@ if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     if cmd == "queries":
         cmd_queries(sys.argv[2:])
-    elif cmd == "flagship":
-        cmd_flagship()
     elif cmd == "plans":
         cmd_plans(sys.argv[2], sys.argv[3:])
     else:

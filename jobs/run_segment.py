@@ -12,10 +12,12 @@ cli/commands/segment.py:74-116). Launch:
         --input /path/to/stream_dir --output /path/to/out \
         --mode stream --checkpoint /path/to/ckpt --watermark "1 hour"
 
-Build the zip with:  make pyfiles   (zip -r pipe_segment_spark.zip
-pipe_segment_spark). On a cluster, drop the local[*] master via normal
-spark-submit --master flags; the session builder only sets master when not
-already configured by the launcher.
+Build the zip with:  zip -qr pipe_segment_spark.zip pipe_segment_spark
+
+The session comes from ``session.build_session``: the same engine conf as
+the tests and benches. The master spark-submit sets (``--master``, or its
+``local[*]`` default) is kept; only a plain ``python`` launch gets
+``local[$SPARK_GRAFT_CPUS]``.
 """
 
 from __future__ import annotations
@@ -74,9 +76,8 @@ def parse_args(argv):
 def main(argv=None):
     args = parse_args(argv or sys.argv[1:])
 
-    from pyspark.sql import SparkSession
-
     from pipe_segment_spark.config import SegmenterParams
+    from pipe_segment_spark.session import build_session
 
     params = args.segmenter_params or SegmenterParams(
         max_gap_hours=args.max_gap_hours,
@@ -85,12 +86,7 @@ def main(argv=None):
         hours_exp=args.hours_exp,
     )
 
-    spark = (
-        SparkSession.builder.appName("pipe-segment-spark")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = build_session()
 
     if args.mode == "batch":
         from pipe_segment_spark.pipeline import run_batch_pipeline

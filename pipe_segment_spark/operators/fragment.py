@@ -1,33 +1,29 @@
-"""Fragmenter: per-(doc_id, day) stateful record->fragment assignment.
+"""Record-side Spark plumbing around the per-doc_id kernels.
 
-Spark-first architecture (vs the reference's Beam GroupByKey + per-row dicts,
-pipeline.py:211-217 + transform/fragment.py):
-
-1. ``tag_fragments_narrow``: ONE ``applyInPandas`` pass over
-   ``groupBy(doc_id)`` (per-day runs split inside the kernel) emits narrow
-   tagged rows + ``frag_id`` (nullable for noise). This is the only
-   non-Catalyst step, and the token payload never crosses it.
-2. ``fragments_from_tagged``: fragments are derived RELATIONALLY from the
-   tagged records via ``min_by``/``max_by``/explode aggregation — the
-   reference's dual tagged-output (fragment.py:149-150) becomes a pure
-   Catalyst aggregation with map-side partial aggs, no second UDF pass.
-3. ``tag_fragments``: full rows + frag_id via a shuffle-hash join of the
-   narrow map back onto the records (only when the caller needs payloads).
+- ``kernel_input``: the narrow projection that crosses into Python. The
+  heavy ``tokens`` payload never does — it is reduced to a boolean
+  ``has_payload`` JVM-side.
+- ``tag_records``: puts the token payload (and every other record column)
+  back onto the kernel's per-record frag_id/seg_id map with a shuffle-hash
+  join on (doc_id, msgid).
+- ``attach_boundary_tokens``: the first/last token payloads of fragment
+  summaries (the reference's fragment checkpoint format), joined by
+  boundary msgid.
+- ``tag_fragments``: the fragmenter alone (``assign_frag_ids`` in one
+  ``applyInPandas`` per doc_id) plus the payload join; the salted plan
+  (plans/salting.py) is checked against it. The batch segmenter itself is
+  one kernel pass, ``kernel.segment_key`` (pipeline.py).
 """
 
 from __future__ import annotations
+
+import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pipe_segment_spark.config import DEFAULT_PARAMS, SegmenterParams
-from pipe_segment_spark.operators.kernel import sort_group
-
-TAGGED_SCHEMA = (
-    "doc_id string, source string, timestamp timestamp, tokens array<int>, "
-    "n_tok int, msgid string, rec_type string, ident_value string, "
-    "dest_value string, frag_id string"
-)
+from pipe_segment_spark.operators.kernel import _run_sorted, sort_group
 
 INPUT_COLS = [
     "doc_id",
@@ -41,112 +37,62 @@ INPUT_COLS = [
     "dest_value",
 ]
 
+# the columns every kernel reads (``sort_group`` + ``_run_sorted``); the
+# narrow tagged rows are these plus frag_id
+_KERNEL_COLS = ["doc_id", "timestamp", "msgid", "n_tok", "rec_type", "source"]
 
-US_PER_DAY = 86_400_000_000
-
-# narrow projection shipped into the fragmenter UDF: the heavy ``tokens``
-# payload never crosses the Python boundary (it's reduced to a boolean
-# ``has_payload`` JVM-side and re-attached by the msgid join afterwards)
-_UDF_COLS = "doc_id timestamp msgid n_tok rec_type source has_payload".split()
-
-
-# the kernel never reads ident_value/dest_value — they stay JVM-side and
-# re-join at IDENT-row cardinality (~1/11 of records), so the per-record
-# Arrow transfer carries no string payload beyond the ids
 NARROW_TAGGED_SCHEMA = (
     "doc_id string, source string, timestamp timestamp, n_tok int, "
     "msgid string, rec_type string, frag_id string"
 )
 
 
-def assign_frag_ids(pdf, params: SegmenterParams):
-    """Kernel driver for one doc_id: deterministic sort, then per-day runs
-    with fresh fragmenter state (the reference groups by (ssvid, day),
-    pipeline.py:211-217 — day continuity is the greedy merger's job).
-    Emits the narrow tagged rows (everything but the token payload).
-
-    Columns are extracted to numpy ONCE; the per-day runs are array slices
-    (views), not pandas sub-frames — per-group pandas overhead would
-    otherwise rival the state-machine loop itself.
-    """
-    import numpy as np
-
-    from pipe_segment_spark.operators.kernel import _fragment_loop
-
-    pdf = sort_group(pdf)
-    n = len(pdf)
-    doc_id = pdf["doc_id"].iloc[0] if n else ""
-    ts_us = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
-    n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
-    noise = ~pdf["has_payload"].to_numpy(dtype=bool) | np.isnan(n_tok)
-    is_ident = pdf["rec_type"].to_numpy() == "IDENT"
-    ts_day = ts_us // US_PER_DAY
-
-    frag_ids = []
-    start = 0
-    for i in range(1, n + 1):
-        if i == n or ts_day[i] != ts_day[start]:
-            ids, _, _ = _fragment_loop(
-                doc_id,
-                ts_us[start:i],
-                n_tok[start:i],
-                noise[start:i],
-                is_ident[start:i],
-                [],
-                1,
-                params,
-            )
-            frag_ids.extend(ids)
-            start = i
-    import pandas as pd
-
-    # zero-copy column re-pack (a .copy() here costs ~3x the whole repack)
-    out = {
-        c: pdf[c].to_numpy()
-        for c in (
-            "doc_id",
-            "source",
-            "timestamp",
-            "n_tok",
-            "msgid",
-            "rec_type",
-        )
-    }
-    out["frag_id"] = frag_ids
-    return pd.DataFrame(out, copy=False)
+def _with_input_cols(records: DataFrame) -> DataFrame:
+    """``records`` projected to ``INPUT_COLS``; absent optional columns
+    read NULL."""
+    return records.select(
+        *[
+            F.col(c) if c in records.columns else F.lit(None).cast("string").alias(c)
+            for c in INPUT_COLS
+        ]
+    )
 
 
-def tag_fragments_narrow(
-    records: DataFrame, params: SegmenterParams = DEFAULT_PARAMS
-) -> DataFrame:
-    """records -> narrow tagged rows (all metadata columns + frag_id; the
-    heavy ``tokens`` payload never crosses the Python boundary — it is
-    reduced to a ``has_payload`` boolean JVM-side). One shuffle on doc_id;
-    day grouping happens inside the kernel, so there is one Arrow batch per
-    key instead of per (key, day) — ~30x less per-group overhead."""
-    cols = [c for c in INPUT_COLS if c in records.columns]
-    missing = [c for c in INPUT_COLS if c not in records.columns]
-    df = records.select(*cols)
-    for c in missing:  # optional columns default to null
-        df = df.withColumn(c, F.lit(None).cast("string"))
-
-    narrow = df.select(
-        *[c for c in _UDF_COLS if c != "has_payload"],
+def kernel_input(records: DataFrame, *extra: str) -> DataFrame:
+    """The kernel columns, ``extra`` record columns and ``has_payload``."""
+    return _with_input_cols(records).select(
+        *_KERNEL_COLS,
+        *extra,
         (
             F.col("tokens").isNotNull()
             & (F.size("tokens") > 0)
             & F.col("n_tok").isNotNull()
         ).alias("has_payload"),
     )
-    # groupBy itself hash-partitions on doc_id (the explicit co-location the
-    # north_rule asks for) — an extra repartition() would double the shuffle
-    return (
-        narrow.groupBy("doc_id")
-        .applyInPandas(
-            lambda key, pdf: assign_frag_ids(pdf, params),
-            schema=NARROW_TAGGED_SCHEMA,
-        )
-    )
+
+
+def assign_frag_ids(pdf, params: SegmenterParams):
+    """Fragmenter for one doc_id: deterministic sort, then the shared
+    per-day run with fresh state per day (the reference groups by
+    (ssvid, day), pipeline.py:211-217 — day continuity is the greedy
+    merger's job). Emits the narrow tagged rows (``NARROW_TAGGED_SCHEMA``)."""
+    pdf = sort_group(pdf)
+    doc_id = pdf["doc_id"].iat[0] if len(pdf) else ""
+    out = {c: pdf[c].to_numpy() for c in _KERNEL_COLS}
+    out["frag_id"] = _run_sorted(doc_id, pdf, {}, [], params)
+    return pd.DataFrame(out, copy=False)
+
+
+def tag_records(records: DataFrame, frag_map: DataFrame) -> DataFrame:
+    """Full records + the map's columns (frag_id, and seg_id when the map
+    has it), NULL for records the map lacks.
+
+    A shuffle-hash join on (doc_id, msgid) — never broadcast: the map has
+    one row per record, not per fragment."""
+    extra = [c for c in frag_map.columns if c not in ("doc_id", "msgid")]
+    return _with_input_cols(records).join(
+        frag_map.hint("shuffle_hash"), ["doc_id", "msgid"], "left"
+    ).select(*INPUT_COLS, *extra)
 
 
 def tag_fragments(
@@ -154,205 +100,32 @@ def tag_fragments(
     params: SegmenterParams = DEFAULT_PARAMS,
     narrow_tagged: DataFrame | None = None,
 ) -> DataFrame:
-    """records -> full records + frag_id (null = noise).
-
-    The token payload is re-attached to the kernel's narrow output by a
-    shuffle-hash join on (doc_id, msgid) — never broadcast (the map has one
-    row per record, not per fragment). Callers that don't need the payload
-    (the whole fragments/segments path) use ``tag_fragments_narrow`` and
-    skip this join entirely.
-    """
-    cols = [c for c in INPUT_COLS if c in records.columns]
-    missing = [c for c in INPUT_COLS if c not in records.columns]
-    df = records.select(*cols)
-    for c in missing:
-        df = df.withColumn(c, F.lit(None).cast("string"))
+    """records -> full records + frag_id (null = noise). ``narrow_tagged``
+    defaults to the fragmenter pass: one shuffle on doc_id (groupBy itself
+    hash-partitions — an extra repartition() would double it), day
+    grouping inside the kernel."""
     if narrow_tagged is None:
-        narrow_tagged = tag_fragments_narrow(records, params)
-    frag_map = narrow_tagged.select("doc_id", "msgid", "frag_id")
-    return df.join(
-        frag_map.hint("shuffle_hash"), ["doc_id", "msgid"], "left"
-    ).select(*INPUT_COLS, "frag_id")
-
-
-def fragment_base(tagged: DataFrame) -> DataFrame:
-    """Array-free fragment boundary summaries (ONE record-cardinality
-    aggregation, no joins): everything the greedy segment matcher needs.
-    The segments path persists THIS, not the array-joined fragments."""
-    pos = tagged.where(F.col("frag_id").isNotNull())
-    key_cols = [F.col("doc_id"), F.col("frag_id")]
-    ord_key = F.struct(F.col("timestamp"), F.col("msgid"))
-    # null-safe: the kernel (and the pure-Python oracle) treat NULL rec_type
-    # as positional; a plain != would yield NULL and silently drop such rows
-    # from msg_count / boundary aggregates
-    is_pos = ~F.col("rec_type").eqNullSafe("IDENT")
-
-    # first/last boundary payloads ride ONE min_by + ONE max_by as structs
-    # (r6; was four independent min_by/max_by aggs each re-comparing the
-    # same ordering key per row — same values, ord_key is unique within a
-    # fragment so the picks are tie-free and deterministic either way)
-    bound = F.struct(F.col("n_tok"), F.col("msgid"))
-    return (
-        pos.groupBy(*key_cols)
-        .agg(
-            F.sum(is_pos.cast("long")).alias("msg_count"),
-            F.min(F.when(is_pos, F.col("timestamp"))).alias(
-                "first_msg_timestamp"
-            ),
-            F.max(F.when(is_pos, F.col("timestamp"))).alias(
-                "last_msg_timestamp"
-            ),
-            F.min_by(F.when(is_pos, bound), F.when(is_pos, ord_key)).alias(
-                "__first"
-            ),
-            F.max_by(F.when(is_pos, bound), F.when(is_pos, ord_key)).alias(
-                "__last"
-            ),
+        narrow_tagged = kernel_input(records).groupBy("doc_id").applyInPandas(
+            lambda key, pdf: assign_frag_ids(pdf, params),
+            schema=NARROW_TAGGED_SCHEMA,
         )
-        .select(
-            *key_cols,
-            F.date_trunc("day", F.col("first_msg_timestamp")).alias(
-                "timestamp"
+    return tag_records(records, narrow_tagged.select("doc_id", "msgid", "frag_id"))
+
+
+def attach_boundary_tokens(fragments: DataFrame, records: DataFrame) -> DataFrame:
+    """Fragment summaries + ``first_tokens``/``last_tokens``: the token
+    payloads of the boundary records (reference fragment.py:24-72 keeps the
+    full first/last messages), joined on (doc_id, boundary msgid) — two
+    rows per fragment on the map side."""
+    toks = records.select("doc_id", "msgid", "tokens")
+    for end in ("first", "last"):
+        fragments = fragments.join(
+            toks.select(
+                "doc_id",
+                F.col("msgid").alias(f"{end}_msgid"),
+                F.col("tokens").alias(f"{end}_tokens"),
             ),
-            "msg_count",
-            "first_msg_timestamp",
-            "last_msg_timestamp",
-            F.col("__first.n_tok").alias("first_msg_n_tok"),
-            F.col("__last.n_tok").alias("last_msg_n_tok"),
-            F.col("__first.msgid").alias("first_msgid"),
-            F.col("__last.msgid").alias("last_msgid"),
+            ["doc_id", f"{end}_msgid"],
+            "left",
         )
-    )
-
-
-def fragments_from_tagged(
-    tagged: DataFrame,
-    records: DataFrame | None = None,
-    with_boundary_tokens: bool = False,
-) -> DataFrame:
-    """Pure-Catalyst fragment summaries from tagged records.
-
-    Replaces the reference's _fragment_record construction
-    (fragment_implementation.py:21-56): first/last boundary payloads via
-    min_by/max_by over POS rows, msg_count = POS row count, counted
-    identity/destination signatures via explode + two-level aggregation
-    (map-side partials free).
-
-    The counted-value payloads (``ident_value``/``dest_value``) never ride
-    through the Python kernel — when ``records`` is given they re-join the
-    narrow tagged stream at IDENT-row cardinality (~1/11 of records) on
-    (doc_id, msgid); without ``records`` the arrays are typed-empty.
-
-    ``with_boundary_tokens`` additionally re-attaches the boundary token
-    payloads (``first_tokens``/``last_tokens``, reference fragment.py:24-72
-    keeps full first/last messages) by joining records against the fragment
-    boundary-msgid map — 2 rows per fragment, so AQE broadcasts the map
-    side; the segments path never pays this join.
-    """
-    base = fragment_base(tagged)
-    if with_boundary_tokens:
-        assert records is not None, "boundary tokens need the records side"
-        rsel = records.select("doc_id", "msgid", "tokens")
-        first_t = rsel.join(
-            base.select(
-                "doc_id", "frag_id", F.col("first_msgid").alias("msgid")
-            ),
-            ["doc_id", "msgid"],
-        ).select("doc_id", "frag_id", F.col("tokens").alias("first_tokens"))
-        last_t = rsel.join(
-            base.select(
-                "doc_id", "frag_id", F.col("last_msgid").alias("msgid")
-            ),
-            ["doc_id", "msgid"],
-        ).select("doc_id", "frag_id", F.col("tokens").alias("last_tokens"))
-        base = base.join(first_t, ["doc_id", "frag_id"], "left").join(
-            last_t, ["doc_id", "frag_id"], "left"
-        )
-
-    if records is None:
-        return base.withColumn(
-            "identities", F.array().cast(ARR_TYPE)
-        ).withColumn("destinations", F.array().cast(ARR_TYPE))
-
-    return attach_counted_arrays(base, tagged, records)
-
-
-ARR_TYPE = "array<struct<value:string,count:bigint>>"
-
-
-def attach_counted_arrays(
-    base: DataFrame, tagged: DataFrame, records: DataFrame
-) -> DataFrame:
-    """Counted-value signatures from attached IDENT rows (reference dual
-    'identities'/'destinations' arrays, transform/fragment.py:24-72). The
-    value payload joins the tagged map at IDENT-row cardinality (~1/11 of
-    records); BOTH arrays come out of ONE fused explode + two-level
-    aggregation (r2 ran two independent groupBy chains + two joins — half
-    the shuffles for the same result, VERDICT r02 finding #3)."""
-    for c in ("ident_value", "dest_value"):
-        if c not in records.columns:
-            records = records.withColumn(c, F.lit(None).cast("string"))
-    ident_side = records.where(
-        (F.col("rec_type") == "IDENT")
-        & (F.col("ident_value").isNotNull() | F.col("dest_value").isNotNull())
-    ).select("doc_id", "msgid", "ident_value", "dest_value")
-    attached = (
-        tagged.where(F.col("frag_id").isNotNull() & (F.col("rec_type") == "IDENT"))
-        .select("doc_id", "msgid", "frag_id")
-        .join(ident_side, ["doc_id", "msgid"])
-        # one explicit exchange on the aggregation prefix: both groupBys
-        # below and the join back onto ``base`` (itself hash-partitioned by
-        # (doc_id, frag_id) from its aggregation) are satisfied by this
-        # partitioning, so the two-level counted aggregation runs
-        # exchange-free after it (guide §2.4)
-        .repartition("doc_id", "frag_id")
-    )
-
-    kv = F.explode(
-        F.array(
-            F.struct(
-                F.lit("identities").alias("kind"),
-                F.col("ident_value").alias("value"),
-            ),
-            F.struct(
-                F.lit("destinations").alias("kind"),
-                F.col("dest_value").alias("value"),
-            ),
-        )
-    ).alias("kv")
-
-    def collect_kind(kind: str, out_col: str):
-        # collect_list skips the NULLs produced by the unmatched kind
-        return F.sort_array(
-            F.collect_list(
-                F.when(
-                    F.col("kind") == kind,
-                    F.struct(F.col("value"), F.col("count").alias("count")),
-                )
-            )
-        ).alias(out_col)
-
-    arrays = (
-        attached.select("doc_id", "frag_id", kv)
-        .select("doc_id", "frag_id", "kv.kind", "kv.value")
-        .where(F.col("value").isNotNull())
-        .groupBy("doc_id", "frag_id", "kind", "value")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .groupBy("doc_id", "frag_id")
-        .agg(
-            collect_kind("identities", "identities"),
-            collect_kind("destinations", "destinations"),
-        )
-    )
-
-    return (
-        base.join(arrays, ["doc_id", "frag_id"], "left")
-        .withColumn(
-            "identities",
-            F.coalesce(F.col("identities"), F.array().cast(ARR_TYPE)),
-        )
-        .withColumn(
-            "destinations",
-            F.coalesce(F.col("destinations"), F.array().cast(ARR_TYPE)),
-        )
-    )
+    return fragments

@@ -1,10 +1,25 @@
-"""Numpy/pandas kernels for the per-key stateful inner loops.
+"""Per-doc_id kernels: the one implementation of the segmenter's
+sequential work, shared by the batch job and both stream modes.
 
 These run inside Arrow-batched ``applyInPandas`` / ``applyInPandasWithState``
 UDFs — the only places where the engine leaves Catalyst, because the
 semantics are inherently per-key sequential (the reference's gpsdio Segmenter
 inner loop, transform/fragment_implementation.py:86-122, and the greedy
 matcher, transform/create_segment_map.py:84-147, are the same).
+
+- ``sort_group``: the deterministic multi-key record order.
+- ``_run_sorted``: the per-day run — each day slice of a sorted run goes
+  through ``_fragment_loop`` with that day's carried state, and positional
+  rows fold into per-fragment boundary summaries (``_merge_pending``).
+- ``merge_segments``: the greedy cross-day fragment->segment matcher over
+  those summaries (``greedy_merge`` is its DataFrame front end).
+- ``segment_key``: the whole batch segmenter for one key — the per-day run
+  over every day, the greedy merge, the counted identity/destination
+  arrays and the per-(seg_id, day) rollup — returned as one frame tagged
+  by ``kind`` (``KERNEL_SCHEMA``).
+
+The stream modes (streaming/segmenter_stream.py) call ``_run_sorted`` on the
+records they release and ``merge_segments`` on the days they close.
 
 Per-key work is O(rows_in_group * open_fragments) with open_fragments bounded
 by ``params.max_open_fragments`` — parallelism comes from the key dimension
@@ -16,12 +31,21 @@ so pytest equality between the two is a meaningful cross-check.
 
 from __future__ import annotations
 
+import datetime
+from collections import Counter
+
 import numpy as np
 import pandas as pd
 
 from pipe_segment_spark.config import SegmenterParams
 
 MICROS_PER_HOUR = 3_600_000_000.0
+US_PER_DAY = 86_400_000_000
+_EPOCH_DAY = datetime.date(1970, 1, 1)
+
+
+def _date_of(day_us: int) -> datetime.date:
+    return _EPOCH_DAY + datetime.timedelta(days=day_us // US_PER_DAY)
 
 
 def _fmt_ts_us(us: int) -> str:
@@ -192,74 +216,328 @@ def _fragment_loop(
     return out, f_objs, next_k
 
 
+def _run_sorted(doc_id, pdf, frag_days, pending, params):
+    """The per-day run batch and both stream modes share. ``pdf`` is one
+    key's records in ``sort_group`` order with a ``has_payload`` column;
+    each day's slice runs ``_fragment_loop`` with that day's carried
+    (open-fragments, counter) state from ``frag_days`` (fresh when absent),
+    and positional rows with a frag_id merge into the ``pending`` boundary
+    summaries. Returns the frag_id of every row (None = noise or an
+    unattached identity record) as an object array."""
+    ts_us = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
+    day_us = (ts_us // US_PER_DAY) * US_PER_DAY
+    n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
+    noise = ~pdf["has_payload"].to_numpy(dtype=bool) | np.isnan(n_tok)
+    is_ident = pdf["rec_type"].to_numpy(dtype=object) == "IDENT"
+    frag_ids: list = []
+    # timestamp-sorted, so every day is one contiguous slice
+    cuts = [0, *(np.flatnonzero(np.diff(day_us)) + 1).tolist(), len(ts_us)]
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        day = int(day_us[lo])
+        of, nk = frag_days.get(day, ([], 1))
+        ids, of, nk = _fragment_loop(
+            doc_id,
+            ts_us[lo:hi],
+            n_tok[lo:hi],
+            noise[lo:hi],
+            is_ident[lo:hi],
+            of,
+            nk,
+            params,
+        )
+        frag_days[day] = (of, nk)
+        frag_ids.extend(ids)
+    fid_arr = np.array(frag_ids, dtype=object)
+    pos = np.not_equal(fid_arr, None) & ~is_ident
+    _merge_pending(
+        pending,
+        fid_arr[pos],
+        ts_us[pos],
+        n_tok[pos].astype("int64"),
+        day_us[pos],
+        pdf["msgid"].to_numpy(dtype=object)[pos],
+    )
+    return fid_arr
+
+
+def _merge_pending(pending, fid_m, t_m, nt_m, day_m, mid_m):
+    """Min/max-merge per-fragment boundary summaries into ``pending`` (in
+    place). Inputs are pre-masked to POSITIONAL rows with a frag_id, in
+    processed (sorted) order, so groupby first/last are the run's own
+    boundaries; merging against stored values keeps the summary equal to
+    what a one-shot sorted run over the union would emit.
+
+    Boundary ties resolve by one comparator, ``(timestamp, msgid)``: when a
+    later stream microbatch carries a record at exactly the stored boundary
+    timestamp (the kernel's h == 0 join), the winner is the
+    (timestamp, msgid)-max row, not whichever run was processed last — the
+    same pick as the DuckDB replay's ``ORDER BY timestamp, msgid`` window.
+    msgid boundaries ride in the summary for that comparison. A NULL msgid
+    compares BEFORE '': the key is (t, msgid IS NOT NULL, msgid or ''), not
+    a '' coalesce, which would tie NULL against ''."""
+    if len(fid_m) == 0:
+        return
+
+    # pure-numpy group first/last (processed order == positional min/max
+    # index, exactly what a groupby(sort=False) first/last computes) —
+    # pandas groupby-agg was a measurable slice of the per-batch release
+    # cost in drain profiles
+    codes, uniques = pd.factorize(fid_m)
+    n_g = len(uniques)
+    order = np.arange(len(codes), dtype="int64")
+    first = np.full(n_g, np.iinfo(np.int64).max, dtype="int64")
+    np.minimum.at(first, codes, order)
+    last = np.full(n_g, -1, dtype="int64")
+    np.maximum.at(last, codes, order)
+    cnt = np.bincount(codes, minlength=n_g)
+
+    def _bkey(t, mid):
+        # NULL < '' < 'a...'
+        if mid is None or mid != mid:  # None or float NaN
+            return (t, False, "")
+        return (t, True, mid)
+
+    by_id = {f["frag_id"]: f for f in pending}
+    for g in range(n_g):
+        fi, la = first[g], last[g]
+        fid = uniques[g]
+        f = by_id.get(fid)
+        if f is None:
+            f = {
+                "frag_id": fid,
+                "day_us": int(day_m[fi]),
+                "first_us": int(t_m[fi]),
+                "last_us": int(t_m[la]),
+                "first_n_tok": int(nt_m[fi]),
+                "last_n_tok": int(nt_m[la]),
+                "first_msgid": mid_m[fi],
+                "last_msgid": mid_m[la],
+                "msg_count": 0,
+            }
+            by_id[fid] = f
+            pending.append(f)
+        r_first = _bkey(int(t_m[fi]), mid_m[fi])
+        r_last = _bkey(int(t_m[la]), mid_m[la])
+        # older checkpoints may lack msgid boundaries: compare as None
+        # (NULL-first), same as the batch comparator would
+        if r_first < _bkey(f["first_us"], f.get("first_msgid")):
+            f["first_us"] = int(t_m[fi])
+            f["first_n_tok"] = int(nt_m[fi])
+            f["first_msgid"] = mid_m[fi]
+        if r_last > _bkey(f["last_us"], f.get("last_msgid")):
+            f["last_us"] = int(t_m[la])
+            f["last_n_tok"] = int(nt_m[la])
+            f["last_msgid"] = mid_m[la]
+        f["msg_count"] += int(cnt[g])
+
+
+def merge_segments(frags, params: SegmenterParams, open_segs=None):
+    """Greedy cross-day fragment->segment matching for one key.
+
+    ``frags``: fragment summaries (dicts with frag_id, day_us, first_us,
+    first_n_tok, last_us, last_n_tok — ``_merge_pending``'s shape), any
+    order. ``open_segs`` maps seg_id -> (last_us, last_n_tok) of the
+    segment's latest fragment, carried in from earlier days. Returns
+    ``([(summary, seg_id), ...], open_segs)`` in emission order: per day
+    ascending, the matched pairs in pick order, then the unmatched fragments
+    (each opening a segment with seg_id = frag_id) in frag_id order.
+    Replays reference create_segment_map.py:84-147 exactly: score every
+    (open segment, new fragment) pair, pop the best — ties to the largest
+    (seg_id, frag_id) — skip stale keys, one join per segment per day.
+    A zero score never matches, so zero pairs are not queued."""
+    open_segs = dict(open_segs or {})
+    by_day: dict = {}
+    for f in frags:
+        by_day.setdefault(f["day_us"], []).append(f)
+    out = []
+    for day in sorted(by_day):
+        by_id = {f["frag_id"]: f for f in by_day[day]}
+        scores = []
+        for seg_id, (seg_last_us, seg_last_nt) in open_segs.items():
+            for fid, f in by_id.items():
+                s = params.match_score(
+                    float(f["first_n_tok"] - seg_last_nt),
+                    (f["first_us"] - seg_last_us) / MICROS_PER_HOUR,
+                )
+                if s > 0.0:
+                    scores.append((s, seg_id, fid))
+        scores.sort()
+        stale: set[str] = set()
+        active: dict[str, str] = {}
+        while scores:
+            _, seg_id, fid = scores.pop()
+            if seg_id in stale or fid in stale:
+                continue
+            active[seg_id] = fid
+            stale.add(seg_id)
+            stale.add(fid)
+        out += [(by_id[fid], seg_id) for seg_id, fid in active.items()]
+        open_segs = {}
+        for fid in sorted(by_id.keys() - set(active.values())):
+            out.append((by_id[fid], fid))
+            open_segs[fid] = (by_id[fid]["last_us"], by_id[fid]["last_n_tok"])
+        for seg_id, fid in active.items():
+            open_segs[seg_id] = (by_id[fid]["last_us"], by_id[fid]["last_n_tok"])
+    return out, open_segs
+
+
 def greedy_merge(
     doc_id: str,
     frags: pd.DataFrame,
     params: SegmenterParams,
     open_segs: dict[str, tuple[int, int]] | None = None,
 ) -> tuple[pd.DataFrame, dict[str, tuple[int, int]]]:
-    """Greedy cross-window fragment->segment matching for one key.
+    """``merge_segments`` over a frame of fragment summaries.
 
     ``frags`` columns: frag_id, first_us, last_us, first_n_tok, last_n_tok,
-    date (datetime.date). Returns (segmap rows, final open_segs state) where
-    open_segs maps seg_id -> (last_us, last_n_tok) of its latest fragment.
-    Replays reference create_segment_map.py:84-147 exactly (ascending sort,
-    pop-best, stale-key skip, one join per seg per day, unmatched -> new seg).
-    """
-    open_segs = dict(open_segs or {})
-    out_seg, out_frag, out_date = [], [], []
-
-    frags = frags.sort_values(["date", "frag_id"], kind="mergesort")
-    for day, day_frags in frags.groupby("date", sort=True):
-        fid = day_frags["frag_id"].to_numpy()
-        f_us = day_frags["first_us"].to_numpy()
-        f_nt = day_frags["first_n_tok"].to_numpy()
-        l_us = day_frags["last_us"].to_numpy()
-        l_nt = day_frags["last_n_tok"].to_numpy()
-        idx_of = {f: j for j, f in enumerate(fid)}
-        new_frags = set(fid)
-
-        scores = []
-        for seg_id, (seg_last_us, seg_last_nt) in open_segs.items():
-            h = (f_us - seg_last_us) / MICROS_PER_HOUR
-            d = f_nt - seg_last_nt
-            for j in range(len(fid)):
-                s = params.match_score(float(d[j]), float(h[j]))
-                scores.append((s, (seg_id, fid[j]), seg_id, fid[j]))
-        scores.sort()
-        stale: set[str] = set()
-        active: dict[str, str] = {}
-        while scores:
-            s, _, seg_id, frag_id = scores.pop()
-            if s == 0.0:
-                break
-            if seg_id in stale or frag_id in stale:
-                continue
-            active[seg_id] = frag_id
-            new_frags.remove(frag_id)
-            stale.add(seg_id)
-            stale.add(frag_id)
-        for seg_id, frag_id in active.items():
-            out_seg.append(seg_id)
-            out_frag.append(frag_id)
-            out_date.append(day)
-        open_segs = {}
-        for frag_id in sorted(new_frags):
-            open_segs[frag_id] = (int(l_us[idx_of[frag_id]]), int(l_nt[idx_of[frag_id]]))
-            out_seg.append(frag_id)
-            out_frag.append(frag_id)
-            out_date.append(day)
-        for seg_id, frag_id in active.items():
-            open_segs[seg_id] = (int(l_us[idx_of[frag_id]]), int(l_nt[idx_of[frag_id]]))
-
+    date (datetime.date). Returns (segmap rows (doc_id, date, seg_id,
+    frag_id), final open_segs state)."""
+    cols = ["frag_id", "first_us", "last_us", "first_n_tok", "last_n_tok"]
+    summaries = [
+        dict(zip(cols, vals), day_us=(day - _EPOCH_DAY).days * US_PER_DAY)
+        for *vals, day in zip(
+            *(frags[c].tolist() for c in cols), frags["date"].tolist()
+        )
+    ]
+    rows, open_segs = merge_segments(summaries, params, open_segs)
     return (
         pd.DataFrame(
             {
                 "doc_id": doc_id,
-                "date": pd.array(out_date),
-                "seg_id": out_seg,
-                "frag_id": out_frag,
+                "date": pd.array([_date_of(f["day_us"]) for f, _ in rows]),
+                "seg_id": [seg_id for _, seg_id in rows],
+                "frag_id": [f["frag_id"] for f, _ in rows],
             }
         ),
         open_segs,
+    )
+
+
+COUNTED_TYPE = "array<struct<value:string,count:bigint>>"
+
+# One frame per key, tagged by ``kind``; each kind fills its own columns and
+# leaves the rest NULL:
+#   tagged    doc_id, msgid, frag_id, seg_id — one row per record;
+#   fragment  the fragment summary, its seg_id and counted arrays, and its
+#             segment's row for that day: the matcher joins at most one
+#             fragment to a segment per day, so each (seg_id, day) segment
+#             row IS one fragment's day (msg_count and identities/
+#             destinations are the daily values) plus the segment's
+#             first_timestamp and cumulative count and arrays.
+KERNEL_SCHEMA = (
+    "kind string, doc_id string, msgid string, frag_id string, "
+    "seg_id string, timestamp timestamp, msg_count bigint, "
+    "first_msg_timestamp timestamp, last_msg_timestamp timestamp, "
+    "first_msg_n_tok int, last_msg_n_tok int, first_msgid string, "
+    f"last_msgid string, identities {COUNTED_TYPE}, "
+    f"destinations {COUNTED_TYPE}, first_timestamp timestamp, "
+    f"cumulative_msg_count bigint, cumulative_identities {COUNTED_TYPE}, "
+    f"cumulative_destinations {COUNTED_TYPE}"
+)
+
+
+def _counted(counter) -> list:
+    """Counter -> counted array sorted by value."""
+    return [{"value": v, "count": c} for v, c in sorted(counter.items())]
+
+
+def segment_key(pdf: pd.DataFrame, params: SegmenterParams) -> pd.DataFrame:
+    """The batch segmenter for one doc_id (``KERNEL_SCHEMA`` rows).
+
+    ``pdf``: the key's records — doc_id, timestamp, msgid, n_tok, rec_type,
+    source, ident_value, dest_value, has_payload. The per-day run tags the
+    records and summarizes the fragments, the greedy matcher assigns
+    seg_ids over all days, attached identity records count into their
+    fragment's identities/destinations, and each segment's fragments, one
+    per day in day order, accumulate the running totals."""
+    pdf = sort_group(pdf)
+    doc_id = pdf["doc_id"].iat[0]
+    frags: list[dict] = []
+    fid = _run_sorted(doc_id, pdf, {}, frags, params)
+    for f, seg_id in merge_segments(frags, params)[0]:
+        f["seg_id"] = seg_id
+
+    counts = {f["frag_id"]: (Counter(), Counter()) for f in frags}
+    attached = np.not_equal(fid, None) & (
+        pdf["rec_type"].to_numpy(dtype=object) == "IDENT"
+    )
+    for f, iv, dv in zip(
+        fid[attached],
+        pdf["ident_value"].to_numpy(dtype=object)[attached],
+        pdf["dest_value"].to_numpy(dtype=object)[attached],
+    ):
+        idents, dests = counts[f]
+        if iv is not None:
+            idents[iv] += 1
+        if dv is not None:
+            dests[dv] += 1
+
+    by_seg: dict[str, list] = {}
+    for f in sorted(frags, key=lambda f: f["day_us"]):
+        by_seg.setdefault(f["seg_id"], []).append(f)
+    for fs in by_seg.values():
+        total, seg_idents, seg_dests = 0, Counter(), Counter()
+        for f in fs:
+            idents, dests = counts[f["frag_id"]]
+            total += f["msg_count"]
+            seg_idents.update(idents)
+            seg_dests.update(dests)
+            f.update(
+                identities=_counted(idents),
+                destinations=_counted(dests),
+                first_timestamp=fs[0]["first_us"],
+                cumulative_msg_count=total,
+                cumulative_identities=_counted(seg_idents),
+                cumulative_destinations=_counted(seg_dests),
+            )
+
+    n, n_all = len(pdf), len(pdf) + len(frags)
+
+    def column(name):
+        return [f[name] for f in frags]
+
+    def objects(tagged=None, frag=None):
+        out = np.full(n_all, None, dtype=object)
+        if tagged is not None:
+            out[:n] = tagged
+        if frag is not None:
+            out[n:] = np.fromiter(column(frag), dtype=object, count=len(frags))
+        return out
+
+    def ints(frag):
+        vals = np.zeros(n_all, dtype="int64")
+        vals[n:] = column(frag)
+        return pd.arrays.IntegerArray(vals, np.arange(n_all) < n)
+
+    def stamps(frag):
+        us = np.full(n_all, np.iinfo(np.int64).min, dtype="int64")  # NaT
+        us[n:] = column(frag)
+        return us.view("datetime64[us]").astype("datetime64[ns]")
+
+    seg_of = {f["frag_id"]: f["seg_id"] for f in frags}
+    kind = np.full(n_all, "fragment", dtype=object)
+    kind[:n] = "tagged"
+    return pd.DataFrame(
+        {
+            "kind": kind,
+            "doc_id": np.full(n_all, doc_id, dtype=object),
+            "msgid": objects(tagged=pdf["msgid"].to_numpy(dtype=object)),
+            "frag_id": objects(fid, "frag_id"),
+            "seg_id": objects([seg_of.get(f) for f in fid], "seg_id"),
+            "timestamp": stamps("day_us"),
+            "msg_count": ints("msg_count"),
+            "first_msg_timestamp": stamps("first_us"),
+            "last_msg_timestamp": stamps("last_us"),
+            "first_msg_n_tok": ints("first_n_tok"),
+            "last_msg_n_tok": ints("last_n_tok"),
+            "first_msgid": objects(frag="first_msgid"),
+            "last_msgid": objects(frag="last_msgid"),
+            "identities": objects(frag="identities"),
+            "destinations": objects(frag="destinations"),
+            "first_timestamp": stamps("first_timestamp"),
+            "cumulative_msg_count": ints("cumulative_msg_count"),
+            "cumulative_identities": objects(frag="cumulative_identities"),
+            "cumulative_destinations": objects(frag="cumulative_destinations"),
+        },
+        copy=False,
     )

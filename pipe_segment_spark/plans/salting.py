@@ -28,9 +28,8 @@ from pyspark.sql import functions as F
 from pipe_segment_spark.config import DEFAULT_PARAMS, SegmenterParams
 from pipe_segment_spark.operators.fragment import (
     NARROW_TAGGED_SCHEMA,
-    INPUT_COLS,
-    _UDF_COLS,
     assign_frag_ids,
+    kernel_input,
     tag_fragments,
 )
 
@@ -42,31 +41,17 @@ def tag_fragments_salted(
 ) -> DataFrame:
     """Salted fragmenter: shuffle on (doc_id, day-bucket) so one hot key
     spreads over ``n_days / days_per_salt`` tasks."""
-    cols = [c for c in INPUT_COLS if c in records.columns]
-    missing = [c for c in INPUT_COLS if c not in records.columns]
-    df = records.select(*cols)
-    for c in missing:
-        df = df.withColumn(c, F.lit(None).cast("string"))
-
     salt = (F.unix_date(F.to_date("timestamp")) / days_per_salt).cast("long")
-    narrow = df.select(
-        *[c for c in _UDF_COLS if c != "has_payload"],
-        (
-            F.col("tokens").isNotNull()
-            & (F.size("tokens") > 0)
-            & F.col("n_tok").isNotNull()
-        ).alias("has_payload"),
-    ).withColumn("__salt", salt)
-    frag_map = (
-        narrow.groupBy("doc_id", "__salt")  # groupBy shuffles on the salted key
+    narrow = (
+        kernel_input(records)
+        .withColumn("__salt", salt)
+        .groupBy("doc_id", "__salt")  # groupBy shuffles on the salted key
         .applyInPandas(
             lambda key, pdf: assign_frag_ids(pdf, params),
             schema=NARROW_TAGGED_SCHEMA,
         )
-    ).select("doc_id", "msgid", "frag_id")
-    return df.join(
-        frag_map.hint("shuffle_hash"), ["doc_id", "msgid"], "left"
-    ).select(*INPUT_COLS, "frag_id")
+    )
+    return tag_fragments(records, params, narrow_tagged=narrow)
 
 
 __all__ = ["tag_fragments_salted", "tag_fragments"]

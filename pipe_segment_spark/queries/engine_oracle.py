@@ -11,15 +11,15 @@ recursive CTEs over the (tiny at sf0.01) token stream:
    pair scoring with first-max tie-break, IDENT attach-without-advance,
    noise skip, stalest-eviction at max_open_fragments.
 2. ``gstep``: per doc_id, one recursion step per greedy PICK (or per
-   day-advance), replaying kernel.greedy_merge / reference
+   day-advance), replaying kernel.merge_segments / reference
    create_segment_map.py:84-147: score all (open segment, new fragment)
    pairs, repeatedly take the max (score, seg_id, frag_id), mark both stale;
    unmatched fragments open segments named by their frag_id.
 
 Everything downstream (fragment summaries, per-(seg, day) daily/cumulative
-stats, record tagging) is ordinary relational SQL, mirroring
-operators/fragment.py::fragments_from_tagged and
-operators/segments.py::create_segments.
+stats, record tagging) is ordinary relational SQL, computing what the
+engine's per-key kernel (kernel.segment_key) builds in Python — an
+independent replay, not a mirror.
 
 All float math is written to be bit-identical with the numpy kernels:
 integer-microsecond epochs -> double hours, ``**0.5`` (same libm pow), and
@@ -307,7 +307,7 @@ frag_dests AS MATERIALIZED (
 
 def oracle_full_segments(p: SegmenterParams = DEFAULT_PARAMS) -> str:
     """Per-(seg_id, day) stats with counted-identity arrays serialized as
-    'value:count;...' strings (operators/segments.py::create_segments)."""
+    'value:count;...' strings (the engine's kernel.segment_key rollup)."""
     return f"""
 WITH RECURSIVE {full_segmenter_ctes(p)},
 seg_daily AS (

@@ -59,16 +59,11 @@ def q_segmenter_full_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-engine fragment summaries with boundary msgids/token payloads
     (records re-attached via the boundary-msgid map join) and both counted
     arrays — the reference's fragment checkpoint format."""
-    from pipe_segment_spark.operators.fragment import (
-        fragments_from_tagged,
-        tag_fragments_narrow,
-    )
+    from pipe_segment_spark.operators.fragment import attach_boundary_tokens
 
     records = token_stream(spark, sf_dir)
-    frags = fragments_from_tagged(
-        tag_fragments_narrow(records, DEFAULT_PARAMS),
-        records=records,
-        with_boundary_tokens=True,
+    frags = attach_boundary_tokens(
+        run_batch_pipeline(records, DEFAULT_PARAMS).fragments, records
     )
     return frags.select(
         "doc_id",

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pipe_segment_spark.config import DEFAULT_PARAMS
+from pipe_segment_spark.pipeline import run_batch_pipeline
 from pipe_segment_spark.queries.engine_oracle import full_segmenter_ctes
 from pipe_segment_spark.sources.token_stream import token_stream
 
@@ -66,59 +67,26 @@ def _norm(col):
 
 
 def _engine_parts(spark: SparkSession, sf_dir: str):
-    """Lean composition for the identity jobs: the narrow tagged stream
-    (no token payload — identity jobs never read it, so the record-sized
-    payload re-attach join is skipped entirely), fragments+seg_id, segmap.
-    Small intermediates persisted exactly like run_batch_pipeline."""
-    from pyspark.storagelevel import StorageLevel
-
-    from pipe_segment_spark.operators.fragment import (
-        fragment_base,
-        tag_fragments_narrow,
+    """The identity jobs' inputs from the batch pipeline's persisted kernel
+    pass (the same cache the full pipeline fills, so a session that also
+    ran it — the bench, the query gate's correctness sweep — runs the kernel
+    once): attached IDENT records with their seg_id, and the per-segment
+    days from the fragment rows. At 100 TB this seam is where a
+    storage-backed fragments table read replaces the recompute (PLANS.md
+    note unchanged)."""
+    out = run_batch_pipeline(token_stream(spark, sf_dir), DEFAULT_PARAMS)
+    ident = out.tagged_records.where(
+        (F.col("rec_type") == "IDENT")
+        & F.col("frag_id").isNotNull()
+        & F.col("ident_value").isNotNull()
+    ).select(
+        "doc_id",
+        "seg_id",
+        F.to_date("timestamp").alias("date"),
+        "msgid",
+        "ident_value",
     )
-    from pipe_segment_spark.operators.segment_map import create_segment_map
-    from pipe_segment_spark.operators.tag import tag_fragments_with_seg_id
-
-    records = token_stream(spark, sf_dir)
-    narrow = tag_fragments_narrow(records, DEFAULT_PARAMS).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # persist the ARRAY-FREE fragment base and the segmap built on it —
-    # ANALYZED-PLAN-IDENTICAL to run_batch_pipeline's persists, so in a
-    # session that also ran the full pipeline (the bench, the driver's
-    # correctness sweep) the CacheManager serves both from the existing
-    # cache instead of recomputing a plan-variant twin (pre-r6 this module
-    # persisted fragments_from_tagged(narrow) — base + decorative empty
-    # arrays that no identity consumer ever read — whose analyzed plan
-    # matched nothing, forcing a second kernel/segmap materialization).
-    # At 100 TB this seam is where a storage-backed fragments table read
-    # replaces the recompute (PLANS.md note unchanged).
-    base = fragment_base(narrow).persist(StorageLevel.MEMORY_AND_DISK)
-    segmap = create_segment_map(base, DEFAULT_PARAMS).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    frags_seg = tag_fragments_with_seg_id(base, segmap)
-    # the identity payload stays JVM-side (never rides the kernel): join it
-    # back onto the narrow map at IDENT-row cardinality
-    ident_side = records.where(
-        (F.col("rec_type") == "IDENT") & F.col("ident_value").isNotNull()
-    ).select("doc_id", "msgid", "ident_value")
-    ident = (
-        narrow.where(
-            (F.col("rec_type") == "IDENT") & F.col("frag_id").isNotNull()
-        )
-        .select("doc_id", "msgid", "frag_id", "timestamp")
-        .join(ident_side, ["doc_id", "msgid"])
-        .join(segmap.select("frag_id", "seg_id"), "frag_id")
-        .select(
-            "doc_id",
-            "seg_id",
-            F.to_date("timestamp").alias("date"),
-            "msgid",
-            "ident_value",
-        )
-    )
-    return ident, _seg_days(frags_seg)
+    return ident, _seg_days(out.fragments)
 
 
 def _ident_field_rows(ident: DataFrame) -> DataFrame:

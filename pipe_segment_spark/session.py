@@ -23,9 +23,14 @@ def build_session(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
+    builder = SparkSession.builder.appName(app_name)
+    # Under spark-submit (which hands PySpark its gateway, the same test
+    # pyspark.java_gateway makes) the launcher has already set the master:
+    # its --master, or its local[*] default. Keep it.
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cores}]")
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
+        builder
         # Event time is canonical UTC (reference keeps float unix-seconds UTC,
         # transform/read_messages.py:40-42).
         .config("spark.sql.session.timeZone", "UTC")

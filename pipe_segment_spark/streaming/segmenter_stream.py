@@ -11,11 +11,11 @@ Per key (doc_id), GroupState carries:
   - open segments (seg_id -> last fragment boundary) for cross-day matching
   - ``sorted_prefix`` only: the buffered out-of-order record suffix
 
-Both modes run released records through ONE per-day run (``_run_sorted``:
-6-key sort -> ``_fragment_loop`` with carried per-day state ->
-``_merge_pending`` boundary summaries -> tagged frame) and close a day's
-summaries through the greedy matcher (kind='segmap') once the watermark
-passes it. They differ only in the release cut:
+Both modes run released records through the batch kernel's per-day run
+(operators/kernel.py ``_run_sorted``: ``_fragment_loop`` with carried
+per-day state -> ``_merge_pending`` boundary summaries) and close a day's
+summaries through its greedy matcher (``merge_segments``, kind='segmap')
+once the watermark passes it. They differ only in the release cut:
   - ``low_latency`` (default): the whole arriving microbatch releases, so
     tagged rows emit immediately. Byte-identical to the batch engine for
     per-day in-order arrival; an in-watermark record that arrives AFTER
@@ -53,13 +53,13 @@ from pyspark.sql.types import (
 
 from pipe_segment_spark.config import DEFAULT_PARAMS, SegmenterParams
 from pipe_segment_spark.operators.kernel import (
+    US_PER_DAY,
     OpenFragState,
-    _fragment_loop,
-    greedy_merge,
+    _date_of,
+    _run_sorted,
+    merge_segments,
     sort_group,
 )
-
-US_PER_DAY = 86_400_000_000
 
 STREAM_MODES = ("low_latency", "sorted_prefix")
 
@@ -133,113 +133,29 @@ def _decode_state(tup):
 
 
 def _close_pending_days(doc_id, open_segs, pending_frags, up_to_day_us, params):
-    """Run greedy matching for every pending day < up_to_day_us; returns
-    (segmap row dicts, new open_segs, remaining pending)."""
-    out = []
-    days = sorted({f["day_us"] for f in pending_frags})
-    remaining = pending_frags
-    for day_us in days:
-        if day_us >= up_to_day_us:
-            break
-        day_frags = [f for f in remaining if f["day_us"] == day_us]
-        remaining = [f for f in remaining if f["day_us"] != day_us]
-        fr = pd.DataFrame(day_frags)
-        fr["date"] = pd.to_datetime(fr["day_us"], unit="us").dt.date
-        segmap, open_segs = greedy_merge(doc_id, fr, params, open_segs)
-        by_frag = {f["frag_id"]: f for f in day_frags}
-        for _, r in segmap.iterrows():
-            f = by_frag[r["frag_id"]]
-            out.append(
-                {
-                    "kind": "segmap",
-                    "doc_id": doc_id,
-                    "timestamp": pd.Timestamp(f["day_us"], unit="us"),
-                    "msgid": None,
-                    "n_tok": None,
-                    "frag_id": r["frag_id"],
-                    "seg_id": r["seg_id"],
-                    "date": str(r["date"]),
-                    "msg_count": int(f["msg_count"]),
-                    "first_us": int(f["first_us"]),
-                    "last_us": int(f["last_us"]),
-                }
-            )
+    """Greedy-match every pending day < up_to_day_us in one
+    ``merge_segments`` call; returns (segmap row dicts, new open_segs,
+    remaining pending)."""
+    closing = [f for f in pending_frags if f["day_us"] < up_to_day_us]
+    remaining = [f for f in pending_frags if f["day_us"] >= up_to_day_us]
+    matched, open_segs = merge_segments(closing, params, open_segs)
+    out = [
+        {
+            "kind": "segmap",
+            "doc_id": doc_id,
+            "timestamp": pd.Timestamp(f["day_us"], unit="us"),
+            "msgid": None,
+            "n_tok": None,
+            "frag_id": f["frag_id"],
+            "seg_id": seg_id,
+            "date": _date_of(f["day_us"]).isoformat(),
+            "msg_count": int(f["msg_count"]),
+            "first_us": int(f["first_us"]),
+            "last_us": int(f["last_us"]),
+        }
+        for f, seg_id in matched
+    ]
     return out, open_segs, remaining
-
-
-def _merge_pending(pending, fid_m, t_m, nt_m, day_m, mid_m):
-    """Min/max-merge per-fragment boundary summaries into ``pending`` (in
-    place). Inputs are pre-masked to POSITIONAL rows with a frag_id, in
-    processed (sorted) order, so groupby first/last are the run's own
-    boundaries; merging against stored values keeps the summary equal to
-    what a one-shot sorted run over the union would emit.
-
-    Boundary ties resolve by the batch engine's comparator: fragment_base
-    picks boundary payloads with ``min_by/max_by(n_tok, struct(timestamp,
-    msgid))`` (operators/fragment.py:184-208), so when a later microbatch
-    carries a record at exactly the stored boundary timestamp (the kernel's
-    h == 0 join), the winner is the (timestamp, msgid)-max row, not
-    whichever run was processed last. msgid boundaries ride in the summary
-    for that comparison. None-safety matches Spark's struct ordering
-    exactly: a NULL struct field sorts BEFORE '' (verified empirically:
-    min_by picks the NULL-msgid row over the ''-msgid row at an equal
-    timestamp, max_by the reverse), so the compare key is
-    (t, msgid IS NOT NULL, msgid or '') — None first, then lexicographic —
-    not a '' coalesce, which would tie NULL against ''."""
-    if len(fid_m) == 0:
-        return
-
-    # pure-numpy group first/last (processed order == positional min/max
-    # index, exactly what a groupby(sort=False) first/last computes) —
-    # pandas groupby-agg was a measurable slice of the per-batch release
-    # cost in drain profiles
-    codes, uniques = pd.factorize(fid_m)
-    n_g = len(uniques)
-    order = np.arange(len(codes), dtype="int64")
-    first = np.full(n_g, np.iinfo(np.int64).max, dtype="int64")
-    np.minimum.at(first, codes, order)
-    last = np.full(n_g, -1, dtype="int64")
-    np.maximum.at(last, codes, order)
-    cnt = np.bincount(codes, minlength=n_g)
-
-    by_id = {f["frag_id"]: f for f in pending}
-    for g in range(n_g):
-        fi, la = first[g], last[g]
-        fid = uniques[g]
-        f = by_id.get(fid)
-        if f is None:
-            f = {
-                "frag_id": fid,
-                "day_us": int(day_m[fi]),
-                "first_us": int(t_m[fi]),
-                "last_us": int(t_m[la]),
-                "first_n_tok": int(nt_m[fi]),
-                "last_n_tok": int(nt_m[la]),
-                "first_msgid": mid_m[fi],
-                "last_msgid": mid_m[la],
-                "msg_count": 0,
-            }
-            by_id[fid] = f
-            pending.append(f)
-        def _bkey(t, mid):
-            # Spark struct ordering: NULL field < '' < 'a...'
-            if mid is None or mid != mid:  # None or float NaN
-                return (t, False, "")
-            return (t, True, mid)
-
-        r_first = _bkey(int(t_m[fi]), mid_m[fi])
-        r_last = _bkey(int(t_m[la]), mid_m[la])
-        # older checkpoints may lack msgid boundaries: compare as None
-        # (NULL-first), same as the batch comparator would
-        if r_first < _bkey(f["first_us"], f.get("first_msgid")):
-            f["first_us"] = int(t_m[fi])
-            f["first_n_tok"] = int(nt_m[fi])
-            f["first_msgid"] = mid_m[fi]
-        if r_last > _bkey(f["last_us"], f.get("last_msgid")):
-            f["last_us"] = int(t_m[la])
-            f["last_n_tok"] = int(nt_m[la])
-            f["last_msgid"] = mid_m[la]
-        f["msg_count"] += int(cnt[g])
 
 
 _BUF_COLS = ("t", "nt", "msgid", "rec", "hp", "src", "iv")
@@ -253,49 +169,6 @@ def _has_payload(tokens) -> np.ndarray:
         dtype=bool,
         count=len(tokens),
     )
-
-
-def _run_sorted(doc_id, pdf, frag_days, pending, params):
-    """The per-day run both modes release through. ``pdf`` is one key's
-    released records in ``sort_group`` order with a ``has_payload`` column;
-    each day's slice runs ``_fragment_loop`` with that day's carried
-    (open-fragments, counter) state, positional rows with a frag_id merge
-    into the ``pending`` summaries, and the tagged output frame is
-    returned."""
-    ts_us = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
-    day_us = (ts_us // US_PER_DAY) * US_PER_DAY
-    n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
-    noise = ~pdf["has_payload"].to_numpy(dtype=bool) | np.isnan(n_tok)
-    is_ident = pdf["rec_type"].to_numpy(dtype=object) == "IDENT"
-    frag_ids: list = []
-    # timestamp-sorted, so every day is one contiguous slice
-    cuts = [0, *(np.flatnonzero(np.diff(day_us)) + 1).tolist(), len(ts_us)]
-    for lo, hi in zip(cuts[:-1], cuts[1:]):
-        day = int(day_us[lo])
-        of, nk = frag_days.get(day, ([], 1))
-        ids, of, nk = _fragment_loop(
-            doc_id,
-            ts_us[lo:hi],
-            n_tok[lo:hi],
-            noise[lo:hi],
-            is_ident[lo:hi],
-            of,
-            nk,
-            params,
-        )
-        frag_days[day] = (of, nk)
-        frag_ids.extend(ids)
-    fid_arr = np.array(frag_ids, dtype=object)
-    pos = np.not_equal(fid_arr, None) & ~is_ident
-    _merge_pending(
-        pending,
-        fid_arr[pos],
-        ts_us[pos],
-        n_tok[pos].astype("int64"),
-        day_us[pos],
-        pdf["msgid"].to_numpy(dtype=object)[pos],
-    )
-    return _tagged_frame(doc_id, pdf, fid_arr)
 
 
 def _release_below(doc_id, buf, frag_days, pending, cut_us, params):
@@ -320,7 +193,8 @@ def _release_below(doc_id, buf, frag_days, pending, cut_us, params):
                 for c in _BUF_COLS
             }
         pdf = _sorted_pdf_from_cols(doc_id, rel_cols)
-        tagged.append(_run_sorted(doc_id, pdf, frag_days, pending, params))
+        fid = _run_sorted(doc_id, pdf, frag_days, pending, params)
+        tagged.append(_tagged_frame(doc_id, pdf, fid))
     return tagged
 
 
@@ -459,11 +333,9 @@ def make_stateful_segmenter(
             elif len(batch):
                 # low_latency: the whole arriving batch is the release
                 batch["has_payload"] = _has_payload(batch["tokens"])
-                tagged.append(
-                    _run_sorted(
-                        doc_id, sort_group(batch), frag_days, pending, params
-                    )
-                )
+                batch = sort_group(batch)
+                fid = _run_sorted(doc_id, batch, frag_days, pending, params)
+                tagged.append(_tagged_frame(doc_id, batch, fid))
             release_us = wm_ms * 1000 if wm_ms > 0 else None
             close_day_us = (
                 (release_us // US_PER_DAY) * US_PER_DAY if release_us else None

@@ -113,3 +113,92 @@ def test_merge_matches_oracle(records):
         segmap, _ = greedy_merge(doc, fr, PARAMS)
         got.update(dict(zip(segmap["frag_id"], segmap["seg_id"])))
     assert got == want
+
+
+def kernel_outputs(records):
+    """Run the batch kernel (``segment_key``, one call per doc_id) without
+    Spark; returns its rows split by kind, NULL columns as None."""
+    import pandas as pd
+
+    from pipe_segment_spark.operators.kernel import segment_key
+
+    pdf = pd.DataFrame(records)
+    pdf["timestamp"] = pd.to_datetime(pdf["timestamp"])
+    pdf["has_payload"] = [
+        (r["tokens"] is not None and len(r["tokens"]) > 0 and r["n_tok"] is not None)
+        for r in records
+    ]
+    rows = pd.concat(
+        [segment_key(g, PARAMS) for _, g in pdf.groupby("doc_id")],
+        ignore_index=True,
+    )
+    rows = rows.astype(object).where(rows.notna(), None)
+    return {
+        kind: rows[rows["kind"] == kind].to_dict("records")
+        for kind in ("tagged", "fragment")
+    }
+
+
+def _ts(v):
+    import pandas as pd
+
+    return None if v is None else pd.Timestamp(v).to_pydatetime()
+
+
+@given(record_streams())
+@settings(max_examples=150, deadline=None)
+def test_segment_key_matches_oracle(records):
+    """The whole batch kernel equals the oracle's ``run_pipeline``: tagged
+    frag_id/seg_id per record, every fragment (boundaries, counts, counted
+    arrays, seg_id) and every (seg_id, day) segment row (first timestamp,
+    daily and cumulative counts and arrays)."""
+    if not records:
+        return
+    want = oracle.run_pipeline(records, PARAMS)
+    got = kernel_outputs(records)
+
+    assert {r["msgid"]: (r["frag_id"], r["seg_id"]) for r in got["tagged"]} == {
+        r["msgid"]: (r["frag_id"], r["seg_id"]) for r in want["tagged_records"]
+    }
+
+    def frag_key(doc_id, frag_id, day, count, first, last, first_nt, last_nt,
+                 idents, dests, seg_id):
+        return (doc_id, frag_id, day, count, first, last, first_nt, last_nt,
+                tuple((i["value"], i["count"]) for i in idents),
+                tuple((d["value"], d["count"]) for d in dests), seg_id)
+
+    assert sorted(
+        frag_key(f["doc_id"], f["frag_id"], _ts(f["timestamp"]),
+                 f["msg_count"], _ts(f["first_msg_timestamp"]),
+                 _ts(f["last_msg_timestamp"]), f["first_msg_n_tok"],
+                 f["last_msg_n_tok"], f["identities"], f["destinations"],
+                 f["seg_id"])
+        for f in got["fragment"]
+    ) == sorted(
+        frag_key(f["doc_id"], f["frag_id"], f["timestamp"], f["msg_count"],
+                 f["first_msg_timestamp"], f["last_msg_timestamp"],
+                 f["first_msg_n_tok"], f["last_msg_n_tok"], f["identities"],
+                 f["destinations"], f["seg_id"])
+        for f in want["fragments"]
+    )
+
+    def counted(arr):
+        return tuple((i["value"], i["count"]) for i in arr)
+
+    # a (seg_id, day) segment row is carried by that day's fragment row
+    assert sorted(
+        (s["seg_id"], s["frag_id"], s["doc_id"], _ts(s["timestamp"]),
+         _ts(s["first_timestamp"]), s["msg_count"],
+         s["cumulative_msg_count"], counted(s["identities"]),
+         counted(s["cumulative_identities"]), counted(s["destinations"]),
+         counted(s["cumulative_destinations"]))
+        for s in got["fragment"]
+    ) == sorted(
+        (s["seg_id"], s["frag_id"], s["doc_id"], s["timestamp"],
+         s["first_timestamp"], s["daily_msg_count"],
+         s["cumulative_msg_count"], counted(s["daily_identities"]),
+         counted(s["cumulative_identities"]),
+         counted(s["daily_destinations"]),
+         counted(s["cumulative_destinations"]))
+        for s in want["segments"]
+    )

@@ -283,10 +283,7 @@ def test_fragment_boundary_tokens(spark):
     """Fragments built with the records side-input carry first/last token
     payloads equal to the oracle's fragment checkpoint format (ADVICE r01:
     fragment-level token arrays must be asserted)."""
-    from pipe_segment_spark.operators.fragment import (
-        fragments_from_tagged,
-        tag_fragments_narrow,
-    )
+    from pipe_segment_spark.operators.fragment import attach_boundary_tokens
 
     recs = [
         make_record("d1", T0 + timedelta(hours=i), 10 + i, f"m{i}",
@@ -297,8 +294,8 @@ def test_fragment_boundary_tokens(spark):
                     tokens=[7, 8, 9])  # interleaved second fragment
     ]
     df = records_to_df(spark, recs)
-    frags = fragments_from_tagged(
-        tag_fragments_narrow(df, PARAMS), records=df, with_boundary_tokens=True
+    frags = attach_boundary_tokens(
+        run_batch_pipeline(df, PARAMS).fragments, df
     ).collect()
     expected = {
         f["frag_id"]: (tuple(f["first_tokens"]), tuple(f["last_tokens"]))

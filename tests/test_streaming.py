@@ -700,13 +700,13 @@ def test_stream_segment_rejects_unknown_mode():
 
 def test_merge_pending_boundary_tie_breaks_on_msgid():
     """Boundary merges across microbatches resolve equal timestamps with the
-    batch engine's (timestamp, msgid) comparator (fragment_base's
-    min_by/max_by ordinal, operators/fragment.py:184-208) — NOT
+    (timestamp, msgid) comparator the batch kernel's one-shot run and the
+    DuckDB replay (ORDER BY timestamp, msgid) both imply — NOT
     last-run-wins. A tied-last_us record with a SMALLER msgid must not
     steal last_n_tok; one with a LARGER msgid must."""
     import numpy as np
 
-    from pipe_segment_spark.streaming.segmenter_stream import _merge_pending
+    from pipe_segment_spark.operators.kernel import _merge_pending
 
     day = 0
     pending = []
@@ -780,7 +780,7 @@ def test_merge_pending_null_msgid_sorts_before_empty_string():
     wins. The pre-r5 '' coalesce tied them (ADVICE r4)."""
     import numpy as np
 
-    from pipe_segment_spark.streaming.segmenter_stream import _merge_pending
+    from pipe_segment_spark.operators.kernel import _merge_pending
 
     # run 1: single row with msgid='' at t=100
     pending = []
@@ -951,7 +951,7 @@ def test_merge_pending_property_vs_reference_fold():
 
     from hypothesis import given, settings, strategies as st
 
-    from pipe_segment_spark.streaming.segmenter_stream import _merge_pending
+    from pipe_segment_spark.operators.kernel import _merge_pending
 
     def reference_merge(pending, rows):
         """Two-phase row-at-a-time fold mirroring the tie hierarchy:
@@ -1044,7 +1044,7 @@ def test_merge_pending_duplicate_t_msgid_hierarchy():
     this pins ours."""
     import numpy as np
 
-    from pipe_segment_spark.streaming.segmenter_stream import _merge_pending
+    from pipe_segment_spark.operators.kernel import _merge_pending
 
     p = []
     _merge_pending(
