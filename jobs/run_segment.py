@@ -6,7 +6,7 @@ cli/commands/segment.py:74-116). Launch:
 
     spark-submit --py-files pipe_segment_spark.zip jobs/run_segment.py \
         --input /path/to/token_table --output /path/to/out \
-        --mode batch --max-gap-hours 6 --max-dtok-rate 30
+        --mode batch --segmenter-params "max_gap_hours:6, max_dtok_rate:30"
 
     spark-submit --py-files pipe_segment_spark.zip jobs/run_segment.py \
         --input /path/to/stream_dir --output /path/to/out \
@@ -38,10 +38,10 @@ def parse_args(argv):
     p.add_argument(
         "--segmenter-params",
         type=parse_segmenter_params,
-        default=None,
+        default="{}",
         help="'max_gap_hours:6, max_dtok_rate:30' or JSON object "
-        "(reference --segmenter_params surface); overrides the individual "
-        "threshold flags",
+        "(reference --segmenter_params surface); omitted keys keep their "
+        "defaults",
     )
     p.add_argument(
         "--date-range",
@@ -66,26 +66,15 @@ def parse_args(argv):
         help="stream mode: drain currently-available input, then exit "
         "(the reference's daily incremental run, resumable via --checkpoint)",
     )
-    p.add_argument("--max-gap-hours", type=float, default=6.0)
-    p.add_argument("--max-dtok-rate", type=float, default=30.0)
-    p.add_argument("--buffer-hours", type=float, default=0.5)
-    p.add_argument("--hours-exp", type=float, default=0.5)
     return p.parse_args(argv)
 
 
 def main(argv=None):
     args = parse_args(argv or sys.argv[1:])
 
-    from pipe_segment_spark.config import SegmenterParams
     from pipe_segment_spark.session import build_session
 
-    params = args.segmenter_params or SegmenterParams(
-        max_gap_hours=args.max_gap_hours,
-        max_dtok_rate=args.max_dtok_rate,
-        buffer_hours=args.buffer_hours,
-        hours_exp=args.hours_exp,
-    )
-
+    params = args.segmenter_params
     spark = build_session()
 
     if args.mode == "batch":

@@ -9,10 +9,12 @@
 - ``attach_boundary_tokens``: the first/last token payloads of fragment
   summaries (the reference's fragment checkpoint format), joined by
   boundary msgid.
-- ``tag_fragments``: the fragmenter alone (``assign_frag_ids`` in one
-  ``applyInPandas`` per doc_id) plus the payload join; the salted plan
-  (plans/salting.py) is checked against it. The batch segmenter itself is
-  one kernel pass, ``kernel.segment_key`` (pipeline.py).
+- ``assign_frag_ids``: the fragmenter alone over one key's kernel input,
+  run without Spark by the property tests and the kernel timings.
+
+``kernel_input`` feeds both the batch segmenter (one ``applyInPandas`` per
+doc_id over ``kernel.segment_key``, pipeline.py) and the stream's
+``applyInPandasWithState`` (streaming/segmenter_stream.py).
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pipe_segment_spark.config import DEFAULT_PARAMS, SegmenterParams
+from pipe_segment_spark.config import SegmenterParams
 from pipe_segment_spark.operators.kernel import _run_sorted, sort_group
 
 INPUT_COLS = [
@@ -37,14 +39,8 @@ INPUT_COLS = [
     "dest_value",
 ]
 
-# the columns every kernel reads (``sort_group`` + ``_run_sorted``); the
-# narrow tagged rows are these plus frag_id
+# the columns every kernel reads (``sort_group`` + ``_run_sorted``)
 _KERNEL_COLS = ["doc_id", "timestamp", "msgid", "n_tok", "rec_type", "source"]
-
-NARROW_TAGGED_SCHEMA = (
-    "doc_id string, source string, timestamp timestamp, n_tok int, "
-    "msgid string, rec_type string, frag_id string"
-)
 
 
 def _with_input_cols(records: DataFrame) -> DataFrame:
@@ -75,7 +71,7 @@ def assign_frag_ids(pdf, params: SegmenterParams):
     """Fragmenter for one doc_id: deterministic sort, then the shared
     per-day run with fresh state per day (the reference groups by
     (ssvid, day), pipeline.py:211-217 — day continuity is the greedy
-    merger's job). Emits the narrow tagged rows (``NARROW_TAGGED_SCHEMA``)."""
+    merger's job). Returns the kernel columns plus frag_id, in sort order."""
     pdf = sort_group(pdf)
     doc_id = pdf["doc_id"].iat[0] if len(pdf) else ""
     out = {c: pdf[c].to_numpy() for c in _KERNEL_COLS}
@@ -93,23 +89,6 @@ def tag_records(records: DataFrame, frag_map: DataFrame) -> DataFrame:
     return _with_input_cols(records).join(
         frag_map.hint("shuffle_hash"), ["doc_id", "msgid"], "left"
     ).select(*INPUT_COLS, *extra)
-
-
-def tag_fragments(
-    records: DataFrame,
-    params: SegmenterParams = DEFAULT_PARAMS,
-    narrow_tagged: DataFrame | None = None,
-) -> DataFrame:
-    """records -> full records + frag_id (null = noise). ``narrow_tagged``
-    defaults to the fragmenter pass: one shuffle on doc_id (groupBy itself
-    hash-partitions — an extra repartition() would double it), day
-    grouping inside the kernel."""
-    if narrow_tagged is None:
-        narrow_tagged = kernel_input(records).groupBy("doc_id").applyInPandas(
-            lambda key, pdf: assign_frag_ids(pdf, params),
-            schema=NARROW_TAGGED_SCHEMA,
-        )
-    return tag_records(records, narrow_tagged.select("doc_id", "msgid", "frag_id"))
 
 
 def attach_boundary_tokens(fragments: DataFrame, records: DataFrame) -> DataFrame:

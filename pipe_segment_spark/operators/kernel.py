@@ -77,9 +77,11 @@ def _tiebreak_keys(pdf: pd.DataFrame):
     """Secondary sort keys (everything after timestamp), cheapest-last so
     they feed np.lexsort directly. Fixed-width unicode conversion is the
     expensive part — callers only build these for rows with tied
-    timestamps."""
+    timestamps. NULL n_tok sorts greatest whatever the column's dtype
+    (int, float64 with NaN as Arrow delivers nulls, or object with None):
+    n_tok is an int, so float64 holds it exactly and +inf tops it."""
     msgid = pdf["msgid"].fillna("").to_numpy(dtype="U")
-    n_tok = pdf["n_tok"].fillna(np.iinfo(np.int64).max).to_numpy(dtype="int64")
+    n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.inf)
     source = pdf["source"].fillna("").to_numpy(dtype="U")
     rec = pdf["rec_type"].fillna("").to_numpy(dtype="U")
     if "ident_value" in pdf.columns:

@@ -10,16 +10,8 @@ module adds run-level observability around that:
   (one row per microbatch: batch id, input rows, rows/sec, watermark,
   state-store size) — the streaming analog of the Dataflow job metrics the
   reference relies on. Idempotent per (run_id, batch_id) filename, so
-  repeated calls / replays don't duplicate.
-- ``StreamMetricsListener``: the same rows via StreamingQueryListener for
-  long-running queries. (Note: python progress callbacks are unreliable in
-  this pyspark build — verified by tests/test_metrics.py::
-  test_stream_listener_delivery, which registers the listener, runs a
-  query, and observes zero callback deliveries after a 20 s drain window;
-  record_progress is the tested, recorded contract. The listener is kept
-  because real multi-node deployments DO deliver these callbacks, and the
-  test asserts well-formedness + agreement with record_progress whenever
-  delivery occurs.)
+  repeated calls / replays don't duplicate; a long-running query calls it
+  periodically.
 - ``with_lineage``: stamps rows with their physical input partition id for
   partition-level audit of any output row.
 """
@@ -28,15 +20,9 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-try:  # pyspark >= 3.4 location
-    from pyspark.sql.streaming import StreamingQueryListener
-except ImportError:  # pragma: no cover
-    from pyspark.sql.streaming.listener import StreamingQueryListener
 
 
 def with_lineage(df: DataFrame) -> DataFrame:
@@ -76,34 +62,6 @@ def record_progress(query, metrics_dir: str) -> int:
             f.write(json.dumps(row))
         n += 1
     return n
-
-
-class StreamMetricsListener(StreamingQueryListener):
-    """Listener variant for long-running queries."""
-
-    def __init__(self, spark: SparkSession, metrics_dir: str):
-        self.spark = spark
-        self.metrics_dir = metrics_dir
-        os.makedirs(metrics_dir, exist_ok=True)
-
-    def onQueryStarted(self, event):  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event):  # noqa: N802
-        p = event.progress
-        row = _progress_row(json.loads(p.json))
-        path = os.path.join(
-            self.metrics_dir,
-            f"progress-{row['run_id']}-{row['batch_id']}-{uuid.uuid4().hex[:6]}.json",
-        )
-        with open(path, "w") as f:
-            f.write(json.dumps(row))
-
-    def onQueryTerminated(self, event):  # noqa: N802
-        pass
-
-    def onQueryIdle(self, event):  # noqa: N802
-        pass
 
 
 def read_metrics(spark: SparkSession, metrics_dir: str) -> DataFrame:

@@ -3,27 +3,32 @@
 The reference simulates streaming with daily incremental batch runs that
 carry open-segment state through a fragments table (pipeline.py:231-242,
 read_fragments.py). Here it's native: a keyed ``applyInPandasWithState``
-stateful operator with event-time watermarks.
+stateful operator with event-time watermarks over the batch kernel's input
+projection (operators/fragment.py ``kernel_input``): the token payload stays
+in the JVM and arrives reduced to ``has_payload``.
 
 Per key (doc_id), GroupState carries:
   - open fragments + next fragment counter per day (kernel.OpenFragState)
   - per-day fragment summaries not yet segment-assigned
   - open segments (seg_id -> last fragment boundary) for cross-day matching
-  - ``sorted_prefix`` only: the buffered out-of-order record suffix
+  - the buffered records not yet released, as one flat set of columns
 
-Both modes run released records through the batch kernel's per-day run
-(operators/kernel.py ``_run_sorted``: ``_fragment_loop`` with carried
-per-day state -> ``_merge_pending`` boundary summaries) and close a day's
-summaries through its greedy matcher (``merge_segments``, kind='segmap')
-once the watermark passes it. They differ only in the release cut:
-  - ``low_latency`` (default): the whole arriving microbatch releases, so
-    tagged rows emit immediately. Byte-identical to the batch engine for
-    per-day in-order arrival; an in-watermark record that arrives AFTER
-    later same-day records scores 0 against fragments it precedes
-    (0<=hours gate) and starts a new fragment.
-  - ``sorted_prefix``: records buffer per (key, day) and only those strictly
-    below the watermark release. Byte-identical to the batch engine under
-    ARBITRARY intra-day disorder, at per-watermark-advance emission latency.
+Every call computes one release cut and releases the buffered and arriving
+records below it as one ``sort_group``-ed run through the batch kernel's
+per-day run (operators/kernel.py ``_run_sorted``: ``_fragment_loop`` with
+carried per-day state -> ``_merge_pending`` boundary summaries); arriving
+records at or above the cut join the buffer. A day's summaries close through
+the greedy matcher (``merge_segments``, kind='segmap') once the watermark
+passes it. The two modes differ only in the cut:
+  - ``low_latency`` (default): +inf, so the whole arriving microbatch
+    releases and tagged rows emit immediately. Byte-identical to the batch
+    engine for per-day in-order arrival; an in-watermark record that
+    arrives AFTER later same-day records scores 0 against fragments it
+    precedes (0<=hours gate) and starts a new fragment.
+  - ``sorted_prefix``: the watermark, so only records strictly below it
+    release. Byte-identical to the batch engine under ARBITRARY intra-day
+    disorder, at per-watermark-advance emission latency.
+  - a fired timeout cuts at +inf in both modes (drain everything)
   - late records older than the watermark are dropped by Spark upstream
     (reference analog: cross-day late data starts a new segment / next run)
 
@@ -35,6 +40,7 @@ out-of-order suffix in ``sorted_prefix``.
 from __future__ import annotations
 
 import json
+from itertools import compress
 
 import numpy as np
 import pandas as pd
@@ -52,6 +58,7 @@ from pyspark.sql.types import (
 )
 
 from pipe_segment_spark.config import DEFAULT_PARAMS, SegmenterParams
+from pipe_segment_spark.operators.fragment import kernel_input
 from pipe_segment_spark.operators.kernel import (
     US_PER_DAY,
     OpenFragState,
@@ -87,14 +94,25 @@ OUTPUT_SCHEMA = StructType(
 
 STATE_SCHEMA = StructType([StructField("js", StringType())])
 
+# flat buffer columns: epoch micros, n_tok (None for NULL), then the
+# kernel-input object columns they hold
+_BUF_OBJ_COLS = {
+    "msgid": "msgid",
+    "rec": "rec_type",
+    "hp": "has_payload",
+    "src": "source",
+    "iv": "ident_value",
+}
+_BUF_COLS = ("t", "nt", *_BUF_OBJ_COLS)
+
 
 def _encode_state(frag_days, open_segs, pending_frags, buf) -> tuple:
     """frag_days: {day_us(int) -> (open_frags list, next_k)} — per-day
     fragmenter state, so late-but-in-watermark records for an earlier day
     can never clobber a newer day's open fragments (each day's state machine
     is independent, exactly like the batch engine's (doc_id, day) grouping).
-    ``buf`` (sorted_prefix mode) holds the not-yet-released columnar record
-    suffix per day. JSON keys are stringified day_us."""
+    ``buf`` holds the not-yet-released records as ``_BUF_COLS`` lists (empty
+    dict when nothing is buffered). JSON keys are stringified day_us."""
     d = {
         "fd": {
             str(day): [
@@ -110,7 +128,7 @@ def _encode_state(frag_days, open_segs, pending_frags, buf) -> tuple:
         "pf": pending_frags,
     }
     if buf:
-        d["buf"] = {str(k): v for k, v in buf.items()}
+        d["buf"] = buf
     return (json.dumps(d),)
 
 
@@ -124,11 +142,16 @@ def _decode_state(tup):
             f.last_us = last_us
             frags.append(f)
         frag_days[int(day)] = (frags, nk)
+    buf = d.get("buf", {})
+    if buf and "t" not in buf:
+        # older checkpoints keep one set of the same columns per day
+        days = [buf[k] for k in sorted(buf, key=int)]
+        buf = {c: [v for day in days for v in day[c]] for c in _BUF_COLS}
     return (
         frag_days,
         {k: tuple(v) for k, v in d["os"].items()},
         d["pf"],
-        {int(k): v for k, v in d.get("buf", {}).items()},
+        buf,
     )
 
 
@@ -158,46 +181,6 @@ def _close_pending_days(doc_id, open_segs, pending_frags, up_to_day_us, params):
     return out, open_segs, remaining
 
 
-_BUF_COLS = ("t", "nt", "msgid", "rec", "hp", "src", "iv")
-
-
-def _has_payload(tokens) -> np.ndarray:
-    """The batch kernel's payload rule: a null OR EMPTY token array is
-    noise."""
-    return np.fromiter(
-        (t is not None and len(t) > 0 for t in tokens),
-        dtype=bool,
-        count=len(tokens),
-    )
-
-
-def _release_below(doc_id, buf, frag_days, pending, cut_us, params):
-    """sorted_prefix's release cut: the buffered records strictly below
-    ``cut_us`` leave the buffer through ``_run_sorted``, one day at a time;
-    the rest stay buffered. Returns the tagged frames."""
-    tagged = []
-    for day_us in sorted(buf):
-        cols = buf[day_us]
-        rel = np.asarray(cols["t"], dtype="int64") < cut_us
-        if not rel.any():
-            continue
-        if rel.all():
-            rel_cols = buf.pop(day_us)
-        else:
-            rel_cols = {
-                c: np.asarray(cols[c], dtype=object)[rel].tolist()
-                for c in _BUF_COLS
-            }
-            buf[day_us] = {
-                c: np.asarray(cols[c], dtype=object)[~rel].tolist()
-                for c in _BUF_COLS
-            }
-        pdf = _sorted_pdf_from_cols(doc_id, rel_cols)
-        fid = _run_sorted(doc_id, pdf, frag_days, pending, params)
-        tagged.append(_tagged_frame(doc_id, pdf, fid))
-    return tagged
-
-
 def _consume_seeds(batch, open_segs):
     """Strip SEED rows (reference ReadFragments bootstrap: seg_id in
     ident_value, last boundary in timestamp/n_tok) into open_segs."""
@@ -215,59 +198,37 @@ def _consume_seeds(batch, open_segs):
     return batch
 
 
-
-def _append_to_buffer(buf, batch):
-    """Columnar per-day append of one microbatch into the keyed buffer."""
-    ts_us_all = batch["timestamp"].to_numpy("datetime64[us]").astype("int64")
-    day_us_all = (ts_us_all // US_PER_DAY) * US_PER_DAY
-    hp = _has_payload(batch["tokens"].to_numpy())
-    nt_f = batch["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
-    nt_obj = np.array(
-        [None if v != v else int(v) for v in nt_f.tolist()], dtype=object
-    )
-    obj_cols = {}
-    for name, col in (
-        ("msgid", "msgid"),
-        ("rec", "rec_type"),
-        ("src", "source"),
-        ("iv", "ident_value"),
-    ):
-        if col in batch.columns:
-            vals = batch[col].to_numpy(dtype=object)
-            vals[pd.isna(vals)] = None
-        else:
-            vals = np.full(len(batch), None, dtype=object)
-        obj_cols[name] = vals
-    for day in pd.unique(day_us_all):
-        m = day_us_all == day
-        b = buf.setdefault(int(day), {c: [] for c in _BUF_COLS})
-        b["t"].extend(ts_us_all[m].tolist())
-        b["nt"].extend(nt_obj[m].tolist())
-        b["hp"].extend(hp[m].tolist())
-        for name in ("msgid", "rec", "src", "iv"):
-            b[name].extend(obj_cols[name][m].tolist())
+def _append_to_buffer(buf, rows, ts_us):
+    """Columnar append of kernel-input ``rows`` (epoch micros ``ts_us``)
+    to the key's flat buffer."""
+    nt = rows["n_tok"].to_numpy(dtype="float64", na_value=np.nan).tolist()
+    buf.setdefault("t", []).extend(ts_us.tolist())
+    buf.setdefault("nt", []).extend(None if v != v else int(v) for v in nt)
+    for name, col in _BUF_OBJ_COLS.items():
+        vals = rows[col].to_numpy(dtype=object)
+        vals[pd.isna(vals)] = None
+        buf.setdefault(name, []).extend(vals.tolist())
 
 
-def _sorted_pdf_from_cols(doc_id, cols):
-    """Columnar buffer slice -> 6-key-sorted pandas frame (full sort
-    identity with the batch engine: source and ident_value are tie keys in
-    sort_group)."""
-    pdf = pd.DataFrame(
+def _buffer_frame(doc_id, buf, rel):
+    """The buffered rows where ``rel`` holds, as a kernel-input frame."""
+
+    def col(name, dtype=object):
+        return np.asarray(buf[name], dtype=dtype)[rel]
+
+    return pd.DataFrame(
         {
-            "timestamp": pd.to_datetime(
-                np.asarray(cols["t"], dtype="int64"), unit="us"
-            ),
-            "n_tok": pd.Series(cols["nt"], dtype=object),
-            "msgid": pd.Series(cols["msgid"], dtype=object),
-            "rec_type": pd.Series(cols["rec"], dtype=object),
-            "has_payload": np.asarray(cols["hp"], dtype=bool),
-            "source": pd.Series(cols["src"], dtype=object),
-            "ident_value": pd.Series(cols["iv"], dtype=object),
+            "doc_id": doc_id,
+            "timestamp": pd.to_datetime(col("t", "int64"), unit="us"),
+            "msgid": col("msgid"),
+            "n_tok": col("nt", "float64"),  # None -> NaN, like Arrow's nulls
+            "rec_type": col("rec"),
+            "source": col("src"),
+            "ident_value": col("iv"),
+            "has_payload": col("hp", bool),
         },
         copy=False,
     )
-    pdf["doc_id"] = doc_id
-    return sort_group(pdf)
 
 
 def _tagged_frame(doc_id, pdf, fid_arr):
@@ -296,20 +257,21 @@ def make_stateful_segmenter(
     params: SegmenterParams = DEFAULT_PARAMS, mode: str = "low_latency"
 ):
     """Returns the (key, pdf_iter, state) -> iter[pdf] function for
-    applyInPandasWithState in one of ``STREAM_MODES``.
+    applyInPandasWithState in one of ``STREAM_MODES``; its input rows are
+    ``kernel_input(records, "ident_value")``.
 
-    ``sorted_prefix``: arriving records buffer per (key, day); every batch,
-    the buffered records STRICTLY BELOW the current watermark release. The
-    watermark contract guarantees no future record can precede a released
-    one (late rows are dropped upstream), and a tied timestamp group can
-    never straddle the release boundary (future rows are >= it), so the
-    concatenated released blocks replay the batch kernel's one-shot sorted
-    run EXACTLY, with per-key state bounded by the out-of-order suffix
-    (records in [watermark, max event time]) + open-fragment summaries.
-    ``low_latency`` releases the whole arriving batch instead."""
+    Every call releases the records below one cut — +inf for
+    ``low_latency`` and for a fired timeout, the watermark for
+    ``sorted_prefix`` — and buffers the arriving rest. Under the watermark
+    cut no future record can precede a released one (late rows are dropped
+    upstream), and a tied timestamp group can never straddle the cut
+    (future rows are >= it), so the concatenated released runs replay the
+    batch kernel's one-shot sorted run EXACTLY, with per-key state bounded
+    by the out-of-order suffix (records in [watermark, max event time]) +
+    open-fragment summaries."""
     if mode not in STREAM_MODES:
         raise ValueError(f"unknown stream mode {mode!r}")
-    buffered = mode == "sorted_prefix"
+    release_all = mode == "low_latency"
 
     def fn(key, pdf_iter, state: GroupState):
         doc_id = key[0]
@@ -318,48 +280,61 @@ def make_stateful_segmenter(
         else:
             frag_days, open_segs, pending, buf = {}, {}, [], {}
         wm_ms = state.getCurrentWatermarkMs()
+        wm_us = wm_ms * 1000 if wm_ms > 0 else float("-inf")
 
-        tagged = []
         if state.hasTimedOut:
             # terminal drain (bounded-feed contract): release and close
             # everything the key still holds
-            release_us = close_day_us = float("inf")
+            batch = None
+            cut_us = close_day_us = float("inf")
         else:
             batch = pd.concat(list(pdf_iter), ignore_index=True)
             # state bootstrap (reference ReadFragments, read_fragments.py:12-99)
             batch = _consume_seeds(batch, open_segs)
-            if len(batch) and buffered:
-                _append_to_buffer(buf, batch)
-            elif len(batch):
-                # low_latency: the whole arriving batch is the release
-                batch["has_payload"] = _has_payload(batch["tokens"])
-                batch = sort_group(batch)
-                fid = _run_sorted(doc_id, batch, frag_days, pending, params)
-                tagged.append(_tagged_frame(doc_id, batch, fid))
-            release_us = wm_ms * 1000 if wm_ms > 0 else None
+            cut_us = float("inf") if release_all else wm_us
             close_day_us = (
-                (release_us // US_PER_DAY) * US_PER_DAY if release_us else None
+                (wm_us // US_PER_DAY) * US_PER_DAY if wm_ms > 0 else wm_us
             )
 
-        segmap = []
-        if release_us is not None:
-            tagged += _release_below(
-                doc_id, buf, frag_days, pending, release_us, params
+        released = []
+        if buf:
+            rel = np.asarray(buf["t"], dtype="int64") < cut_us
+            if rel.any():
+                released.append(_buffer_frame(doc_id, buf, rel))
+                keep = (~rel).tolist()
+                buf = {c: list(compress(v, keep)) for c, v in buf.items()}
+                buf = buf if buf["t"] else {}
+        if batch is not None and len(batch):
+            ts_us = batch["timestamp"].to_numpy("datetime64[us]").astype("int64")
+            rel = ts_us < cut_us
+            if not rel.all():
+                _append_to_buffer(buf, batch[~rel], ts_us[~rel])
+                batch = batch[rel]
+            if len(batch):
+                released.append(batch)
+
+        tagged = []
+        if released:
+            pdf = sort_group(
+                released[0]
+                if len(released) == 1
+                else pd.concat(released, ignore_index=True)
             )
-            segmap, open_segs, pending = _close_pending_days(
-                doc_id, open_segs, pending, close_day_us, params
-            )
-            # fragmenter state for closed days can never be touched again
-            # (records older than the watermark are dropped upstream) —
-            # prune it so state stays O(open days)
-            frag_days = {
-                d: v for d, v in frag_days.items() if d >= close_day_us
-            }
+            fid = _run_sorted(doc_id, pdf, frag_days, pending, params)
+            tagged.append(_tagged_frame(doc_id, pdf, fid))
+        segmap, open_segs, pending = _close_pending_days(
+            doc_id, open_segs, pending, close_day_us, params
+        )
+        # fragmenter state for closed days can never be touched again
+        # (records older than the watermark are dropped upstream) — prune it
+        # so state stays O(open days)
+        frag_days = {d: v for d, v in frag_days.items() if d >= close_day_us}
         state.update(_encode_state(frag_days, open_segs, pending, buf))
-        if pending or buf:
-            next_close = (
-                min([f["day_us"] for f in pending] + list(buf)) + US_PER_DAY
-            )
+        open_days = [f["day_us"] for f in pending]
+        if buf:
+            open_days.append(min(buf["t"]) // US_PER_DAY * US_PER_DAY)
+        if open_days:
+            next_close = min(open_days) + US_PER_DAY
             state.setTimeoutTimestamp(max(next_close // 1000, wm_ms + 1))
 
         yield from tagged
@@ -394,7 +369,8 @@ def stream_segment(
     """
     fn = make_stateful_segmenter(params, mode)
     return (
-        records_stream.withWatermark("timestamp", watermark)
+        kernel_input(records_stream, "ident_value")
+        .withWatermark("timestamp", watermark)
         .groupBy("doc_id")
         .applyInPandasWithState(
             fn,

@@ -76,6 +76,22 @@ def test_job_arg_probes():
     assert args.segmenter_params.max_gap_hours == 3.0
 
 
+@pytest.mark.parametrize(
+    "flag", ["--max-gap-hours", "--max-dtok-rate", "--buffer-hours", "--hours-exp"]
+)
+def test_segmenter_params_only_threshold_surface(flag):
+    """Thresholds come only through --segmenter-params, which validates
+    them (a bare --max-dtok-rate 0 would divide by zero in the kernel's
+    score); the old per-threshold flags exit, and omitting the param string
+    gives the defaults."""
+    import jobs.run_segment as job
+
+    with pytest.raises(SystemExit):
+        job.parse_args(["--input", "i", "--output", "o", flag, "0"])
+    args = job.parse_args(["--input", "i", "--output", "o"])
+    assert args.segmenter_params == SegmenterParams()
+
+
 def test_stream_mode_flag():
     """--stream-mode surfaces both modes and rejects unknown ones
     (ADVICE r03 item #3: the modes must be reachable from the CLI)."""

@@ -32,10 +32,11 @@ def test_token_stream_column_pruning(spark):
 
 
 def test_frag_map_join_never_broadcasts(spark):
-    from pipe_segment_spark.operators.fragment import tag_fragments
+    from pipe_segment_spark.pipeline import run_batch_pipeline
     from pipe_segment_spark.sources.token_stream import token_stream
 
-    plan = _plan(tag_fragments(token_stream(spark, SF_DIR)))
+    out = run_batch_pipeline(token_stream(spark, SF_DIR), persist=False)
+    plan = _plan(out.tagged_records)
     # one row per record on the build side -> must be a shuffled hash join
     assert "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan

@@ -14,16 +14,36 @@ from pipe_segment_spark.operators.kernel import sort_group
 
 
 def _reference_sort(pdf: pd.DataFrame) -> pd.DataFrame:
-    ts = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
-    msgid = pdf["msgid"].fillna("").to_numpy(dtype="U")
-    n_tok = pdf["n_tok"].fillna(np.iinfo(np.int64).max).to_numpy(dtype="int64")
-    source = pdf["source"].fillna("").to_numpy(dtype="U")
-    rec = pdf["rec_type"].fillna("").to_numpy(dtype="U")
-    if "ident_value" in pdf.columns:
-        ident = pdf["ident_value"].fillna("").to_numpy(dtype="U")
-    else:
-        ident = np.zeros(len(pdf), dtype="U1")
-    return pdf.iloc[np.lexsort((ident, rec, source, n_tok, msgid, ts))]
+    """Row-at-a-time stable sort on the oracle's key (oracle/segmenter.py
+    ``sort_records``): NULL n_tok greatest (``none_inf``), NULL strings as
+    ''."""
+
+    def none_inf(x):
+        return float("inf") if pd.isna(x) else x
+
+    def none_blank(x):
+        return "" if x is None or x != x else x
+
+    ts = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64").tolist()
+    ident = (
+        pdf["ident_value"].tolist()
+        if "ident_value" in pdf.columns
+        else [None] * len(pdf)
+    )
+    keys = [
+        (t, none_blank(m), none_inf(nt), none_blank(s), none_blank(r),
+         none_blank(iv))
+        for t, m, nt, s, r, iv in zip(
+            ts,
+            pdf["msgid"].tolist(),
+            pdf["n_tok"].tolist(),
+            pdf["source"].tolist(),
+            pdf["rec_type"].tolist(),
+            ident,
+        )
+    ]
+    order = sorted(range(len(pdf)), key=keys.__getitem__)
+    return pdf.iloc[order]
 
 
 def _frame(ts_s, msgid, n_tok=None, source=None, rec=None, ident=None):
@@ -90,11 +110,25 @@ def test_full_ties_stable_original_order():
 
 
 def test_nulls_sort_greatest():
+    # NULL msgid sorts as '' (first); NULL n_tok after 5 on the "a" tie
     pdf = _frame(
-        [3, 3, 3],
-        [None, "a", "b"],
-        n_tok=[None, 5, None],
+        [3, 3, 3, 3],
+        [None, "a", "a", "b"],
+        n_tok=[None, None, 5, None],
     )
+    assert list(sort_group(pdf).index) == [0, 2, 1, 3]
+    _assert_same(pdf)
+
+
+@pytest.mark.parametrize("dtype", ["float64", "object", "Int32"])
+def test_null_n_tok_sorts_last_in_every_dtype(dtype):
+    """Arrow delivers an int column with nulls as float64 (NaN); a
+    column built from Python values is object (None). Both, and the
+    nullable Int32, put NULL n_tok after every value on a tie."""
+    n_tok = pd.Series([None, 7, None, 2], dtype=dtype)
+    pdf = _frame([4, 4, 4, 4], ["m", "m", "m", "m"], n_tok=n_tok)
+    out = sort_group(pdf)
+    assert list(out.index) == [3, 1, 0, 2]
     _assert_same(pdf)
 
 

@@ -548,6 +548,7 @@ def test_sorted_prefix_state_bounded_by_suffix():
 
     from pipe_segment_spark.operators.kernel import _fragment_loop
     from pipe_segment_spark.streaming.segmenter_stream import (
+        _BUF_COLS,
         _decode_state,
         make_stateful_segmenter,
     )
@@ -557,16 +558,17 @@ def test_sorted_prefix_state_bounded_by_suffix():
     hour_us = 3_600_000_000
 
     def batch_df(rows):
+        # kernel_input(records, "ident_value") rows
         return pd.DataFrame(
             {
                 "doc_id": ["d1"] * len(rows),
-                "source": ["s"] * len(rows),
                 "timestamp": [base + dt.timedelta(hours=h) for h, *_ in rows],
-                "tokens": [[1, 2]] * len(rows),
-                "n_tok": [nt for _, nt, _ in rows],
                 "msgid": [m for _, _, m in rows],
+                "n_tok": [nt for _, nt, _ in rows],
                 "rec_type": ["POS"] * len(rows),
+                "source": ["s"] * len(rows),
                 "ident_value": [None] * len(rows),
+                "has_payload": [True] * len(rows),
             }
         )
 
@@ -575,7 +577,8 @@ def test_sorted_prefix_state_bounded_by_suffix():
     out1 = list(fn(("d1",), iter([batch_df([(12, 12, "a2"), (10, 10, "a0")])]), st))
     assert out1 == []  # nothing released yet
     _, _, _, buf = _decode_state(st.get)
-    assert sum(len(v["t"]) for v in buf.values()) == 2
+    assert sorted(buf) == sorted(_BUF_COLS)  # one flat buffer, no day level
+    assert buf["msgid"] == ["a2", "a0"] and buf["hp"] == [True, True]
 
     # batch 2: one more record; watermark passed hour 13 -> hours 10,12
     # release (sorted), hour 14 stays buffered
@@ -584,7 +587,7 @@ def test_sorted_prefix_state_bounded_by_suffix():
     released = pd.concat(out2, ignore_index=True)
     assert list(released["msgid"]) == ["a0", "a2"]  # sorted release order
     _, _, _, buf = _decode_state(st.get)
-    assert sum(len(v["t"]) for v in buf.values()) == 1  # only the suffix
+    assert buf["msgid"] == ["a3"] and buf["nt"] == [14]  # only the suffix
     assert st.timeout_set is not None
 
     # batch 3: watermark into day 1 -> remainder releases, day 0 closes
@@ -642,16 +645,17 @@ def test_modes_agree_on_in_order_feed():
     batches = [rows[0:7], rows[7:20], rows[20:21], rows[21:45], rows[45:]]
 
     def frame(b):
+        # kernel_input(records, "ident_value") rows
         return pd.DataFrame(
             {
                 "doc_id": ["d1"] * len(b),
-                "source": ["s"] * len(b),
                 "timestamp": [r[0] for r in b],
-                "tokens": [r[4] for r in b],
-                "n_tok": [r[1] for r in b],
                 "msgid": [r[2] for r in b],
+                "n_tok": [r[1] for r in b],
                 "rec_type": [r[3] for r in b],
+                "source": ["s"] * len(b),
                 "ident_value": [None] * len(b),
+                "has_payload": [len(r[4]) > 0 for r in b],
             }
         )
 
@@ -696,6 +700,189 @@ def test_stream_segment_rejects_unknown_mode():
     assert STREAM_MODES == ("low_latency", "sorted_prefix")
     with pytest.raises(ValueError, match="unknown stream mode"):
         stream_segment(None, PARAMS, mode="buffered")
+
+
+def test_stateful_udf_input_has_no_token_payload(spark, tmp_path):
+    """The stream feeds the batch kernel's input projection into the
+    stateful UDF: ``has_payload`` is computed JVM-side and the token array
+    never crosses into Python. (The optimized plan is not available for a
+    streaming source, so this reads the analyzed plan.)"""
+    from pipe_segment_spark.streaming.segmenter_stream import INPUT_SCHEMA_DDL
+
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    for mode in ("low_latency", "sorted_prefix"):
+        out = stream_segment(
+            spark.readStream.schema(INPUT_SCHEMA_DDL).parquet(in_dir),
+            PARAMS,
+            mode=mode,
+        )
+        plan = out._jdf.queryExecution().analyzed().toString()
+        (line,) = [
+            ln for ln in plan.splitlines()
+            if "FlatMapGroupsInPandasWithState" in ln
+        ]
+        assert "has_payload#" in line, line
+        assert "tokens#" not in line, line
+
+
+def _kernel_rows(records):
+    """(minute, n_tok, payload, rec_type, ident_value, source) tuples ->
+    ``kernel_input(records, "ident_value")`` rows for doc_id d1, msgid
+    m<i>."""
+    import datetime as dt
+
+    import pandas as pd
+
+    base = dt.datetime(2024, 1, 1)
+    return pd.DataFrame(
+        {
+            "doc_id": ["d1"] * len(records),
+            "timestamp": pd.to_datetime(
+                [base + dt.timedelta(minutes=r[0]) for r in records]
+            ),
+            "msgid": [f"m{i:03d}" for i in range(len(records))],
+            "n_tok": pd.array([r[1] for r in records], dtype="Int32"),
+            "rec_type": [r[3] for r in records],
+            "source": [r[5] for r in records],
+            "ident_value": [r[4] for r in records],
+            "has_payload": [r[2] and r[1] is not None for r in records],
+        }
+    )
+
+
+def test_sorted_prefix_equals_segment_key_property():
+    """Property: sorted_prefix over ANY microbatch split of a key's records
+    equals the batch kernel (``segment_key``) on the records it kept — the
+    same frag_id per record and the same (frag_id, seg_id, date) segmap.
+    Each microbatch first drops its rows at or below the watermark, as
+    Spark does, the watermark trails the newest record seen by a random
+    delay, and the feed ends with one timeout drain."""
+    import numpy as np
+    import pandas as pd
+
+    from hypothesis import given, settings, strategies as st
+
+    from pipe_segment_spark.operators.kernel import segment_key
+    from pipe_segment_spark.streaming.segmenter_stream import (
+        make_stateful_segmenter,
+    )
+
+    record_st = st.tuples(
+        st.integers(0, 3 * 24 * 4 - 1).map(lambda q: 15 * q),  # minute, ties
+        st.one_of(st.none(), st.integers(0, 60)),  # n_tok
+        st.booleans(),  # token payload present
+        st.sampled_from(["POS", "POS", "IDENT"]),
+        st.sampled_from([None, "a", "b"]),
+        st.sampled_from(["s", "t"]),
+    )
+
+    @settings(max_examples=150, deadline=None)
+    @given(
+        st.lists(record_st, min_size=1, max_size=40),
+        st.lists(st.integers(1, 39), max_size=6),
+        st.sampled_from([0, 1, 6, 30]),
+    )
+    def check(records, cuts, delay_h):
+        pdf = _kernel_rows(records)
+        ts_ms = (
+            pdf["timestamp"].to_numpy("datetime64[ms]").astype("int64")
+        )
+        bounds = [0, *sorted({c for c in cuts if c < len(pdf)}), len(pdf)]
+        fn = make_stateful_segmenter(PARAMS, "sorted_prefix")
+        state = _FakeGroupState()
+        parts, kept = [], []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            idx = np.arange(lo, hi)
+            if state.wm_ms > 0:
+                idx = idx[ts_ms[idx] > state.wm_ms]  # late rows dropped
+            kept += idx.tolist()
+            batch = pdf.iloc[idx].reset_index(drop=True)
+            parts += fn(("d1",), iter([batch]), state)
+            if kept:
+                newest = int(ts_ms[kept].max())
+                state.wm_ms = max(state.wm_ms, newest - delay_h * 3_600_000)
+        state.hasTimedOut = True
+        parts += fn(("d1",), iter([]), state)
+
+        got_tagged, got_segmap = {}, set()
+        for part in parts:
+            if (part["kind"] == "tagged").all():
+                got_tagged.update(zip(part["msgid"], part["frag_id"]))
+            else:
+                got_segmap |= set(
+                    zip(part["frag_id"], part["seg_id"], part["date"])
+                )
+
+        want = segment_key(
+            pdf.iloc[kept].assign(dest_value=None).reset_index(drop=True),
+            PARAMS,
+        )
+        tagged = want[want["kind"] == "tagged"]
+        frags = want[want["kind"] == "fragment"]
+        assert got_tagged == dict(zip(tagged["msgid"], tagged["frag_id"]))
+        assert got_segmap == set(
+            zip(
+                frags["frag_id"],
+                frags["seg_id"],
+                frags["timestamp"].dt.date.map(str),
+            )
+        )
+        assert state.get is not None and "buf" not in state.get[0]
+
+    check()
+
+
+def test_per_day_buffer_state_still_decodes():
+    """A checkpoint written with the earlier per-day buffer
+    ({day_us: {column: [...]}}) decodes into the flat buffer, the days
+    concatenated in day order, and drains like a flat one."""
+    import json
+
+    import pandas as pd
+
+    from pipe_segment_spark.streaming.segmenter_stream import (
+        _decode_state,
+        make_stateful_segmenter,
+    )
+
+    day_us, hour_us = 86_400_000_000, 3_600_000_000
+    d0 = 19723 * day_us  # 2024-01-01
+
+    def day(ts, mids):
+        n = len(ts)
+        return {
+            "t": ts, "nt": [10] * n, "msgid": mids, "rec": ["POS"] * n,
+            "hp": [True] * n, "src": ["s"] * n, "iv": [None] * n,
+        }
+
+    old = json.dumps({
+        "fd": {}, "os": {}, "pf": [],
+        "buf": {
+            str(d0 + day_us): day([d0 + day_us + hour_us], ["b0"]),
+            str(d0): day([d0 + 2 * hour_us, d0 + hour_us], ["a1", "a0"]),
+        },
+    })
+    _, _, _, buf = _decode_state((old,))
+    assert buf["msgid"] == ["a1", "a0", "b0"]
+    assert buf["t"] == [d0 + 2 * hour_us, d0 + hour_us, d0 + day_us + hour_us]
+
+    state = _FakeGroupState()
+    state.update((old,))
+    state.hasTimedOut = True
+    out = pd.concat(
+        list(make_stateful_segmenter(PARAMS, "sorted_prefix")(
+            ("d1",), iter([]), state
+        )),
+        ignore_index=True,
+    )
+    tagged = out[out["kind"] == "tagged"]
+    assert list(tagged["msgid"]) == ["a0", "a1", "b0"]  # one sorted run
+    assert tagged["frag_id"].iloc[0] == tagged["frag_id"].iloc[1]
+    assert set(out.loc[out["kind"] == "segmap", "date"]) == {
+        "2024-01-01", "2024-01-02"
+    }
+    assert "buf" not in state.get[0]
 
 
 def test_merge_pending_boundary_tie_breaks_on_msgid():

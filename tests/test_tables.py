@@ -60,7 +60,7 @@ def test_write_read_prune_and_idempotent_rerun(spark, tmp_path):
 
 def test_msgid_unique_contract(spark):
     """The (doc_id, msgid) uniqueness contract the tag-back joins rely on
-    (tag_fragments / session_tagged_records re-attach payloads by
+    (tag_records / session_tagged_records re-attach payloads by
     (doc_id, msgid) — duplicates would fan out rows and mis-tag;
     ADVICE r01). token_stream guarantees it by construction (msgid =
     'm' || event_id); any new source must too."""
