@@ -86,16 +86,19 @@ HEADLINE = [
 
 def bench_streaming(spark, sf_dir: str) -> dict:
     """Streaming segmenter end-to-end throughput: availableNow drain of the
-    sf-derived stream through applyInPandasWithState into the exactly-once
-    sink. Input materialization is not timed."""
+    sf-derived stream, ended by the end-of-feed record, through
+    applyInPandasWithState into the exactly-once sink. Input
+    materialization is not timed."""
     import shutil
     import tempfile
 
     from pipe_segment_spark.config import DEFAULT_PARAMS
     from pipe_segment_spark.sources.token_stream import token_stream
     from pipe_segment_spark.streaming.segmenter_stream import (
+        END_OF_FEED_DOC_ID,
         INPUT_SCHEMA_DDL,
         stream_segment,
+        write_end_of_feed,
     )
     from pipe_segment_spark.streaming.sink import (
         idempotent_batch_writer,
@@ -107,6 +110,7 @@ def bench_streaming(spark, sf_dir: str) -> dict:
     src = token_stream(spark, sf_dir)
     src.coalesce(8).write.mode("overwrite").parquet(in_dir)
     n_records = spark.read.parquet(in_dir).count()
+    write_end_of_feed(spark, in_dir)
 
     t0 = time.perf_counter()
     q = (
@@ -120,7 +124,11 @@ def bench_streaming(spark, sf_dir: str) -> dict:
     )
     q.awaitTermination(900)
     elapsed = time.perf_counter() - t0
-    out_rows = read_sink(spark, out_dir).count()
+    out_rows = (
+        read_sink(spark, out_dir)
+        .where(f"doc_id != '{END_OF_FEED_DOC_ID}'")
+        .count()
+    )
     shutil.rmtree(tmp, ignore_errors=True)
     return {
         "streaming_records_per_sec": round(n_records / elapsed, 1),

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Streaming-engine scaling evidence: the applyInPandasWithState segmenter
 (stream_segment -> exactly-once sink, availableNow drain) over the same
-on-disk replicated token table at N vs 4N cores, fresh JVM per level.
+on-disk replicated token table, ended by the end-of-feed record, at N vs 4N
+cores, fresh JVM per level.
 Complements bench_scaling.py (batch pipeline) — the north_rule's tier is
 streaming, so the stateful streaming path gets its own two-level evidence.
 
@@ -29,6 +30,7 @@ sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from pipe_segment_spark.session import build_session
 from pipe_segment_spark.sources.token_stream import token_stream
+from pipe_segment_spark.streaming.segmenter_stream import write_end_of_feed
 
 sf_dir, repl, out = sys.argv[1], int(sys.argv[2]), sys.argv[3]
 spark = build_session(app_name="scale-gen", cores=32)
@@ -40,6 +42,7 @@ rec = rec.crossJoin(
     "doc_id", F.concat("doc_id", F.lit("_r"), F.col("__r").cast("string"))
 ).drop("__r")
 rec.repartition(128).write.mode("overwrite").parquet(out)
+write_end_of_feed(spark, out)  # the drain releases and closes every day
 spark.stop()
 """
 
@@ -49,14 +52,15 @@ sys.path.insert(0, "/root/repo")
 from pipe_segment_spark.session import build_session
 from pipe_segment_spark.config import DEFAULT_PARAMS
 from pipe_segment_spark.streaming.segmenter_stream import (
-    INPUT_SCHEMA_DDL, stream_segment,
+    END_OF_FEED_DOC_ID, INPUT_SCHEMA_DDL, stream_segment,
 )
 from pipe_segment_spark.streaming.sink import idempotent_batch_writer, read_sink
 
 cores, in_dir = int(sys.argv[1]), sys.argv[2]
 spark = build_session(app_name=f"stream-scale-{cores}", cores=cores)
 spark.sparkContext.setLogLevel("ERROR")
-n = spark.read.parquet(in_dir).count()  # warm scan + JVM
+# warm scan + JVM
+n = spark.read.parquet(in_dir).where(f"doc_id != '{END_OF_FEED_DOC_ID}'").count()
 
 tmp = tempfile.mkdtemp(prefix=f"stream_scale_{cores}_")
 out_dir, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
@@ -72,7 +76,9 @@ q = (
 )
 q.awaitTermination()
 wall = time.perf_counter() - t0
-segmap_rows = read_sink(spark, out_dir).where("kind = 'segmap'").count()
+segmap_rows = read_sink(spark, out_dir).where(
+    f"kind = 'segmap' AND doc_id != '{END_OF_FEED_DOC_ID}'"
+).count()
 shutil.rmtree(tmp, ignore_errors=True)
 print(json.dumps({"cores": cores, "records": n, "segmap_rows": segmap_rows,
                   "wall_sec": round(wall, 2),

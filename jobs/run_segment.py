@@ -28,7 +28,6 @@ import sys
 
 def parse_args(argv):
     from pipe_segment_spark.cli import parse_segmenter_params, valid_daterange
-    from pipe_segment_spark.streaming.segmenter_stream import STREAM_MODES
 
     p = argparse.ArgumentParser(description="pipe-segment-spark segmenter")
     p.add_argument("--input", required=True, help="token table path (parquet)")
@@ -52,19 +51,12 @@ def parse_args(argv):
     )
     p.add_argument("--watermark", default="0 seconds")
     p.add_argument(
-        "--stream-mode",
-        choices=STREAM_MODES,
-        default="low_latency",
-        help="stream mode release cut: low_latency (the whole arriving "
-        "microbatch releases; batch-identity for per-day in-order feeds) or "
-        "sorted_prefix (only records below the watermark release; "
-        "batch-identity under arbitrary intra-day disorder)",
-    )
-    p.add_argument(
         "--available-now",
         action="store_true",
         help="stream mode: drain currently-available input, then exit "
-        "(the reference's daily incremental run, resumable via --checkpoint)",
+        "(the reference's daily incremental run, resumable via "
+        "--checkpoint); records above the watermark and the newest day stay "
+        "open until a later run's records move the watermark past them",
     )
     return p.parse_args(argv)
 
@@ -116,9 +108,7 @@ def main(argv=None):
             stream = stream.where(
                 F.to_date("timestamp").between(str(lo), str(hi))
             )
-        out = stream_segment(
-            stream, params, watermark=args.watermark, mode=args.stream_mode
-        )
+        out = stream_segment(stream, params, watermark=args.watermark)
         writer = (
             out.writeStream.foreachBatch(idempotent_batch_writer(args.output))
             .option("checkpointLocation", args.checkpoint)

@@ -1,5 +1,5 @@
 """Per-doc_id kernels: the one implementation of the segmenter's
-sequential work, shared by the batch job and both stream modes.
+sequential work, shared by the batch job and the stream.
 
 These run inside Arrow-batched ``applyInPandas`` / ``applyInPandasWithState``
 UDFs — the only places where the engine leaves Catalyst, because the
@@ -18,8 +18,8 @@ matcher, transform/create_segment_map.py:84-147, are the same).
   arrays and the per-(seg_id, day) rollup — returned as one frame tagged
   by ``kind`` (``KERNEL_SCHEMA``).
 
-The stream modes (streaming/segmenter_stream.py) call ``_run_sorted`` on the
-records they release and ``merge_segments`` on the days they close.
+The stream (streaming/segmenter_stream.py) calls ``_run_sorted`` on the
+records it releases and ``merge_segments`` on the days it closes.
 
 Per-key work is O(rows_in_group * open_fragments) with open_fragments bounded
 by ``params.max_open_fragments`` — parallelism comes from the key dimension
@@ -176,10 +176,11 @@ def _fragment_loop(
                 d = -d
             ph = h if h > buf_h else buf_h
             r = d / ph
-            # h < 0 can only happen with carried streaming state and an
-            # out-of-order (but in-watermark) record — same 0<=hours gate as
-            # config.pair_score; without it h**0.5 goes complex and the
-            # comparison below raises TypeError
+            # h < 0 cannot come from the stream: it releases records in
+            # sorted order, never one that precedes a released record. The
+            # 0<=hours gate stays for parity with config.pair_score and both
+            # oracles; without it h**0.5 goes complex and the comparison
+            # below raises TypeError
             if h < 0.0 or r > max_rate or h > max_gap_h:
                 continue
             s = (1.0 - r / max_rate) / (1.0 + h**h_exp)
@@ -219,7 +220,7 @@ def _fragment_loop(
 
 
 def _run_sorted(doc_id, pdf, frag_days, pending, params):
-    """The per-day run batch and both stream modes share. ``pdf`` is one
+    """The per-day run batch and the stream share. ``pdf`` is one
     key's records in ``sort_group`` order with a ``has_payload`` column;
     each day's slice runs ``_fragment_loop`` with that day's carried
     (open-fragments, counter) state from ``frag_days`` (fresh when absent),

@@ -23,7 +23,7 @@ already evidenced by an in-window end-to-end query and/or pytest:
   - dedup_minute / median_rate / hourly_counts -> satellite_offsets_full
     exercises all three (minute dedup, exact medians, hourly counts) as
     sub-stages; moved to the tail in r4 so the riskiest new code — the
-    buffered (sorted_prefix) streaming mode and the
+    watermark-released streaming segmenter and the
     validate_vessel_identity QA asset — sits inside the hard gate
     (ADVICE r03 item #1, VERDICT r03 ask #3).
   - seg_tagged_records -> segmenter_full_tagged exercises the same J1/J2
@@ -72,13 +72,11 @@ GATE_ORDER = [
     "overlap_detect",
     "theta_join_pairs",
     "sources_union",
-    # full greedy engine: batch, both streaming modes,
-    # checkpoint-resume, side-input
+    # full greedy engine: batch, streaming, checkpoint-resume, side-input
     "segmenter_full_segments",
     "segmenter_full_fragments",
     "segmenter_full_tagged",
     "segmenter_streaming",
-    "segmenter_streaming_sorted_prefix",
     "segmenter_incremental",
     "stream_identity_join",
     "multimodal_features",
@@ -177,7 +175,6 @@ for _must in (
     "validate_vessel_identity",
     "satellite_offsets_full",
     "segmenter_streaming",
-    "segmenter_streaming_sorted_prefix",
     "segmenter_incremental",
     "message_stats",
     "pack_sequences",

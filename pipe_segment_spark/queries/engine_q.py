@@ -11,8 +11,6 @@ enforced in pytest against the independent pure-Python oracle
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -119,9 +117,12 @@ _STREAM_COLS = (
 def _drain(spark: SparkSession, tmp: str, transform) -> DataFrame:
     """Run ``transform`` over the record stream watching ``{tmp}/in`` into
     the exactly-once sink ``{tmp}/out`` via availableNow; returns the
-    drained sink. Re-running on the same ``tmp`` resumes from its
-    checkpoint."""
-    from pipe_segment_spark.streaming.segmenter_stream import INPUT_SCHEMA_DDL
+    drained sink without the end-of-feed key. Re-running on the same
+    ``tmp`` resumes from its checkpoint."""
+    from pipe_segment_spark.streaming.segmenter_stream import (
+        END_OF_FEED_DOC_ID,
+        INPUT_SCHEMA_DDL,
+    )
     from pipe_segment_spark.streaming.sink import idempotent_batch_writer, read_sink
 
     in_dir, out_dir, ckpt = f"{tmp}/in", f"{tmp}/out", f"{tmp}/ckpt"
@@ -136,34 +137,37 @@ def _drain(spark: SparkSession, tmp: str, transform) -> DataFrame:
         .start()
     )
     q.awaitTermination(600)
-    return read_sink(spark, out_dir)
+    return read_sink(spark, out_dir).where(
+        ~F.col("doc_id").eqNullSafe(END_OF_FEED_DOC_ID)
+    )
 
 
 def _stream_input(spark: SparkSession, sf_dir: str, prefix: str) -> str:
     """A fresh ``_drain`` directory whose watched input holds the
-    sf-derived token stream as one feed."""
+    sf-derived token stream as one feed, ended by the end-of-feed record."""
     import tempfile
+
+    from pipe_segment_spark.streaming.segmenter_stream import write_end_of_feed
 
     tmp = tempfile.mkdtemp(prefix=prefix)
     token_stream(spark, sf_dir).coalesce(4).write.mode("overwrite").parquet(
         f"{tmp}/in"
     )
+    write_end_of_feed(spark, f"{tmp}/in")
     return tmp
 
 
-def q_segmenter_streaming(
-    spark: SparkSession, sf_dir: str, mode: str = "low_latency"
-) -> DataFrame:
-    """The Structured Streaming segmenter end-to-end in one stream mode:
-    feed the sf-derived stream through applyInPandasWithState (watermark
-    day-closing) into the exactly-once sink via availableNow, return the
-    drained output. Both modes equal the batch engine on closed days
-    (tests/test_streaming.py), so both share one recursive-CTE oracle."""
+def q_segmenter_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Structured Streaming segmenter end-to-end: feed the sf-derived
+    stream and the end-of-feed record through applyInPandasWithState
+    (watermark release and day-closing) into the exactly-once sink via
+    availableNow, return the drained output. It equals the batch engine
+    (tests/test_streaming.py), so it shares the recursive-CTE oracle."""
     from pipe_segment_spark.streaming.segmenter_stream import stream_segment
 
-    tmp = _stream_input(spark, sf_dir, f"seg_stream_{mode}_q_")
+    tmp = _stream_input(spark, sf_dir, "seg_stream_q_")
     return _drain(
-        spark, tmp, lambda df: stream_segment(df, DEFAULT_PARAMS, mode=mode)
+        spark, tmp, lambda df: stream_segment(df, DEFAULT_PARAMS)
     ).select(*_STREAM_COLS)
 
 
@@ -175,7 +179,10 @@ def q_segmenter_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as segmenter_streaming."""
     import tempfile
 
-    from pipe_segment_spark.streaming.segmenter_stream import stream_segment
+    from pipe_segment_spark.streaming.segmenter_stream import (
+        stream_segment,
+        write_end_of_feed,
+    )
 
     records = token_stream(spark, sf_dir)
     days = sorted(
@@ -199,6 +206,7 @@ def q_segmenter_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     records.where(F.to_date("timestamp") > F.lit(str(mid))).coalesce(
         2
     ).write.mode("overwrite").parquet(f"{tmp}/in/feed_1")
+    write_end_of_feed(spark, f"{tmp}/in")
     # restart from checkpoint, drain the rest
     return run_once().select(*_STREAM_COLS)
 
@@ -247,9 +255,6 @@ QUERIES = {
     "segmenter_full_fragments": q_segmenter_full_fragments,
     "segmenter_full_tagged": q_segmenter_full_tagged,
     "segmenter_streaming": q_segmenter_streaming,
-    "segmenter_streaming_sorted_prefix": partial(
-        q_segmenter_streaming, mode="sorted_prefix"
-    ),
     "segmenter_incremental": q_segmenter_incremental,
     "stream_identity_join": q_stream_identity_join,
     "multimodal_features": q_multimodal_features,
@@ -271,7 +276,6 @@ ORACLES: dict[str, str] = {
     "segmenter_full_fragments": oracle_full_fragments(DEFAULT_PARAMS),
     "segmenter_full_tagged": oracle_full_tagged(DEFAULT_PARAMS),
     "segmenter_streaming": oracle_streaming(DEFAULT_PARAMS),
-    "segmenter_streaming_sorted_prefix": oracle_streaming(DEFAULT_PARAMS),
     "segmenter_incremental": oracle_streaming(DEFAULT_PARAMS),
     "stream_identity_join": oracle_stream_identity_join(DEFAULT_PARAMS),
     "multimodal_features": ORACLE_MULTIMODAL,

@@ -13,39 +13,38 @@ Per key (doc_id), GroupState carries:
   - open segments (seg_id -> last fragment boundary) for cross-day matching
   - the buffered records not yet released, as one flat set of columns
 
-Every call computes one release cut and releases the buffered and arriving
-records below it as one ``sort_group``-ed run through the batch kernel's
-per-day run (operators/kernel.py ``_run_sorted``: ``_fragment_loop`` with
-carried per-day state -> ``_merge_pending`` boundary summaries); arriving
-records at or above the cut join the buffer. A day's summaries close through
-the greedy matcher (``merge_segments``, kind='segmap') once the watermark
-passes it. The two modes differ only in the cut:
-  - ``low_latency`` (default): +inf, so the whole arriving microbatch
-    releases and tagged rows emit immediately. Byte-identical to the batch
-    engine for per-day in-order arrival; an in-watermark record that
-    arrives AFTER later same-day records scores 0 against fragments it
-    precedes (0<=hours gate) and starts a new fragment.
-  - ``sorted_prefix``: the watermark, so only records strictly below it
-    release. Byte-identical to the batch engine under ARBITRARY intra-day
-    disorder, at per-watermark-advance emission latency.
-  - a fired timeout cuts at +inf in both modes (drain everything)
-  - late records older than the watermark are dropped by Spark upstream
-    (reference analog: cross-day late data starts a new segment / next run)
+One rule runs on every call. The buffered and arriving records at or below
+the watermark release as one ``sort_group``-ed run through the batch
+kernel's per-day run (operators/kernel.py ``_run_sorted``: ``_fragment_loop``
+with carried per-day state -> ``_merge_pending`` boundary summaries);
+arriving records above it join the buffer. The days that end at or before
+the watermark close through the greedy matcher (``merge_segments``,
+kind='segmap'). Spark drops arriving records at or below the watermark
+(reference analog: cross-day late data starts a new segment / next run), so
+the output is byte-identical to the batch engine under ARBITRARY intra-day
+disorder. A fired event-time timeout only wakes the key: it is a call with
+no rows, under the same rule.
+
+Nothing releases until the watermark passes it, so a bounded feed ends with
+one end-of-feed record far past its data (``write_end_of_feed``); its
+reserved doc_id (``END_OF_FEED_DOC_ID``) is filtered out of the sink by
+readers.
 
 State is serialized as JSON in a single string column — O(open fragments +
 open segments) per key (bounded by max_open_fragments), plus the
-out-of-order suffix in ``sorted_prefix``.
+out-of-order suffix (records above the watermark).
 """
 
 from __future__ import annotations
 
 import json
+from datetime import datetime, timezone
 from itertools import compress
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -68,7 +67,10 @@ from pipe_segment_spark.operators.kernel import (
     sort_group,
 )
 
-STREAM_MODES = ("low_latency", "sorted_prefix")
+# the end-of-feed record's reserved doc_id and event time (2200-01-01 UTC,
+# inside pandas' nanosecond range)
+END_OF_FEED_DOC_ID = "~end-of-feed"
+END_OF_FEED_TS = datetime(2200, 1, 1, tzinfo=timezone.utc)
 
 # canonical input-stream schema (BASELINE.json input_hint shape)
 INPUT_SCHEMA_DDL = (
@@ -253,25 +255,20 @@ def _tagged_frame(doc_id, pdf, fid_arr):
     )
 
 
-def make_stateful_segmenter(
-    params: SegmenterParams = DEFAULT_PARAMS, mode: str = "low_latency"
-):
+def make_stateful_segmenter(params: SegmenterParams = DEFAULT_PARAMS):
     """Returns the (key, pdf_iter, state) -> iter[pdf] function for
-    applyInPandasWithState in one of ``STREAM_MODES``; its input rows are
+    applyInPandasWithState; its input rows are
     ``kernel_input(records, "ident_value")``.
 
-    Every call releases the records below one cut — +inf for
-    ``low_latency`` and for a fired timeout, the watermark for
-    ``sorted_prefix`` — and buffers the arriving rest. Under the watermark
-    cut no future record can precede a released one (late rows are dropped
-    upstream), and a tied timestamp group can never straddle the cut
-    (future rows are >= it), so the concatenated released runs replay the
-    batch kernel's one-shot sorted run EXACTLY, with per-key state bounded
-    by the out-of-order suffix (records in [watermark, max event time]) +
-    open-fragment summaries."""
-    if mode not in STREAM_MODES:
-        raise ValueError(f"unknown stream mode {mode!r}")
-    release_all = mode == "low_latency"
+    Every call releases the buffered and arriving records at or below the
+    watermark, buffers the arriving rest and closes the days that end at or
+    before the watermark; a fired timeout is a call with no rows. Spark
+    drops arriving rows at or below the watermark, so no future record can
+    precede a released one and a tied timestamp group can never straddle
+    the cut: the concatenated released runs replay the batch kernel's
+    one-shot sorted run EXACTLY, with per-key state bounded by the
+    out-of-order suffix (records above the watermark) + open-fragment
+    summaries."""
 
     def fn(key, pdf_iter, state: GroupState):
         doc_id = key[0]
@@ -280,33 +277,28 @@ def make_stateful_segmenter(
         else:
             frag_days, open_segs, pending, buf = {}, {}, [], {}
         wm_ms = state.getCurrentWatermarkMs()
-        wm_us = wm_ms * 1000 if wm_ms > 0 else float("-inf")
-
-        if state.hasTimedOut:
-            # terminal drain (bounded-feed contract): release and close
-            # everything the key still holds
-            batch = None
-            cut_us = close_day_us = float("inf")
-        else:
-            batch = pd.concat(list(pdf_iter), ignore_index=True)
-            # state bootstrap (reference ReadFragments, read_fragments.py:12-99)
-            batch = _consume_seeds(batch, open_segs)
-            cut_us = float("inf") if release_all else wm_us
-            close_day_us = (
-                (wm_us // US_PER_DAY) * US_PER_DAY if wm_ms > 0 else wm_us
-            )
+        if wm_ms > 0:
+            wm_us = wm_ms * 1000
+            # the days before this one end at or before the watermark
+            close_day_us = (wm_us // US_PER_DAY) * US_PER_DAY
+        else:  # no watermark yet: nothing is confirmed
+            wm_us = close_day_us = float("-inf")
 
         released = []
         if buf:
-            rel = np.asarray(buf["t"], dtype="int64") < cut_us
+            rel = np.asarray(buf["t"], dtype="int64") <= wm_us
             if rel.any():
                 released.append(_buffer_frame(doc_id, buf, rel))
                 keep = (~rel).tolist()
                 buf = {c: list(compress(v, keep)) for c, v in buf.items()}
                 buf = buf if buf["t"] else {}
-        if batch is not None and len(batch):
+        frames = list(pdf_iter)  # none on a fired timeout
+        if frames:
+            batch = pd.concat(frames, ignore_index=True)
+            # state bootstrap (reference ReadFragments, read_fragments.py:12-99)
+            batch = _consume_seeds(batch, open_segs)
             ts_us = batch["timestamp"].to_numpy("datetime64[us]").astype("int64")
-            rel = ts_us < cut_us
+            rel = ts_us <= wm_us
             if not rel.all():
                 _append_to_buffer(buf, batch[~rel], ts_us[~rel])
                 batch = batch[rel]
@@ -326,8 +318,8 @@ def make_stateful_segmenter(
             doc_id, open_segs, pending, close_day_us, params
         )
         # fragmenter state for closed days can never be touched again
-        # (records older than the watermark are dropped upstream) — prune it
-        # so state stays O(open days)
+        # (records at or below the watermark are dropped upstream) — prune
+        # it so state stays O(open days)
         frag_days = {d: v for d, v in frag_days.items() if d >= close_day_us}
         state.update(_encode_state(frag_days, open_segs, pending, buf))
         open_days = [f["day_us"] for f in pending]
@@ -348,38 +340,48 @@ def stream_segment(
     records_stream: DataFrame,
     params: SegmenterParams = DEFAULT_PARAMS,
     watermark: str = "0 seconds",
-    mode: str = "low_latency",
+    mode: str = "sorted_prefix",
 ) -> DataFrame:
     """records stream -> union-typed output (tagged records + segmap rows).
 
-    ``mode`` (``STREAM_MODES``; anything else raises ``ValueError``):
-      - ``low_latency`` (default): tagged rows emit in the arriving
-        microbatch; batch/stream byte-identity guaranteed for per-day
-        in-order arrival (intra-day disorder across microbatches starts new
-        fragments instead of crashing — see the 0<=hours kernel gate).
-      - ``sorted_prefix``: buffered records release through the kernel as
-        the watermark confirms them (sorted, carried per-day state) —
-        byte-identical to the one-shot batch engine under ARBITRARY
-        intra-day disorder, with state bounded by the out-of-order suffix.
+    A record's tagged row emits once the watermark reaches it, and a day's
+    segmap rows once the watermark passes the day's end: byte-identical to
+    the one-shot batch engine under ARBITRARY intra-day disorder, with state
+    bounded by the out-of-order suffix. A fired event-time timeout only
+    wakes an idle key so its days close on time. Size ``watermark`` to the
+    feed's real disorder; end a bounded feed with ``write_end_of_feed`` and
+    filter ``END_OF_FEED_DOC_ID`` out of the sink.
 
-    Event-time timeout semantics (both modes): a fired timeout DRAINS all
-    held state (close-everything), matching the batch engine at end of a
-    bounded feed. Continuous deployments should size ``watermark`` to the
-    feed's real disorder so day closes happen on the data path.
-    """
-    fn = make_stateful_segmenter(params, mode)
+    ``mode`` accepts only ``"sorted_prefix"`` (anything else raises
+    ``ValueError``); it stays only because perfbench/stream.py passes it."""
+    if mode != "sorted_prefix":
+        raise ValueError(f"unknown stream mode {mode!r}")
     return (
         kernel_input(records_stream, "ident_value")
         .withWatermark("timestamp", watermark)
         .groupBy("doc_id")
         .applyInPandasWithState(
-            fn,
+            make_stateful_segmenter(params),
             OUTPUT_SCHEMA,
             STATE_SCHEMA,
             "append",
             GroupStateTimeout.EventTimeTimeout,
         )
     )
+
+
+def write_end_of_feed(spark: SparkSession, in_dir: str) -> None:
+    """Append the end-of-feed record to the watched directory ``in_dir``.
+
+    It moves the watermark past every real record, so every key's timeout
+    fires and releases and closes everything the key holds; the feed is
+    then over, as any later record falls below the watermark. Its doc_id is
+    ``END_OF_FEED_DOC_ID``; readers filter it out of the sink."""
+    spark.createDataFrame(
+        [(END_OF_FEED_DOC_ID, None, END_OF_FEED_TS, None, None,
+          END_OF_FEED_DOC_ID, None, None)],
+        INPUT_SCHEMA_DDL,
+    ).coalesce(1).write.mode("append").parquet(in_dir)
 
 
 def seed_rows_from_fragments(fragments: DataFrame) -> DataFrame:

@@ -77,37 +77,28 @@ def test_job_arg_probes():
 
 
 @pytest.mark.parametrize(
-    "flag", ["--max-gap-hours", "--max-dtok-rate", "--buffer-hours", "--hours-exp"]
+    "flag, value",
+    [
+        pytest.param(flag, value, id=flag)
+        for flag, value in [
+            ("--max-gap-hours", "0"),
+            ("--max-dtok-rate", "0"),
+            ("--buffer-hours", "0"),
+            ("--hours-exp", "0"),
+            ("--stream-mode", "sorted_prefix"),
+        ]
+    ],
 )
-def test_segmenter_params_only_threshold_surface(flag):
+def test_segmenter_params_only_threshold_surface(flag, value):
     """Thresholds come only through --segmenter-params, which validates
     them (a bare --max-dtok-rate 0 would divide by zero in the kernel's
-    score); the old per-threshold flags exit, and omitting the param string
-    gives the defaults."""
+    score); the old per-threshold flags and the removed --stream-mode (the
+    stream has one release rule) exit with argparse's error, and omitting
+    the param string gives the defaults."""
     import jobs.run_segment as job
 
-    with pytest.raises(SystemExit):
-        job.parse_args(["--input", "i", "--output", "o", flag, "0"])
+    with pytest.raises(SystemExit) as exc:
+        job.parse_args(["--input", "i", "--output", "o", flag, value])
+    assert exc.value.code == 2
     args = job.parse_args(["--input", "i", "--output", "o"])
     assert args.segmenter_params == SegmenterParams()
-
-
-def test_stream_mode_flag():
-    """--stream-mode surfaces both modes and rejects unknown ones
-    (ADVICE r03 item #3: the modes must be reachable from the CLI)."""
-    import jobs.run_segment as job
-
-    for mode in ("low_latency", "sorted_prefix"):
-        args = job.parse_args(
-            ["--input", "i", "--output", "o", "--mode", "stream",
-             "--stream-mode", mode]
-        )
-        assert args.stream_mode == mode
-    assert (
-        job.parse_args(["--input", "i", "--output", "o"]).stream_mode
-        == "low_latency"
-    )
-    with pytest.raises(SystemExit):
-        job.parse_args(
-            ["--input", "i", "--output", "o", "--stream-mode", "buffered"]
-        )

@@ -64,7 +64,6 @@ def test_gate_window_holds_composites():
         "safe_divide_least",
         "segmenter_full_segments",
         "segmenter_streaming",
-        "segmenter_streaming_sorted_prefix",
         "segmenter_incremental",
         "validate_vessel_identity",
         "pack_sequences",

@@ -8,9 +8,9 @@ import os
 
 from pyspark.sql import functions as F
 
-from tests.test_streaming import INPUT_SCHEMA, _feed, _run_stream, _await, PARAMS
+from tests.test_streaming import _read_drained, _run_stream, _await
 from pipe_segment_spark.sources.token_stream import token_stream
-from pipe_segment_spark.streaming.sink import read_sink
+from pipe_segment_spark.streaming.segmenter_stream import write_end_of_feed
 from tests.conftest import SF_DIR
 
 
@@ -40,11 +40,12 @@ def test_rocksdb_state_store_matches_default(spark, tmp_path):
         in_dir = os.path.join(base, "in")
         os.makedirs(in_dir)
         sample.coalesce(1).write.parquet(os.path.join(in_dir, "feed_0"))
+        write_end_of_feed(spark, in_dir)
         q = _run_stream(spark, in_dir, os.path.join(base, "out"), os.path.join(base, "ck"))
         _await(q)
         outputs[name] = sorted(
             (r["msgid"], r["frag_id"])
-            for r in read_sink(spark, os.path.join(base, "out"))
+            for r in _read_drained(spark, os.path.join(base, "out"))
             .where(F.col("kind") == "tagged")
             .collect()
         )

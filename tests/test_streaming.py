@@ -26,7 +26,11 @@ from pyspark.sql.types import (
 from pipe_segment_spark.config import SegmenterParams
 from pipe_segment_spark.pipeline import run_batch_pipeline
 from pipe_segment_spark.sources.token_stream import token_stream
-from pipe_segment_spark.streaming.segmenter_stream import stream_segment
+from pipe_segment_spark.streaming.segmenter_stream import (
+    END_OF_FEED_DOC_ID,
+    stream_segment,
+    write_end_of_feed,
+)
 from pipe_segment_spark.streaming.sink import idempotent_batch_writer, read_sink
 
 from tests.conftest import SF_DIR
@@ -98,6 +102,14 @@ def _await(q, timeout=120):
     assert not q.isActive
 
 
+def _read_drained(spark, out_dir):
+    """The sink of a feed that ended with ``write_end_of_feed``, without the
+    end-of-feed key."""
+    return read_sink(spark, out_dir).where(
+        F.col("doc_id") != END_OF_FEED_DOC_ID
+    )
+
+
 @pytest.fixture(scope="module")
 def stream_case(spark, tmp_path_factory):
     tmpdir = str(tmp_path_factory.mktemp("stream"))
@@ -120,8 +132,8 @@ def _batch_expected(full):
 def test_stream_equals_batch_and_recovers(spark, stream_case):
     """Feed days incrementally with a stop/restart (checkpoint recovery)
     between feeds; final tagged + segmap output must equal the batch engine
-    byte-for-byte. The final day's segmap rows emit via event-time timeout
-    once the watermark passes (availableNow drains all feeds)."""
+    byte-for-byte. The feed ends with the end-of-feed record, whose
+    watermark releases and closes everything each key still holds."""
     tmpdir, full, in_dir, paths = stream_case
     out_dir = os.path.join(tmpdir, "out")
     ckpt = os.path.join(tmpdir, "ckpt")
@@ -137,10 +149,11 @@ def test_stream_equals_batch_and_recovers(spark, stream_case):
     q = _run_stream(spark, in_dir, out_dir, ckpt)
     _await(q)
     _feed(spark, in_dir, paths[3], 3)
+    write_end_of_feed(spark, in_dir)
     q = _run_stream(spark, in_dir, out_dir, ckpt)
     _await(q)
 
-    result = read_sink(spark, out_dir)
+    result = _read_drained(spark, out_dir)
     got_tagged = {
         r["msgid"]: r["frag_id"]
         for r in result.where(F.col("kind") == "tagged").collect()
@@ -149,18 +162,11 @@ def test_stream_equals_batch_and_recovers(spark, stream_case):
         r["frag_id"]: (r["seg_id"], r["date"])
         for r in result.where(F.col("kind") == "segmap").collect()
     }
+    assert result.where(F.col("kind") == "segmap").count() == len(got_segmap)
 
     exp_tagged, exp_segmap = _batch_expected(full)
     assert got_tagged == exp_tagged
-    # stream closes days only when the watermark passes them: the last fed
-    # day may still be open. All closed days must match batch exactly.
-    open_days = {max(d for _, d in exp_segmap.values())}
-    exp_closed = {
-        f: v for f, v in exp_segmap.items() if v[1] not in open_days
-    }
-    for f, v in got_segmap.items():
-        assert exp_segmap[f] == v, f
-    assert set(got_segmap) >= set(exp_closed)
+    assert got_segmap == exp_segmap
 
 
 def test_exactly_once_replay(spark, stream_case, tmp_path):
@@ -222,13 +228,15 @@ def test_late_day_does_not_clobber_newer_state(spark, tmp_path):
         spark.createDataFrame(rows, INPUT_SCHEMA).coalesce(1).write.parquet(
             os.path.join(in_dir, f"feed_{i}")
         )
+        if rows is closer:
+            write_end_of_feed(spark, in_dir)
         run("3 days")
 
     batch = run_batch_pipeline(
         spark.createDataFrame(all_rows, INPUT_SCHEMA), PARAMS
     )
     exp_tagged = {r["msgid"]: r["frag_id"] for r in batch.tagged_records.collect()}
-    got = read_sink(spark, out_dir)
+    got = _read_drained(spark, out_dir)
     got_tagged = {
         r["msgid"]: r["frag_id"]
         for r in got.where(F.col("kind") == "tagged").collect()
@@ -237,10 +245,13 @@ def test_late_day_does_not_clobber_newer_state(spark, tmp_path):
     # the late record must have JOINED day-0's open fragment (same frag_id
     # as a1), not started a fresh one via a reset k-counter
     assert got_tagged["a2"] == got_tagged["a1"]
-    # closed days' segmap must match batch
-    exp_segmap = {r["frag_id"]: r["seg_id"] for r in batch.segmap.collect()}
-    for r in got.where(F.col("kind") == "segmap").collect():
-        assert exp_segmap[r["frag_id"]] == r["seg_id"]
+    exp_segmap = sorted(
+        (r["frag_id"], r["seg_id"]) for r in batch.segmap.collect()
+    )
+    assert sorted(
+        (r["frag_id"], r["seg_id"])
+        for r in got.where(F.col("kind") == "segmap").collect()
+    ) == exp_segmap
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
@@ -278,11 +289,11 @@ def test_watermark_drops_late_data(spark, tmp_path):
 
 def test_out_of_order_within_day_record_no_crash(spark, tmp_path):
     """A later microbatch delivering an in-watermark record whose timestamp
-    PRECEDES an open fragment's last_us must not crash the scoring loop
-    (h < 0 -> h**0.5 went complex -> TypeError before the 0<=hours gate,
-    ADVICE r02 high). The record scores 0 against every fragment it
-    precedes and starts a new fragment — the documented low-latency-mode
-    semantics for intra-day disorder across microbatches."""
+    PRECEDES records already delivered for its day must neither crash the
+    scoring loop (h < 0 made h**0.5 complex before the 0<=hours gate,
+    ADVICE r02 high) nor start a fragment of its own: the stream holds the
+    day's records until the watermark passes them and releases them in
+    order, so the record gets the batch engine's frag_id."""
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1)
@@ -322,14 +333,20 @@ def test_out_of_order_within_day_record_no_crash(spark, tmp_path):
         )
         run()
 
+    batch = run_batch_pipeline(
+        spark.createDataFrame(feed0 + late + closer, INPUT_SCHEMA), PARAMS
+    )
+    exp = {r["msgid"]: r["frag_id"] for r in batch.tagged_records.collect()}
     got = read_sink(spark, out_dir)
     tagged = {
         r["msgid"]: r["frag_id"]
         for r in got.where(F.col("kind") == "tagged").collect()
     }
+    # the closer moved the watermark past day 0: its records released
+    assert {m: tagged[m] for m in ("a0", "a_mid", "a1")} == {
+        m: exp[m] for m in ("a0", "a_mid", "a1")
+    }
     assert tagged["a_mid"] is not None  # processed, not crashed/dropped
-    assert tagged["a0"] == tagged["a1"]  # original fragment intact
-    assert tagged["a_mid"] != tagged["a0"]  # h<0 -> new fragment
 
 
 def test_fragment_loop_carried_state_earlier_timestamp():
@@ -449,11 +466,11 @@ def test_buffered_modes_intra_day_disorder_equals_batch(spark, tmp_path, mode):
     assert got_tagged["i0"] == exp_tagged["i0"]
 
 
-@pytest.mark.parametrize("mode", ["low_latency", "sorted_prefix"])
+@pytest.mark.parametrize("mode", ["sorted_prefix"])
 def test_buffered_modes_empty_token_array_is_noise(spark, tmp_path, mode):
     """A record with an EMPTY (non-null) token array is noise in the batch
-    kernel (len==0 -> noise). Both stream modes' ingestion must apply the
-    same payload rule — tokens=[] may not open or extend a fragment."""
+    kernel (len==0 -> noise). The stream's ingestion must apply the same
+    payload rule — tokens=[] may not open or extend a fragment."""
     import datetime as dt
 
     base = dt.datetime(2024, 1, 1)
@@ -511,7 +528,8 @@ def test_buffered_modes_empty_token_array_is_noise(spark, tmp_path, mode):
 
 
 class _FakeGroupState:
-    """Minimal GroupState stand-in for driving mode kernels directly."""
+    """Minimal GroupState stand-in for driving the stateful function
+    directly."""
 
     def __init__(self, wm_ms=0):
         self._val = None
@@ -553,7 +571,7 @@ def test_sorted_prefix_state_bounded_by_suffix():
         make_stateful_segmenter,
     )
 
-    fn = make_stateful_segmenter(PARAMS, "sorted_prefix")
+    fn = make_stateful_segmenter(PARAMS)
     base = dt.datetime(2024, 1, 1)
     hour_us = 3_600_000_000
 
@@ -617,89 +635,10 @@ def test_sorted_prefix_state_bounded_by_suffix():
     assert [all_frag["a0"], all_frag["a2"], all_frag["a3"]] == ids
 
 
-def test_modes_agree_on_in_order_feed():
-    """Both modes release through the same per-day run and differ only in
-    the release cut, so on an in-order feed (no record precedes one already
-    delivered) they emit identical tagged and segmap rows — sorted_prefix
-    just emits them later. Spark-free: drives the mode functions with a
-    fake GroupState over one watermark schedule."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pipe_segment_spark.streaming.segmenter_stream import (
-        make_stateful_segmenter,
-    )
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (
-            base + dt.timedelta(minutes=75 * i),  # distinct, spans 3+ days
-            90 if i % 11 == 0 else (i * 7) % 50,  # rate jumps: new fragments
-            f"m{i:02d}",
-            "IDENT" if i % 9 == 4 else "POS",
-            [] if i % 13 == 6 else [1, 2],  # empty token array: noise
-        )
-        for i in range(60)
-    ]
-    batches = [rows[0:7], rows[7:20], rows[20:21], rows[21:45], rows[45:]]
-
-    def frame(b):
-        # kernel_input(records, "ident_value") rows
-        return pd.DataFrame(
-            {
-                "doc_id": ["d1"] * len(b),
-                "timestamp": [r[0] for r in b],
-                "msgid": [r[2] for r in b],
-                "n_tok": [r[1] for r in b],
-                "rec_type": [r[3] for r in b],
-                "source": ["s"] * len(b),
-                "ident_value": [None] * len(b),
-                "has_payload": [len(r[4]) > 0 for r in b],
-            }
-        )
-
-    def run(mode):
-        fn = make_stateful_segmenter(PARAMS, mode)
-        st = _FakeGroupState()
-        parts = []
-        for b in batches:
-            parts += fn(("d1",), iter([frame(b)]), st)
-            # 6-hour watermark delay behind the newest delivered record
-            newest_ms = (b[-1][0] - dt.datetime(1970, 1, 1)).total_seconds()
-            st.wm_ms = int(newest_ms * 1000) - 6 * 3_600_000
-        st.hasTimedOut = True
-        parts += fn(("d1",), iter([]), st)
-        out = pd.concat(parts, ignore_index=True)
-        tagged = sorted(
-            zip(out.loc[out["kind"] == "tagged", "msgid"],
-                out.loc[out["kind"] == "tagged", "frag_id"])
-        )
-        segmap = sorted(
-            tuple(r)
-            for r in out.loc[
-                out["kind"] == "segmap",
-                ["frag_id", "seg_id", "date", "msg_count", "first_us",
-                 "last_us"],
-            ].itertuples(index=False)
-        )
-        return tagged, segmap
-
-    ll_tagged, ll_segmap = run("low_latency")
-    sp_tagged, sp_segmap = run("sorted_prefix")
-    assert len(ll_tagged) == len(rows)
-    assert len({d for _, _, d, *_ in ll_segmap}) >= 3  # several days closed
-    assert len({f for _, f in ll_tagged if f is not None}) > 3
-    assert ll_tagged == sp_tagged
-    assert ll_segmap == sp_segmap
-
-
 def test_stream_segment_rejects_unknown_mode():
-    from pipe_segment_spark.streaming.segmenter_stream import STREAM_MODES
-
-    assert STREAM_MODES == ("low_latency", "sorted_prefix")
+    """One release rule: the removed low_latency mode is an error."""
     with pytest.raises(ValueError, match="unknown stream mode"):
-        stream_segment(None, PARAMS, mode="buffered")
+        stream_segment(None, PARAMS, mode="low_latency")
 
 
 def test_stateful_udf_input_has_no_token_payload(spark, tmp_path):
@@ -711,19 +650,16 @@ def test_stateful_udf_input_has_no_token_payload(spark, tmp_path):
 
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
-    for mode in ("low_latency", "sorted_prefix"):
-        out = stream_segment(
-            spark.readStream.schema(INPUT_SCHEMA_DDL).parquet(in_dir),
-            PARAMS,
-            mode=mode,
-        )
-        plan = out._jdf.queryExecution().analyzed().toString()
-        (line,) = [
-            ln for ln in plan.splitlines()
-            if "FlatMapGroupsInPandasWithState" in ln
-        ]
-        assert "has_payload#" in line, line
-        assert "tokens#" not in line, line
+    out = stream_segment(
+        spark.readStream.schema(INPUT_SCHEMA_DDL).parquet(in_dir), PARAMS
+    )
+    plan = out._jdf.queryExecution().analyzed().toString()
+    (line,) = [
+        ln for ln in plan.splitlines()
+        if "FlatMapGroupsInPandasWithState" in ln
+    ]
+    assert "has_payload#" in line, line
+    assert "tokens#" not in line, line
 
 
 def _kernel_rows(records):
@@ -752,22 +688,28 @@ def _kernel_rows(records):
 
 
 def test_sorted_prefix_equals_segment_key_property():
-    """Property: sorted_prefix over ANY microbatch split of a key's records
+    """Property: the stream over ANY microbatch split of a key's records
     equals the batch kernel (``segment_key``) on the records it kept — the
-    same frag_id per record and the same (frag_id, seg_id, date) segmap.
-    Each microbatch first drops its rows at or below the watermark, as
-    Spark does, the watermark trails the newest record seen by a random
-    delay, and the feed ends with one timeout drain."""
+    same frag_id per record and the same (frag_id, seg_id, date) segmap,
+    each emitted once. Each microbatch first drops its rows at or below the
+    watermark, as Spark does; the watermark trails the newest record seen
+    by a random delay, and other keys move it further between this key's
+    microbatches. Records arrive in any order, or in event-time order up
+    to a random lateness. Whenever the watermark passes the key's timeout,
+    the key gets a timeout call, as in Spark; the feed ends by moving the
+    watermark past every record before the last one."""
     import numpy as np
     import pandas as pd
 
-    from hypothesis import given, settings, strategies as st
+    from hypothesis import example, given, settings, strategies as st
 
     from pipe_segment_spark.operators.kernel import segment_key
     from pipe_segment_spark.streaming.segmenter_stream import (
+        END_OF_FEED_TS,
         make_stateful_segmenter,
     )
 
+    hour_ms = 3_600_000
     record_st = st.tuples(
         st.integers(0, 3 * 24 * 4 - 1).map(lambda q: 15 * q),  # minute, ties
         st.one_of(st.none(), st.integers(0, 60)),  # n_tok
@@ -775,43 +717,85 @@ def test_sorted_prefix_equals_segment_key_property():
         st.sampled_from(["POS", "POS", "IDENT"]),
         st.sampled_from([None, "a", "b"]),
         st.sampled_from(["s", "t"]),
+        st.integers(0, 3 * 24 * 60),  # arrival lateness, minutes
     )
 
     @settings(max_examples=150, deadline=None)
     @given(
-        st.lists(record_st, min_size=1, max_size=40),
-        st.lists(st.integers(1, 39), max_size=6),
+        # small keys, and keys with enough records for a timeout to fire
+        # between microbatches of the same day
+        st.one_of(
+            st.lists(record_st, min_size=1, max_size=8),
+            st.lists(record_st, min_size=8, max_size=40),
+        ),
+        st.lists(st.integers(1, 39), min_size=2, max_size=12),
         st.sampled_from([0, 1, 6, 30]),
+        # hours other keys move the watermark after each microbatch
+        st.lists(st.sampled_from([0, 0, 0, 1, 2, 4]), min_size=13,
+                 max_size=13),
+        # hours a record may arrive late; None: any order
+        st.sampled_from([None, 0, 2, 12]),
     )
-    def check(records, cuts, delay_h):
+    # day 0 20:00 and day 1 05:00 arrive; other keys move the watermark to
+    # day 1 01:00, past the key's day-0 timeout; then day 1 03:00 arrives
+    @example(
+        records=[
+            (20 * 60, 10, True, "POS", None, "s", 0),
+            (29 * 60, 12, True, "POS", None, "s", 0),
+            (27 * 60, 11, True, "POS", None, "s", 0),
+        ],
+        cuts=[2],
+        delay_h=6,
+        others_h=[2] + [0] * 12,
+        late_h=None,
+    )
+    def check(records, cuts, delay_h, others_h, late_h):
+        if late_h is not None:
+            records = sorted(
+                records, key=lambda r: r[0] + r[6] % (late_h * 60 + 1)
+            )
         pdf = _kernel_rows(records)
         ts_ms = (
             pdf["timestamp"].to_numpy("datetime64[ms]").astype("int64")
         )
         bounds = [0, *sorted({c for c in cuts if c < len(pdf)}), len(pdf)]
-        fn = make_stateful_segmenter(PARAMS, "sorted_prefix")
+        fn = make_stateful_segmenter(PARAMS)
         state = _FakeGroupState()
         parts, kept = [], []
-        for lo, hi in zip(bounds[:-1], bounds[1:]):
+
+        def call(frames, timed_out):
+            state.hasTimedOut = timed_out
+            state.timeout_set = None  # Spark resets it on every call
+            parts.extend(fn(("d1",), iter(frames), state))
+
+        def fire_timeout():
+            if state.timeout_set is not None and (
+                state.wm_ms > state.timeout_set
+            ):
+                call([], True)
+
+        for (lo, hi), other_h in zip(zip(bounds[:-1], bounds[1:]), others_h):
             idx = np.arange(lo, hi)
             if state.wm_ms > 0:
                 idx = idx[ts_ms[idx] > state.wm_ms]  # late rows dropped
             kept += idx.tolist()
-            batch = pdf.iloc[idx].reset_index(drop=True)
-            parts += fn(("d1",), iter([batch]), state)
+            call([pdf.iloc[idx].reset_index(drop=True)], False)
             if kept:
                 newest = int(ts_ms[kept].max())
-                state.wm_ms = max(state.wm_ms, newest - delay_h * 3_600_000)
-        state.hasTimedOut = True
-        parts += fn(("d1",), iter([]), state)
+                state.wm_ms = max(state.wm_ms, newest - delay_h * hour_ms)
+            if state.wm_ms > 0:
+                state.wm_ms += other_h * hour_ms
+            fire_timeout()
+        state.wm_ms = int(END_OF_FEED_TS.timestamp() * 1000)
+        fire_timeout()
 
-        got_tagged, got_segmap = {}, set()
+        got_tagged, got_segmap = [], []
         for part in parts:
             if (part["kind"] == "tagged").all():
-                got_tagged.update(zip(part["msgid"], part["frag_id"]))
+                got_tagged += zip(part["msgid"], part["frag_id"])
             else:
-                got_segmap |= set(
-                    zip(part["frag_id"], part["seg_id"], part["date"])
+                got_segmap += zip(
+                    part["frag_id"], part["seg_id"], part["date"]
                 )
 
         want = segment_key(
@@ -820,8 +804,10 @@ def test_sorted_prefix_equals_segment_key_property():
         )
         tagged = want[want["kind"] == "tagged"]
         frags = want[want["kind"] == "fragment"]
-        assert got_tagged == dict(zip(tagged["msgid"], tagged["frag_id"]))
-        assert got_segmap == set(
+        assert sorted(got_tagged, key=str) == sorted(
+            zip(tagged["msgid"], tagged["frag_id"]), key=str
+        )
+        assert sorted(got_segmap) == sorted(
             zip(
                 frags["frag_id"],
                 frags["seg_id"],
@@ -836,7 +822,8 @@ def test_sorted_prefix_equals_segment_key_property():
 def test_per_day_buffer_state_still_decodes():
     """A checkpoint written with the earlier per-day buffer
     ({day_us: {column: [...]}}) decodes into the flat buffer, the days
-    concatenated in day order, and drains like a flat one."""
+    concatenated in day order, and releases like a flat one once the
+    watermark passes its rows."""
     import json
 
     import pandas as pd
@@ -867,13 +854,12 @@ def test_per_day_buffer_state_still_decodes():
     assert buf["msgid"] == ["a1", "a0", "b0"]
     assert buf["t"] == [d0 + 2 * hour_us, d0 + hour_us, d0 + day_us + hour_us]
 
-    state = _FakeGroupState()
+    # a timeout call once the watermark has passed both days
+    state = _FakeGroupState(wm_ms=(d0 + 2 * day_us) // 1000)
     state.update((old,))
     state.hasTimedOut = True
     out = pd.concat(
-        list(make_stateful_segmenter(PARAMS, "sorted_prefix")(
-            ("d1",), iter([]), state
-        )),
+        list(make_stateful_segmenter(PARAMS)(("d1",), iter([]), state)),
         ignore_index=True,
     )
     tagged = out[out["kind"] == "tagged"]
@@ -1062,6 +1048,7 @@ def test_exactly_once_crash_mid_microbatch(spark, stream_case, tmp_path, crash_m
     os.makedirs(in_dir, exist_ok=True)
     for i, p in enumerate(paths):
         _feed(spark, in_dir, p, i)
+    write_end_of_feed(spark, in_dir)
 
     inner = idempotent_batch_writer(out_dir)
     crashed = {"fired": False, "batch_id": None, "rows_written": None}
@@ -1094,7 +1081,7 @@ def test_exactly_once_crash_mid_microbatch(spark, stream_case, tmp_path, crash_m
     q = _run_stream(spark, in_dir, out_dir, ckpt, writer=faulty, max_files=1)
     _await(q)
 
-    result = read_sink(spark, out_dir)
+    result = _read_drained(spark, out_dir)
     got_tagged = {
         r["msgid"]: r["frag_id"]
         for r in result.where(F.col("kind") == "tagged").collect()
@@ -1123,11 +1110,7 @@ def test_exactly_once_crash_mid_microbatch(spark, stream_case, tmp_path, crash_m
 
     exp_tagged, exp_segmap = _batch_expected(full)
     assert got_tagged == exp_tagged
-    open_days = {max(d for _, d in exp_segmap.values())}
-    exp_closed = {f: v for f, v in exp_segmap.items() if v[1] not in open_days}
-    for f, v in got_segmap.items():
-        assert exp_segmap[f] == v, f
-    assert set(got_segmap) >= set(exp_closed)
+    assert got_segmap == exp_segmap
 
 
 def test_merge_pending_property_vs_reference_fold():
