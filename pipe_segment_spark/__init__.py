@@ -6,8 +6,9 @@ stateful cross-window matching) as an idiomatic Spark engine:
 
 - DataFrame/Catalyst expressions for all relational operators
   (reference: pipe_segment/pipeline.py:159-301).
-- Arrow-vectorized ``applyInPandas`` for the per-key stateful inner loops
-  (reference: transform/fragment_implementation.py, create_segment_map.py).
+- Arrow-vectorized ``mapInPandas`` over doc_id-sorted batches for the
+  per-key stateful inner loops, one Python call per batch (reference:
+  transform/fragment_implementation.py, create_segment_map.py).
 - Structured Streaming ``applyInPandasWithState`` for the unbounded path.
 - Token-sequence data model per the north-star recast: records are
   ``(doc_id, source, timestamp, tokens:array<int32>, n_tok, msgid, rec_type)``

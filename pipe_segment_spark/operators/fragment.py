@@ -4,17 +4,18 @@
   heavy ``tokens`` payload never does — it is reduced to a boolean
   ``has_payload`` JVM-side.
 - ``tag_records``: puts the token payload (and every other record column)
-  back onto the kernel's per-record frag_id/seg_id map with a shuffle-hash
-  join on (doc_id, msgid).
+  back onto the kernel's frag_id/seg_id tags with a NULL-safe shuffle-hash
+  join on the kernel's record columns (``kernel.RECORD_KEY``): one row
+  per record, whatever its msgid.
 - ``attach_boundary_tokens``: the first/last token payloads of fragment
   summaries (the reference's fragment checkpoint format), joined by
   boundary msgid.
 - ``assign_frag_ids``: the fragmenter alone over one key's kernel input,
   run without Spark by the property tests and the kernel timings.
 
-``kernel_input`` feeds both the batch segmenter (one ``applyInPandas`` per
-doc_id over ``kernel.segment_key``, pipeline.py) and the stream's
-``applyInPandasWithState`` (streaming/segmenter_stream.py).
+``kernel_input`` feeds both the batch segmenter (one ``mapInPandas`` over
+doc_id-sorted batches, ``kernel.segment_batches``, pipeline.py) and the
+stream's ``applyInPandasWithState`` (streaming/segmenter_stream.py).
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pipe_segment_spark.config import SegmenterParams
-from pipe_segment_spark.operators.kernel import _run_sorted, sort_group
+from pipe_segment_spark.operators.kernel import RECORD_KEY, _run_sorted, sort_group
 
 INPUT_COLS = [
     "doc_id",
@@ -54,17 +55,17 @@ def _with_input_cols(records: DataFrame) -> DataFrame:
     )
 
 
+def _has_payload():
+    return (
+        F.col("tokens").isNotNull()
+        & (F.size("tokens") > 0)
+        & F.col("n_tok").isNotNull()
+    ).alias("has_payload")
+
+
 def kernel_input(records: DataFrame, *extra: str) -> DataFrame:
     """The kernel columns, ``extra`` record columns and ``has_payload``."""
-    return _with_input_cols(records).select(
-        *_KERNEL_COLS,
-        *extra,
-        (
-            F.col("tokens").isNotNull()
-            & (F.size("tokens") > 0)
-            & F.col("n_tok").isNotNull()
-        ).alias("has_payload"),
-    )
+    return _with_input_cols(records).select(*_KERNEL_COLS, *extra, _has_payload())
 
 
 def assign_frag_ids(pdf, params: SegmenterParams):
@@ -79,16 +80,31 @@ def assign_frag_ids(pdf, params: SegmenterParams):
     return pd.DataFrame(out, copy=False)
 
 
-def tag_records(records: DataFrame, frag_map: DataFrame) -> DataFrame:
-    """Full records + the map's columns (frag_id, and seg_id when the map
-    has it), NULL for records the map lacks.
+def tag_records(records: DataFrame, tags: DataFrame) -> DataFrame:
+    """Full records + the tags' frag_id and seg_id, one row per record.
 
-    A shuffle-hash join on (doc_id, msgid) — never broadcast: the map has
-    one row per record, not per fragment."""
-    extra = [c for c in frag_map.columns if c not in ("doc_id", "msgid")]
-    return _with_input_cols(records).join(
-        frag_map.hint("shuffle_hash"), ["doc_id", "msgid"], "left"
-    ).select(*INPUT_COLS, *extra)
+    ``tags`` has one row per distinct ``RECORD_KEY`` tuple, which is the
+    join key, NULL-safe: a record with a NULL msgid is tagged, and copies
+    of a record each get the one row of their tuple. A shuffle-hash join —
+    never broadcast: the tags have one row per record, not per fragment.
+    Only ``has_payload`` is computed from the token payload for the key;
+    the tokens themselves never cross into Python."""
+    extra = [c for c in tags.columns if c not in RECORD_KEY]
+    tags = tags.select(*[F.col(c).alias(f"_tag_{c}") for c in RECORD_KEY], *extra)
+    # the kernel emits its input timestamp as TIMESTAMP; the records' may be
+    # TIMESTAMP_NTZ, which casts under the same session time zone
+    on = [
+        (F.col(c).cast("timestamp") if c == "timestamp" else F.col(c)).eqNullSafe(
+            F.col(f"_tag_{c}")
+        )
+        for c in RECORD_KEY
+    ]
+    return (
+        _with_input_cols(records)
+        .withColumn("has_payload", _has_payload())
+        .join(tags.hint("shuffle_hash"), on, "left")
+        .select(*INPUT_COLS, *extra)
+    )
 
 
 def attach_boundary_tokens(fragments: DataFrame, records: DataFrame) -> DataFrame:

@@ -1,7 +1,7 @@
 """Per-doc_id kernels: the one implementation of the segmenter's
 sequential work, shared by the batch job and the stream.
 
-These run inside Arrow-batched ``applyInPandas`` / ``applyInPandasWithState``
+These run inside Arrow-batched ``mapInPandas`` / ``applyInPandasWithState``
 UDFs — the only places where the engine leaves Catalyst, because the
 semantics are inherently per-key sequential (the reference's gpsdio Segmenter
 inner loop, transform/fragment_implementation.py:86-122, and the greedy
@@ -16,7 +16,9 @@ matcher, transform/create_segment_map.py:84-147, are the same).
 - ``segment_key``: the whole batch segmenter for one key — the per-day run
   over every day, the greedy merge, the counted identity/destination
   arrays and the per-(seg_id, day) rollup — returned as one frame tagged
-  by ``kind`` (``KERNEL_SCHEMA``).
+  by ``kind`` (``KERNEL_SCHEMA``), one tagged row per distinct record.
+- ``segment_batches``: the batch job's one Python call per Arrow batch —
+  ``segment_key`` on each doc_id run of a doc_id-sorted partition.
 
 The stream (streaming/segmenter_stream.py) calls ``_run_sorted`` on the
 records it releases and ``merge_segments`` on the days it closes.
@@ -73,27 +75,51 @@ class OpenFragState:
         self.frag_id = frag_id
 
 
-def _tiebreak_keys(pdf: pd.DataFrame):
+def _tiebreak_keys(msgid, n_tok, source, rec_type, ident_value):
     """Secondary sort keys (everything after timestamp), cheapest-last so
     they feed np.lexsort directly. Fixed-width unicode conversion is the
     expensive part — callers only build these for rows with tied
-    timestamps. NULL n_tok sorts greatest whatever the column's dtype
-    (int, float64 with NaN as Arrow delivers nulls, or object with None):
-    n_tok is an int, so float64 holds it exactly and +inf tops it."""
-    msgid = pdf["msgid"].fillna("").to_numpy(dtype="U")
-    n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.inf)
-    source = pdf["source"].fillna("").to_numpy(dtype="U")
-    rec = pdf["rec_type"].fillna("").to_numpy(dtype="U")
-    if "ident_value" in pdf.columns:
-        ident = pdf["ident_value"].fillna("").to_numpy(dtype="U")
-    else:
-        ident = np.zeros(len(pdf), dtype="U1")
-    return ident, rec, source, n_tok, msgid
+    timestamps. Strings are object arrays (NULL -> ''; ``ident_value`` may
+    be None: no such column); ``n_tok`` is float64 with NaN for NULL, which
+    sorts greatest: n_tok is an int, so float64 holds it exactly and +inf
+    tops it."""
+
+    def blank(a):
+        return np.where(pd.isna(a), "", a).astype("U")
+
+    ident = (
+        np.zeros(len(msgid), dtype="U1") if ident_value is None else blank(ident_value)
+    )
+    n_tok = np.where(np.isnan(n_tok), np.inf, n_tok)
+    return ident, blank(rec_type), blank(source), n_tok, blank(msgid)
 
 
 def sort_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """Deterministic multi-key sort (reference fragment.py:115-140): stable
-    mergesort; None -> greatest for numerics / '' for strings.
+    mergesort; None -> greatest for numerics / '' for strings."""
+
+    def keys(rows):
+        sub = pdf.iloc[rows]
+        return _tiebreak_keys(
+            sub["msgid"].to_numpy(dtype=object),
+            sub["n_tok"].to_numpy(dtype="float64", na_value=np.nan),
+            sub["source"].to_numpy(dtype=object),
+            sub["rec_type"].to_numpy(dtype=object),
+            sub["ident_value"].to_numpy(dtype=object)
+            if "ident_value" in sub.columns
+            else None,
+        )
+
+    order = _sort_order(
+        pdf["timestamp"].to_numpy("datetime64[us]").astype("int64"), keys
+    )
+    return pdf if order is None else pdf.iloc[order]
+
+
+def _sort_order(ts, tiebreak_keys):
+    """The ``sort_group`` order of rows with int64 timestamps ``ts``, or
+    None when they are in it already; ``tiebreak_keys(rows)`` gives
+    ``_tiebreak_keys`` of the rows at positions ``rows``.
 
     Timestamps are the primary key and, in real feeds, almost always unique
     within a key — so the tie-break keys (five fixed-width unicode
@@ -103,31 +129,26 @@ def sort_group(pdf: pd.DataFrame) -> pd.DataFrame:
     ``lexsort((ident, rec, source, n_tok, msgid, ts))``: rows with distinct
     timestamps never interleave with a tied run, and stable sorts preserve
     original index order on full ties either way."""
-    n = len(pdf)
-    if n <= 1:
-        return pdf
-    ts = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
-    d = np.diff(ts)
-    if (d > 0).all():  # already strictly increasing: identity order
-        return pdf
+    n = len(ts)
+    if n <= 1 or (np.diff(ts) > 0).all():  # strictly increasing: identity
+        return None
     order = np.argsort(ts, kind="stable")
     ts_sorted = ts[order]
     eq = np.flatnonzero(np.diff(ts_sorted) == 0)
     if eq.size == 0:  # unique timestamps: ts alone is the total order
-        return pdf.iloc[order]
+        return order
     # tied runs: refine ONLY the tied rows with the secondary keys
     tied = np.zeros(n, dtype=bool)
     tied[eq] = True
     tied[eq + 1] = True
     tied_pos = np.flatnonzero(tied)  # positions (in ts-sorted order)
     rows = order[tied_pos]  # original row indices, run-grouped + stable
-    sub = pdf.iloc[rows]
-    ident, rec, source, n_tok, msgid = _tiebreak_keys(sub)
+    ident, rec, source, n_tok, msgid = tiebreak_keys(rows)
     suborder = np.lexsort(
         (ident, rec, source, n_tok, msgid, ts_sorted[tied_pos])
     )
     order[tied_pos] = rows[suborder]
-    return pdf.iloc[order]
+    return order
 
 
 def _fragment_loop(
@@ -227,11 +248,28 @@ def _run_sorted(doc_id, pdf, frag_days, pending, params):
     and positional rows with a frag_id merge into the ``pending`` boundary
     summaries. Returns the frag_id of every row (None = noise or an
     unattached identity record) as an object array."""
-    ts_us = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
+    return _run_days(
+        doc_id,
+        pdf["timestamp"].to_numpy("datetime64[us]").astype("int64"),
+        pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan),
+        pdf["has_payload"].to_numpy(dtype=bool),
+        pdf["rec_type"].to_numpy(dtype=object),
+        pdf["msgid"].to_numpy(dtype=object),
+        frag_days,
+        pending,
+        params,
+    )
+
+
+def _run_days(
+    doc_id, ts_us, n_tok, has_payload, rec_type, msgid, frag_days, pending, params
+):
+    """``_run_sorted`` over the record columns as numpy arrays: int64
+    epoch-micro timestamps, float64 n_tok (NaN = NULL), bool has_payload,
+    object rec_type and msgid."""
     day_us = (ts_us // US_PER_DAY) * US_PER_DAY
-    n_tok = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
-    noise = ~pdf["has_payload"].to_numpy(dtype=bool) | np.isnan(n_tok)
-    is_ident = pdf["rec_type"].to_numpy(dtype=object) == "IDENT"
+    noise = ~has_payload | np.isnan(n_tok)
+    is_ident = rec_type == "IDENT"
     frag_ids: list = []
     # timestamp-sorted, so every day is one contiguous slice
     cuts = [0, *(np.flatnonzero(np.diff(day_us)) + 1).tolist(), len(ts_us)]
@@ -258,7 +296,7 @@ def _run_sorted(doc_id, pdf, frag_days, pending, params):
         ts_us[pos],
         n_tok[pos].astype("int64"),
         day_us[pos],
-        pdf["msgid"].to_numpy(dtype=object)[pos],
+        msgid[pos],
     )
     return fid_arr
 
@@ -418,9 +456,28 @@ def greedy_merge(
 
 COUNTED_TYPE = "array<struct<value:string,count:bigint>>"
 
+# A record as the batch kernel sees it (``fragment.kernel_input``'s columns
+# with ident_value and dest_value). Copies of a record get the same frag_id
+# and seg_id: they tie on every sort key, noise and identity records leave
+# the fragmenter's state as they found it, and a positional record leaves
+# its fragment at score 1 for its copy — the highest score, which no
+# earlier-opened fragment reaches (the first copy would have joined it).
+RECORD_KEY = [
+    "doc_id",
+    "timestamp",
+    "msgid",
+    "n_tok",
+    "rec_type",
+    "source",
+    "ident_value",
+    "dest_value",
+    "has_payload",
+]
+
 # One frame per key, tagged by ``kind``; each kind fills its own columns and
 # leaves the rest NULL:
-#   tagged    doc_id, msgid, frag_id, seg_id — one row per record;
+#   tagged    the ``RECORD_KEY`` columns, frag_id, seg_id — one row per
+#             distinct record (timestamp is the record's);
 #   fragment  the fragment summary, its seg_id and counted arrays, and its
 #             segment's row for that day: the matcher joins at most one
 #             fragment to a segment per day, so each (seg_id, day) segment
@@ -435,7 +492,8 @@ KERNEL_SCHEMA = (
     f"last_msgid string, identities {COUNTED_TYPE}, "
     f"destinations {COUNTED_TYPE}, first_timestamp timestamp, "
     f"cumulative_msg_count bigint, cumulative_identities {COUNTED_TYPE}, "
-    f"cumulative_destinations {COUNTED_TYPE}"
+    f"cumulative_destinations {COUNTED_TYPE}, n_tok int, rec_type string, "
+    "source string, ident_value string, dest_value string, has_payload boolean"
 )
 
 
@@ -447,27 +505,98 @@ def _counted(counter) -> list:
 def segment_key(pdf: pd.DataFrame, params: SegmenterParams) -> pd.DataFrame:
     """The batch segmenter for one doc_id (``KERNEL_SCHEMA`` rows).
 
-    ``pdf``: the key's records — doc_id, timestamp, msgid, n_tok, rec_type,
-    source, ident_value, dest_value, has_payload. The per-day run tags the
-    records and summarizes the fragments, the greedy matcher assigns
-    seg_ids over all days, attached identity records count into their
-    fragment's identities/destinations, and each segment's fragments, one
-    per day in day order, accumulate the running totals."""
-    pdf = sort_group(pdf)
-    doc_id = pdf["doc_id"].iat[0]
+    ``pdf``: the key's records — the ``RECORD_KEY`` columns."""
+    return _kernel_frame(*_segment_run(_record_columns(pdf), params))
+
+
+def segment_batches(batches, params: SegmenterParams):
+    """The batch segmenter over one partition's record batches, sorted by
+    doc_id: ``segment_key`` on every doc_id run, one output frame per batch
+    (``KERNEL_SCHEMA``). The run at a batch's end may go on in the next
+    batch, so its pieces wait in a list and are concatenated once, when the
+    next doc_id starts: a key spread over many batches costs linear time.
+    Columns leave pandas once per batch, and the output frame is built once
+    per batch, not per key."""
+    pieces: list[dict] = []
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        cols = _record_columns(pdf)
+        doc = cols["doc_id"]
+        cuts = [0, *(np.flatnonzero(doc[1:] != doc[:-1]) + 1).tolist(), len(doc)]
+        tagged, frags = [], []
+        for lo, hi in zip(cuts[:-1], cuts[1:]):
+            if pieces and pieces[0]["doc_id"][0] != doc[lo]:
+                key_tagged, key_frags = _segment_run(_concat_columns(pieces), params)
+                tagged.append(key_tagged)
+                frags += key_frags
+                pieces = []
+            pieces.append({c: a[lo:hi] for c, a in cols.items()})
+        if tagged:
+            yield _kernel_frame(_concat_columns(tagged), frags)
+    if pieces:
+        yield _kernel_frame(*_segment_run(_concat_columns(pieces), params))
+
+
+def _record_columns(pdf: pd.DataFrame) -> dict:
+    """A frame's ``RECORD_KEY`` columns as numpy arrays: timestamp in int64
+    epoch micros, n_tok float64 (NaN = NULL), has_payload bool, the rest
+    object."""
+    cols = {
+        c: pdf[c].to_numpy(dtype=object)
+        for c in ("doc_id", "msgid", "rec_type", "source", "ident_value", "dest_value")
+    }
+    cols["timestamp"] = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
+    cols["n_tok"] = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
+    cols["has_payload"] = pdf["has_payload"].to_numpy(dtype=bool)
+    return cols
+
+
+def _concat_columns(parts: list[dict]) -> dict:
+    if len(parts) == 1:
+        return parts[0]
+    return {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+
+
+_TIEBREAK_COLS = ("msgid", "n_tok", "source", "rec_type", "ident_value")
+
+
+def _segment_run(cols: dict, params: SegmenterParams):
+    """``segment_key``'s work on one key's ``_record_columns``. The per-day
+    run tags the records and summarizes the fragments, the greedy matcher
+    assigns seg_ids over all days, attached identity records count into
+    their fragment's identities/destinations, and each segment's fragments,
+    one per day in day order, accumulate the running totals. Returns the
+    record columns, sorted, one row per distinct record, with frag_id and
+    seg_id, and the fragment rows as dicts."""
+    order = _sort_order(
+        cols["timestamp"],
+        lambda rows: _tiebreak_keys(*(cols[c][rows] for c in _TIEBREAK_COLS)),
+    )
+    if order is not None:
+        cols = {c: a[order] for c, a in cols.items()}
+    ts_us = cols["timestamp"]
+    doc_id = cols["doc_id"][0]
     frags: list[dict] = []
-    fid = _run_sorted(doc_id, pdf, {}, frags, params)
+    fid = _run_days(
+        doc_id,
+        ts_us,
+        cols["n_tok"],
+        cols["has_payload"],
+        cols["rec_type"],
+        cols["msgid"],
+        {},
+        frags,
+        params,
+    )
     for f, seg_id in merge_segments(frags, params)[0]:
+        f["doc_id"] = doc_id
         f["seg_id"] = seg_id
 
     counts = {f["frag_id"]: (Counter(), Counter()) for f in frags}
-    attached = np.not_equal(fid, None) & (
-        pdf["rec_type"].to_numpy(dtype=object) == "IDENT"
-    )
+    attached = np.not_equal(fid, None) & (cols["rec_type"] == "IDENT")
     for f, iv, dv in zip(
-        fid[attached],
-        pdf["ident_value"].to_numpy(dtype=object)[attached],
-        pdf["dest_value"].to_numpy(dtype=object)[attached],
+        fid[attached], cols["ident_value"][attached], cols["dest_value"][attached]
     ):
         idents, dests = counts[f]
         if iv is not None:
@@ -494,40 +623,71 @@ def segment_key(pdf: pd.DataFrame, params: SegmenterParams) -> pd.DataFrame:
                 cumulative_destinations=_counted(seg_dests),
             )
 
-    n, n_all = len(pdf), len(pdf) + len(frags)
+    # one tagged row per distinct record; copies tie on timestamp
+    tied = np.flatnonzero(np.diff(ts_us) == 0)
+    if tied.size:
+        rows = np.union1d(tied, tied + 1)
+        null_nt = np.isnan(cols["n_tok"][rows])
+        keys = zip(
+            null_nt.tolist(),
+            np.where(null_nt, 0, cols["n_tok"][rows]).tolist(),
+            *(cols[c][rows].tolist() for c in RECORD_KEY if c != "n_tok"),
+        )
+        seen: set = set()
+        keep = np.ones(len(ts_us), dtype=bool)
+        for i, key in zip(rows.tolist(), keys):
+            keep[i] = key not in seen
+            seen.add(key)
+        cols, fid = {c: a[keep] for c, a in cols.items()}, fid[keep]
+    seg_of = {f["frag_id"]: f["seg_id"] for f in frags}
+    seg = np.array([seg_of.get(f) for f in fid], dtype=object)
+    return dict(cols, frag_id=fid, seg_id=seg), frags
 
-    def column(name):
-        return [f[name] for f in frags]
 
-    def objects(tagged=None, frag=None):
-        out = np.full(n_all, None, dtype=object)
-        if tagged is not None:
-            out[:n] = tagged
+def _kernel_frame(records: dict, frags: list[dict]) -> pd.DataFrame:
+    """The ``KERNEL_SCHEMA`` frame of ``_segment_run``'s tagged record
+    columns and fragment rows (of any number of keys)."""
+    n, m = len(records["doc_id"]), len(frags)
+
+    def column(name, dtype=object):
+        return np.fromiter((f[name] for f in frags), dtype=dtype, count=m)
+
+    def objects(name=None, frag=None):
+        out = np.full(n + m, None, dtype=object)
+        if name is not None:
+            out[:n] = records[name]
         if frag is not None:
-            out[n:] = np.fromiter(column(frag), dtype=object, count=len(frags))
+            out[n:] = column(frag)
         return out
 
-    def ints(frag):
-        vals = np.zeros(n_all, dtype="int64")
-        vals[n:] = column(frag)
-        return pd.arrays.IntegerArray(vals, np.arange(n_all) < n)
+    def ints(frag=None, name=None):
+        vals = np.zeros(n + m, dtype="int64")
+        null = np.ones(n + m, dtype=bool)
+        if frag is not None:
+            vals[n:] = column(frag, "int64")
+            null[n:] = False
+        if name is not None:
+            null[:n] = np.isnan(records[name])
+            vals[:n] = np.where(null[:n], 0, records[name])
+        return pd.arrays.IntegerArray(vals, null)
 
-    def stamps(frag):
-        us = np.full(n_all, np.iinfo(np.int64).min, dtype="int64")  # NaT
-        us[n:] = column(frag)
+    def stamps(frag, name=None):
+        us = np.full(n + m, np.iinfo(np.int64).min, dtype="int64")  # NaT
+        us[n:] = column(frag, "int64")
+        if name is not None:
+            us[:n] = records[name]
         return us.view("datetime64[us]").astype("datetime64[ns]")
 
-    seg_of = {f["frag_id"]: f["seg_id"] for f in frags}
-    kind = np.full(n_all, "fragment", dtype=object)
+    kind = np.full(n + m, "fragment", dtype=object)
     kind[:n] = "tagged"
     return pd.DataFrame(
         {
             "kind": kind,
-            "doc_id": np.full(n_all, doc_id, dtype=object),
-            "msgid": objects(tagged=pdf["msgid"].to_numpy(dtype=object)),
-            "frag_id": objects(fid, "frag_id"),
-            "seg_id": objects([seg_of.get(f) for f in fid], "seg_id"),
-            "timestamp": stamps("day_us"),
+            "doc_id": objects("doc_id", "doc_id"),
+            "msgid": objects("msgid"),
+            "frag_id": objects("frag_id", "frag_id"),
+            "seg_id": objects("seg_id", "seg_id"),
+            "timestamp": stamps("day_us", "timestamp"),
             "msg_count": ints("msg_count"),
             "first_msg_timestamp": stamps("first_us"),
             "last_msg_timestamp": stamps("last_us"),
@@ -541,6 +701,12 @@ def segment_key(pdf: pd.DataFrame, params: SegmenterParams) -> pd.DataFrame:
             "cumulative_msg_count": ints("cumulative_msg_count"),
             "cumulative_identities": objects(frag="cumulative_identities"),
             "cumulative_destinations": objects(frag="cumulative_destinations"),
+            "n_tok": ints(name="n_tok"),
+            "rec_type": objects("rec_type"),
+            "source": objects("source"),
+            "ident_value": objects("ident_value"),
+            "dest_value": objects("dest_value"),
+            "has_payload": objects("has_payload"),
         },
         copy=False,
     )

@@ -4,20 +4,25 @@ Mirrors the reference SegmentPipeline.pipeline() DAG (pipeline.py:159-301)
 as ONE per-key kernel pass:
 
     records --kernel_input (narrow projection, tokens -> has_payload)
-            --groupBy(doc_id).applyInPandas(kernel.segment_key)--> rows
+            --repartition(n, doc_id), sortWithinPartitions(doc_id, timestamp)
+            --mapInPandas(kernel.segment_batches)--> rows
     rows (persisted once, tagged by ``kind``):
-        'tagged'   --(doc_id, msgid) shuffle-hash join onto records--> tagged
+        'tagged'   --NULL-safe shuffle-hash join on the kernel's record
+                     columns (``kernel.RECORD_KEY``) onto records--> tagged
         'fragment' --projections--> fragments, segmap, segments
 
-Per doc_id the kernel sorts the records, runs the per-day fragmenter,
-greedy-merges the days' fragments into segments, counts each fragment's
-identity/destination values and rolls up the segments day by day — a
-segment's row for a day is one fragment's row, since the matcher joins at
-most one fragment to a segment per day. That is the reference's
-fragmenter, CreateSegmentMap, tag-with-seg_id joins and CreateSegments,
-all inside the one group the reference already keys them on (ssvid). The
-only Spark work left is the scan, the doc_id exchange and the join that
-puts the token payload back onto the messages.
+The kernel makes one Python call per Arrow batch, not per doc_id: each
+batch of a partition holds whole doc_id runs (the last one may go on in the
+next batch), and ``segment_key`` runs on each. Per doc_id it sorts the
+records, runs the per-day fragmenter, greedy-merges the days' fragments
+into segments, counts each fragment's identity/destination values and
+rolls up the segments day by day — a segment's row for a day is one
+fragment's row, since the matcher joins at most one fragment to a segment
+per day. That is the reference's fragmenter, CreateSegmentMap,
+tag-with-seg_id joins and CreateSegments, all inside the one group the
+reference already keys them on (ssvid). The only Spark work left is the
+scan, the doc_id exchange and sort, and the join that puts the token
+payload back onto the messages.
 """
 
 from __future__ import annotations
@@ -30,7 +35,11 @@ from pyspark.storagelevel import StorageLevel
 
 from pipe_segment_spark.config import DEFAULT_PARAMS, SegmenterParams
 from pipe_segment_spark.operators.fragment import kernel_input, tag_records
-from pipe_segment_spark.operators.kernel import KERNEL_SCHEMA, segment_key
+from pipe_segment_spark.operators.kernel import (
+    KERNEL_SCHEMA,
+    RECORD_KEY,
+    segment_batches,
+)
 
 
 @dataclass
@@ -46,13 +55,17 @@ def run_batch_pipeline(
     params: SegmenterParams = DEFAULT_PARAMS,
     persist: bool = True,
 ) -> SegmentOutputs:
-    # groupBy itself hash-partitions on doc_id — an extra repartition()
-    # would double the shuffle
+    # an explicit partition count: AQE does not coalesce a
+    # REPARTITION_BY_NUM exchange into a few large Python tasks. The sort
+    # on timestamp too hands each doc_id run over in time order, so the
+    # kernel's own sort only re-orders tied timestamps.
+    n = int(records.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     rows = (
         kernel_input(records, "ident_value", "dest_value")
-        .groupBy("doc_id")
-        .applyInPandas(
-            lambda key, pdf: segment_key(pdf, params), schema=KERNEL_SCHEMA
+        .repartition(n, "doc_id")
+        .sortWithinPartitions("doc_id", "timestamp")
+        .mapInPandas(
+            lambda batches: segment_batches(batches, params), schema=KERNEL_SCHEMA
         )
     )
     if persist:
@@ -62,7 +75,7 @@ def run_batch_pipeline(
     tagged = tag_records(
         records,
         rows.where(F.col("kind") == "tagged").select(
-            "doc_id", "msgid", "frag_id", "seg_id"
+            *RECORD_KEY, "frag_id", "seg_id"
         ),
     )
     frag_rows = rows.where(F.col("kind") == "fragment")

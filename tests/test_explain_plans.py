@@ -3,7 +3,8 @@ must not silently degrade (PLANS.md documents the audited shapes).
 
 Checks: predicate pushdown reaches the scan, column pruning holds, the
 frag_map map-back join never broadcasts, the tiny-side joins do broadcast,
-sessionization shuffles exactly once.
+sessionization shuffles exactly once, the batch kernel reads one doc_id
+exchange with a fixed partition count.
 """
 
 from __future__ import annotations
@@ -115,8 +116,30 @@ def test_segments_path_no_token_payload(spark):
             or "transform(sequence" in line
             or "has_payload" in line
         ), f"token payload outside the has_payload reduction: {line.strip()[:200]}"
-        assert "Exchange" not in line and "FlatMapGroupsInPandas" not in line
+        assert "Exchange" not in line
+        assert "FlatMapGroupsInPandas" not in line and "MapInPandas" not in line
     # segmap is a projection of the kernel's fragment rows: its plan must
     # not contain a counted-array collect (sort_array / collect_list)
     segmap_plan = _plan(out.segmap)
     assert "sort_array" not in segmap_plan and "collect_list" not in segmap_plan
+
+
+def test_kernel_exchange_fixed_partition_count(spark):
+    """The batch kernel reads one doc_id exchange with an explicit
+    partition count (REPARTITION_BY_NUM, which AQE does not coalesce into
+    a few large Python tasks), sorted by doc_id inside each partition."""
+    import re
+
+    from pipe_segment_spark.pipeline import run_batch_pipeline
+    from pipe_segment_spark.sources.token_stream import token_stream
+
+    out = run_batch_pipeline(token_stream(spark, SF_DIR), persist=False)
+    plan = _plan(out.segments)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    kernel = re.search(
+        r"MapInPandas .*\n +\+- Sort \[doc_id#\d+ ASC NULLS FIRST.*\n"
+        r" +\+- Exchange hashpartitioning\(doc_id#\d+, (\d+)\), REPARTITION_BY_NUM",
+        plan,
+    )
+    assert kernel, plan
+    assert int(kernel.group(1)) == n

@@ -48,20 +48,26 @@ def record_streams(draw):
     return recs
 
 
-def kernel_tagged(records):
-    """Run the Spark kernel code path (assign_frag_ids) without Spark."""
+def _input_frame(records):
+    """Records as the batch kernel's input frame (no tokens)."""
     import pandas as pd
 
-    from pipe_segment_spark.operators.fragment import assign_frag_ids
-
-    if not records:
-        return {}
     pdf = pd.DataFrame(records)
     pdf["timestamp"] = pd.to_datetime(pdf["timestamp"])
     pdf["has_payload"] = [
         (r["tokens"] is not None and len(r["tokens"]) > 0 and r["n_tok"] is not None)
         for r in records
     ]
+    return pdf.drop(columns="tokens")
+
+
+def kernel_tagged(records):
+    """Run the Spark kernel code path (assign_frag_ids) without Spark."""
+    from pipe_segment_spark.operators.fragment import assign_frag_ids
+
+    if not records:
+        return {}
+    pdf = _input_frame(records)
     out = {}
     for doc, grp in pdf.groupby("doc_id"):
         res = assign_frag_ids(grp, PARAMS)
@@ -122,12 +128,7 @@ def kernel_outputs(records):
 
     from pipe_segment_spark.operators.kernel import segment_key
 
-    pdf = pd.DataFrame(records)
-    pdf["timestamp"] = pd.to_datetime(pdf["timestamp"])
-    pdf["has_payload"] = [
-        (r["tokens"] is not None and len(r["tokens"]) > 0 and r["n_tok"] is not None)
-        for r in records
-    ]
+    pdf = _input_frame(records)
     rows = pd.concat(
         [segment_key(g, PARAMS) for _, g in pdf.groupby("doc_id")],
         ignore_index=True,
@@ -202,3 +203,127 @@ def test_segment_key_matches_oracle(records):
          counted(s["cumulative_destinations"]))
         for s in want["segments"]
     )
+
+
+def _row_multiset(frames):
+    """Kernel output rows as a multiset of tuples, NULLs as None."""
+    import pandas as pd
+
+    from collections import Counter
+
+    if not frames:
+        return Counter()
+    rows = pd.concat(frames, ignore_index=True)
+    rows = rows.astype(object).where(rows.notna(), None)
+    return Counter(
+        tuple(
+            tuple((c["value"], c["count"]) for c in v) if isinstance(v, list) else v
+            for v in row
+        )
+        for row in rows.itertuples(index=False)
+    )
+
+
+def _check_batches(pdf, cuts):
+    """``segment_batches`` over ``pdf`` (sorted by doc_id) cut into batches
+    at ``cuts`` equals ``segment_key`` once per doc_id."""
+    from pipe_segment_spark.operators.kernel import segment_batches, segment_key
+
+    pdf = pdf.sort_values("doc_id", kind="stable").reset_index(drop=True)
+    bounds = [0, *sorted({c for c in cuts if 0 < c < len(pdf)}), len(pdf)]
+    batches = [pdf.iloc[lo:hi].reset_index(drop=True)
+               for lo, hi in zip(bounds[:-1], bounds[1:])]
+    got = list(segment_batches(iter(batches), PARAMS))
+    want = [segment_key(g, PARAMS) for _, g in pdf.groupby("doc_id", sort=True)]
+    assert _row_multiset(got) == _row_multiset(want)
+    assert len(got) <= len(batches) + 1
+
+
+@given(record_streams(), st.lists(st.integers(0, 60), max_size=20))
+@settings(max_examples=100, deadline=None)
+def test_segment_batches_any_batch_split(records, cuts):
+    """Any split of a doc_id-sorted partition into batches gives the rows
+    of one ``segment_key`` call per doc_id."""
+    if not records:
+        return
+    _check_batches(_input_frame(records), cuts)
+
+
+def test_segment_batches_hot_key_and_edges():
+    """A hot key spread over one-row batches, keys that start and end
+    exactly at batch edges, and an empty batch."""
+    from pipe_segment_spark.operators.kernel import segment_batches
+
+    recs = []
+    for i in range(40):  # hot key: every batch below holds part of it
+        recs.append(_rec("hot", i * 20, 10 + i % 3, f"h{i:03d}"))
+    for d in ("a", "b", "c"):
+        for i in range(4):
+            recs.append(_rec(d, i * 30, 20, f"{d}{i}"))
+    pdf = _input_frame(recs).sort_values("doc_id", kind="stable")
+    n = len(pdf)
+    _check_batches(pdf, list(range(1, n)))  # one row per batch
+    # a, b, c (4 rows each) then hot: cuts on every key edge
+    _check_batches(pdf, [4, 8, 12])
+    _check_batches(pdf, [4, 8, 12, 13, 30, 51])
+    empty = _input_frame(recs).iloc[:0]
+    assert list(segment_batches(iter([empty]), PARAMS)) == []
+
+
+def _rec(doc, minutes, n_tok, msgid):
+    return {
+        "doc_id": doc,
+        "source": "s",
+        "timestamp": T0 + dt.timedelta(minutes=minutes),
+        "tokens": [n_tok, n_tok + 1],
+        "n_tok": n_tok,
+        "msgid": msgid,
+        "rec_type": "POS",
+        "ident_value": None,
+        "dest_value": None,
+    }
+
+
+@st.composite
+def streams_with_copies(draw):
+    """``record_streams`` with NULL msgids, reused msgids and exact copies
+    of earlier records."""
+    recs = draw(record_streams())
+    for r in recs:
+        if draw(st.integers(0, 5)) == 0:
+            r["msgid"] = draw(st.sampled_from([None, "m0000"]))
+    copies = draw(st.lists(st.integers(0, 59), max_size=10))
+    return recs + [dict(recs[i]) for i in copies if i < len(recs)]
+
+
+@given(streams_with_copies())
+@settings(max_examples=150, deadline=None)
+def test_segment_key_tags_every_record(records):
+    """The kernel's tagged rows are unique on ``RECORD_KEY``, and looking
+    every record up by its key gives the oracle's tags, record for record
+    (a multiset: msgid is not a key)."""
+    from collections import Counter
+
+    from pipe_segment_spark.operators.kernel import RECORD_KEY
+
+    if not records:
+        return
+    tagged = kernel_outputs(records)["tagged"]
+    tags = {
+        tuple(_ts(r[c]) if c == "timestamp" else r[c] for c in RECORD_KEY):
+        (r["frag_id"], r["seg_id"])
+        for r in tagged
+    }
+    assert len(tags) == len(tagged)
+    frame = _input_frame(records)
+    frame = frame.astype(object).where(frame.notna(), None)
+    got = Counter(
+        (r["doc_id"], r["msgid"], r["timestamp"])
+        + tags[tuple(_ts(r[c]) if c == "timestamp" else r[c] for c in RECORD_KEY)]
+        for r in frame.to_dict("records")
+    )
+    want = Counter(
+        (r["doc_id"], r["msgid"], r["timestamp"], r["frag_id"], r["seg_id"])
+        for r in oracle.run_pipeline(records, PARAMS)["tagged_records"]
+    )
+    assert got == want

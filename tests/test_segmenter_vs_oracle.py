@@ -335,3 +335,71 @@ def test_sweep_sf0001(spark, max_gap_hours, max_dtok_rate):
     expected = oracle.run_pipeline(records, params)
     assert_tagged_match(out, expected)
     assert_segments_match(out, expected)
+
+
+def _messages(rows):
+    """Messages output rows as a multiset: msgid is not a key."""
+    from collections import Counter
+
+    return Counter(
+        (
+            r["doc_id"],
+            r["msgid"],
+            r["timestamp"].replace(tzinfo=None),
+            r["n_tok"],
+            r["frag_id"],
+            r["seg_id"],
+            tuple(r["tokens"] or []),
+        )
+        for r in rows
+    )
+
+
+def test_messages_one_row_per_record(spark):
+    """Every input record yields exactly one messages row, tagged as the
+    oracle tags it: a NULL-msgid record is tagged, and records that share a
+    msgid (an exact copy, or a different record) come out once each."""
+    recs = [
+        make_record("d1", T0, 10, "m1"),
+        make_record("d1", T0 + timedelta(hours=1), 11, None),
+        make_record("d1", T0 + timedelta(hours=2), 12, "m3"),
+        make_record("d1", T0 + timedelta(hours=2), 12, "m3"),
+        make_record("d1", T0 + timedelta(hours=3), 12, "m4"),
+        make_record("d1", T0 + timedelta(hours=30), 90, "m4"),
+        make_record("d1", T0 + timedelta(hours=4), None, "m5", tokens=None),
+    ]
+    out, expected = run_both(spark, recs)
+    got = _messages(out.tagged_records.collect())
+    assert got == _messages(expected["tagged_records"])
+    assert sum(got.values()) == len(recs)
+    assert all(seg is not None for _, m, _, _, _, seg, _ in got if m != "m5")
+    assert_segments_match(out, expected)
+
+
+def test_batch_boundaries_sf0001(spark):
+    """Three records per Arrow batch: nearly every doc_id spans batches,
+    so the kernel's carried run is on every path; the outputs still equal
+    the oracle's."""
+    df = token_stream(spark, SF_DIR)
+    records = [
+        {**r.asDict(), "timestamp": r["timestamp"].replace(tzinfo=None)}
+        for r in df.collect()
+    ]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(key, "3")
+    try:
+        out = run_batch_pipeline(df, PARAMS)
+        got = _messages(out.tagged_records.collect())
+        expected = oracle.run_pipeline(records, PARAMS)
+        assert_segments_match(out, expected)
+        got_segmap = sorted(
+            (r["doc_id"], r["date"], r["seg_id"], r["frag_id"])
+            for r in out.segmap.collect()
+        )
+    finally:
+        spark.conf.unset(key)
+    assert got == _messages(expected["tagged_records"])
+    assert got_segmap == sorted(
+        (m["doc_id"], m["date"], m["seg_id"], m["frag_id"])
+        for m in expected["segmap"]
+    )
