@@ -8,10 +8,12 @@
   join on the kernel's record columns (``kernel.RECORD_KEY``): one row
   per record, whatever its msgid.
 - ``attach_boundary_tokens``: the first/last token payloads of fragment
-  summaries (the reference's fragment checkpoint format), joined by
-  boundary msgid.
-- ``assign_frag_ids``: the fragmenter alone over one key's kernel input,
-  run without Spark by the property tests and the kernel timings.
+  summaries (the reference's fragment checkpoint format), taken from the
+  tagged records at each boundary's frag_id, timestamp, msgid and n_tok:
+  one row per fragment.
+- ``assign_frag_ids``: the fragmenter alone over one key's kernel input
+  (``kernel.fragment_columns``), run without Spark by the property tests
+  and the kernel timings.
 
 ``kernel_input`` feeds both the batch segmenter (one ``mapInPandas`` over
 doc_id-sorted batches, ``kernel.segment_batches``, pipeline.py) and the
@@ -22,11 +24,15 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pipe_segment_spark.config import SegmenterParams
-from pipe_segment_spark.operators.kernel import RECORD_KEY, _run_sorted, sort_group
+from pipe_segment_spark.operators.kernel import (
+    RECORD_KEY,
+    _record_columns,
+    fragment_columns,
+)
 
 INPUT_COLS = [
     "doc_id",
@@ -40,7 +46,8 @@ INPUT_COLS = [
     "dest_value",
 ]
 
-# the columns every kernel reads (``sort_group`` + ``_run_sorted``)
+# the record columns every kernel reads (``kernel._record_columns`` reads
+# an absent ident_value or dest_value as NULL)
 _KERNEL_COLS = ["doc_id", "timestamp", "msgid", "n_tok", "rec_type", "source"]
 
 
@@ -72,11 +79,12 @@ def assign_frag_ids(pdf, params: SegmenterParams):
     """Fragmenter for one doc_id: deterministic sort, then the shared
     per-day run with fresh state per day (the reference groups by
     (ssvid, day), pipeline.py:211-217 — day continuity is the greedy
-    merger's job). Returns the kernel columns plus frag_id, in sort order."""
-    pdf = sort_group(pdf)
-    doc_id = pdf["doc_id"].iat[0] if len(pdf) else ""
-    out = {c: pdf[c].to_numpy() for c in _KERNEL_COLS}
-    out["frag_id"] = _run_sorted(doc_id, pdf, {}, [], params)
+    merger's job). Returns the kernel columns plus frag_id, in sort order
+    (timestamp datetime64[us], n_tok float64 with NaN for NULL)."""
+    cols, fid = fragment_columns(_record_columns(pdf), {}, [], params)
+    out = {c: cols[c] for c in _KERNEL_COLS}
+    out["timestamp"] = cols["timestamp"].view("datetime64[us]")
+    out["frag_id"] = fid
     return pd.DataFrame(out, copy=False)
 
 
@@ -107,20 +115,45 @@ def tag_records(records: DataFrame, tags: DataFrame) -> DataFrame:
     )
 
 
-def attach_boundary_tokens(fragments: DataFrame, records: DataFrame) -> DataFrame:
+def attach_boundary_tokens(fragments: DataFrame, tagged: DataFrame) -> DataFrame:
     """Fragment summaries + ``first_tokens``/``last_tokens``: the token
     payloads of the boundary records (reference fragment.py:24-72 keeps the
-    full first/last messages), joined on (doc_id, boundary msgid) — two
-    rows per fragment on the map side."""
-    toks = records.select("doc_id", "msgid", "tokens")
-    for end in ("first", "last"):
-        fragments = fragments.join(
-            toks.select(
-                "doc_id",
-                F.col("msgid").alias(f"{end}_msgid"),
-                F.col("tokens").alias(f"{end}_tokens"),
-            ),
-            ["doc_id", f"{end}_msgid"],
-            "left",
+    full first/last messages), one row per fragment.
+
+    ``tagged`` is the pipeline's tagged records. A boundary record is a
+    positional record of the fragment at the boundary's timestamp, msgid
+    (NULL-safe) and n_tok. Records tied on all of those order as the
+    record sort does (source, rec_type, ident_value; NULL as ''), then by
+    tokens: the first boundary takes the least, the last the greatest."""
+    cand = tagged.where(
+        F.col("frag_id").isNotNull() & ~F.col("rec_type").eqNullSafe("IDENT")
+    ).select(
+        F.col("frag_id").alias("_b_frag_id"),
+        # the records' timestamp may be TIMESTAMP_NTZ (see tag_records)
+        F.col("timestamp").cast("timestamp").alias("_b_timestamp"),
+        *[
+            F.col(c).alias(f"_b_{c}")
+            for c in ("msgid", "n_tok", "source", "rec_type", "ident_value", "tokens")
+        ],
+    )
+    order = [
+        F.coalesce(F.col(f"_b_{c}"), F.lit(""))
+        for c in ("source", "rec_type", "ident_value")
+    ] + [F.col("_b_tokens")]
+    for end, direction in (("first", Column.asc), ("last", Column.desc)):
+        on = [
+            F.col("frag_id") == F.col("_b_frag_id"),
+            F.col(f"{end}_msg_timestamp") == F.col("_b_timestamp"),
+            F.col(f"{end}_msgid").eqNullSafe(F.col("_b_msgid")),
+            F.col(f"{end}_msg_n_tok") == F.col("_b_n_tok"),
+        ]
+        rank = F.row_number().over(
+            Window.partitionBy("frag_id").orderBy(*map(direction, order))
+        )
+        fragments = (
+            fragments.join(cand, on, "left")
+            .withColumn("_rank", rank)
+            .where(F.col("_rank") == 1)
+            .select(*fragments.columns, F.col("_b_tokens").alias(f"{end}_tokens"))
         )
     return fragments

@@ -7,10 +7,14 @@ semantics are inherently per-key sequential (the reference's gpsdio Segmenter
 inner loop, transform/fragment_implementation.py:86-122, and the greedy
 matcher, transform/create_segment_map.py:84-147, are the same).
 
-- ``sort_group``: the deterministic multi-key record order.
-- ``_run_sorted``: the per-day run — each day slice of a sorted run goes
-  through ``_fragment_loop`` with that day's carried state, and positional
-  rows fold into per-fragment boundary summaries (``_merge_pending``).
+The kernels take one input form: a key's records as numpy columns
+(``_record_columns``; an absent ident_value or dest_value reads NULL).
+
+- ``sort_columns``: the deterministic multi-key record order.
+- ``fragment_columns``: the per-day run — it sorts a key's columns, each
+  day slice goes through ``_fragment_loop`` with that day's carried state,
+  and positional rows fold into per-fragment boundary summaries
+  (``_merge_pending``).
 - ``merge_segments``: the greedy cross-day fragment->segment matcher over
   those summaries (``greedy_merge`` is its DataFrame front end).
 - ``segment_key``: the whole batch segmenter for one key — the per-day run
@@ -20,8 +24,9 @@ matcher, transform/create_segment_map.py:84-147, are the same).
 - ``segment_batches``: the batch job's one Python call per Arrow batch —
   ``segment_key`` on each doc_id run of a doc_id-sorted partition.
 
-The stream (streaming/segmenter_stream.py) calls ``_run_sorted`` on the
-records it releases and ``merge_segments`` on the days it closes.
+The stream (streaming/segmenter_stream.py) calls ``fragment_columns`` on
+the records it releases and ``merge_segments`` on the days it closes;
+``fragment.assign_frag_ids`` calls ``fragment_columns`` alone.
 
 Per-key work is O(rows_in_group * open_fragments) with open_fragments bounded
 by ``params.max_open_fragments`` — parallelism comes from the key dimension
@@ -79,47 +84,32 @@ def _tiebreak_keys(msgid, n_tok, source, rec_type, ident_value):
     """Secondary sort keys (everything after timestamp), cheapest-last so
     they feed np.lexsort directly. Fixed-width unicode conversion is the
     expensive part — callers only build these for rows with tied
-    timestamps. Strings are object arrays (NULL -> ''; ``ident_value`` may
-    be None: no such column); ``n_tok`` is float64 with NaN for NULL, which
-    sorts greatest: n_tok is an int, so float64 holds it exactly and +inf
-    tops it."""
+    timestamps. Strings are object arrays (NULL -> ''); ``n_tok`` is
+    float64 with NaN for NULL, which sorts greatest: n_tok is an int, so
+    float64 holds it exactly and +inf tops it."""
 
     def blank(a):
         return np.where(pd.isna(a), "", a).astype("U")
 
-    ident = (
-        np.zeros(len(msgid), dtype="U1") if ident_value is None else blank(ident_value)
-    )
     n_tok = np.where(np.isnan(n_tok), np.inf, n_tok)
-    return ident, blank(rec_type), blank(source), n_tok, blank(msgid)
+    return blank(ident_value), blank(rec_type), blank(source), n_tok, blank(msgid)
 
 
-def sort_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic multi-key sort (reference fragment.py:115-140): stable
-    mergesort; None -> greatest for numerics / '' for strings."""
-
-    def keys(rows):
-        sub = pdf.iloc[rows]
-        return _tiebreak_keys(
-            sub["msgid"].to_numpy(dtype=object),
-            sub["n_tok"].to_numpy(dtype="float64", na_value=np.nan),
-            sub["source"].to_numpy(dtype=object),
-            sub["rec_type"].to_numpy(dtype=object),
-            sub["ident_value"].to_numpy(dtype=object)
-            if "ident_value" in sub.columns
-            else None,
-        )
-
-    order = _sort_order(
-        pdf["timestamp"].to_numpy("datetime64[us]").astype("int64"), keys
-    )
-    return pdf if order is None else pdf.iloc[order]
+_TIEBREAK_COLS = ("msgid", "n_tok", "source", "rec_type", "ident_value")
 
 
-def _sort_order(ts, tiebreak_keys):
-    """The ``sort_group`` order of rows with int64 timestamps ``ts``, or
-    None when they are in it already; ``tiebreak_keys(rows)`` gives
-    ``_tiebreak_keys`` of the rows at positions ``rows``.
+def sort_columns(cols: dict) -> dict:
+    """One key's record columns (``_record_columns``) in the deterministic
+    multi-key record order (reference fragment.py:115-140): stable
+    mergesort; None -> greatest for numerics / '' for strings. Returns
+    ``cols`` itself when it is in that order already."""
+    order = _sort_order(cols)
+    return cols if order is None else {c: a[order] for c, a in cols.items()}
+
+
+def _sort_order(cols):
+    """The ``sort_columns`` order of the rows, or None when they are in it
+    already.
 
     Timestamps are the primary key and, in real feeds, almost always unique
     within a key — so the tie-break keys (five fixed-width unicode
@@ -129,6 +119,7 @@ def _sort_order(ts, tiebreak_keys):
     ``lexsort((ident, rec, source, n_tok, msgid, ts))``: rows with distinct
     timestamps never interleave with a tied run, and stable sorts preserve
     original index order on full ties either way."""
+    ts = cols["timestamp"]
     n = len(ts)
     if n <= 1 or (np.diff(ts) > 0).all():  # strictly increasing: identity
         return None
@@ -143,7 +134,9 @@ def _sort_order(ts, tiebreak_keys):
     tied[eq + 1] = True
     tied_pos = np.flatnonzero(tied)  # positions (in ts-sorted order)
     rows = order[tied_pos]  # original row indices, run-grouped + stable
-    ident, rec, source, n_tok, msgid = tiebreak_keys(rows)
+    ident, rec, source, n_tok, msgid = _tiebreak_keys(
+        *(cols[c][rows] for c in _TIEBREAK_COLS)
+    )
     suborder = np.lexsort(
         (ident, rec, source, n_tok, msgid, ts_sorted[tied_pos])
     )
@@ -240,36 +233,26 @@ def _fragment_loop(
     return out, f_objs, next_k
 
 
-def _run_sorted(doc_id, pdf, frag_days, pending, params):
-    """The per-day run batch and the stream share. ``pdf`` is one
-    key's records in ``sort_group`` order with a ``has_payload`` column;
-    each day's slice runs ``_fragment_loop`` with that day's carried
-    (open-fragments, counter) state from ``frag_days`` (fresh when absent),
-    and positional rows with a frag_id merge into the ``pending`` boundary
-    summaries. Returns the frag_id of every row (None = noise or an
-    unattached identity record) as an object array."""
-    return _run_days(
-        doc_id,
-        pdf["timestamp"].to_numpy("datetime64[us]").astype("int64"),
-        pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan),
-        pdf["has_payload"].to_numpy(dtype=bool),
-        pdf["rec_type"].to_numpy(dtype=object),
-        pdf["msgid"].to_numpy(dtype=object),
-        frag_days,
-        pending,
-        params,
-    )
+def fragment_columns(cols: dict, frag_days: dict, pending: list, params):
+    """The per-day run batch and stream share, on one key's record columns
+    (``_record_columns``, any order): ``sort_columns``, then each day's
+    slice runs ``_fragment_loop`` with that day's carried (open-fragments,
+    counter) state from ``frag_days`` (fresh when absent), and positional
+    rows with a frag_id merge into the ``pending`` boundary summaries; both
+    update in place. Returns the sorted columns and the frag_id of every
+    row (None = noise or an unattached identity record) as an object
+    array."""
+    cols = sort_columns(cols)
+    return cols, _run_days(cols, frag_days, pending, params)
 
 
-def _run_days(
-    doc_id, ts_us, n_tok, has_payload, rec_type, msgid, frag_days, pending, params
-):
-    """``_run_sorted`` over the record columns as numpy arrays: int64
-    epoch-micro timestamps, float64 n_tok (NaN = NULL), bool has_payload,
-    object rec_type and msgid."""
+def _run_days(cols, frag_days, pending, params):
+    """``fragment_columns`` on columns in record order."""
+    doc_id = cols["doc_id"][0]
+    ts_us, n_tok, msgid = cols["timestamp"], cols["n_tok"], cols["msgid"]
     day_us = (ts_us // US_PER_DAY) * US_PER_DAY
-    noise = ~has_payload | np.isnan(n_tok)
-    is_ident = rec_type == "IDENT"
+    noise = ~cols["has_payload"] | np.isnan(n_tok)
+    is_ident = cols["rec_type"] == "IDENT"
     frag_ids: list = []
     # timestamp-sorted, so every day is one contiguous slice
     cuts = [0, *(np.flatnonzero(np.diff(day_us)) + 1).tolist(), len(ts_us)]
@@ -541,11 +524,17 @@ def segment_batches(batches, params: SegmenterParams):
 def _record_columns(pdf: pd.DataFrame) -> dict:
     """A frame's ``RECORD_KEY`` columns as numpy arrays: timestamp in int64
     epoch micros, n_tok float64 (NaN = NULL), has_payload bool, the rest
-    object."""
+    object. An absent ``ident_value`` or ``dest_value`` column reads NULL."""
     cols = {
         c: pdf[c].to_numpy(dtype=object)
-        for c in ("doc_id", "msgid", "rec_type", "source", "ident_value", "dest_value")
+        for c in ("doc_id", "msgid", "rec_type", "source")
     }
+    for c in ("ident_value", "dest_value"):
+        cols[c] = (
+            pdf[c].to_numpy(dtype=object)
+            if c in pdf.columns
+            else np.full(len(pdf), None, dtype=object)
+        )
     cols["timestamp"] = pdf["timestamp"].to_numpy("datetime64[us]").astype("int64")
     cols["n_tok"] = pdf["n_tok"].to_numpy(dtype="float64", na_value=np.nan)
     cols["has_payload"] = pdf["has_payload"].to_numpy(dtype=bool)
@@ -558,9 +547,6 @@ def _concat_columns(parts: list[dict]) -> dict:
     return {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
 
 
-_TIEBREAK_COLS = ("msgid", "n_tok", "source", "rec_type", "ident_value")
-
-
 def _segment_run(cols: dict, params: SegmenterParams):
     """``segment_key``'s work on one key's ``_record_columns``. The per-day
     run tags the records and summarizes the fragments, the greedy matcher
@@ -569,26 +555,10 @@ def _segment_run(cols: dict, params: SegmenterParams):
     one per day in day order, accumulate the running totals. Returns the
     record columns, sorted, one row per distinct record, with frag_id and
     seg_id, and the fragment rows as dicts."""
-    order = _sort_order(
-        cols["timestamp"],
-        lambda rows: _tiebreak_keys(*(cols[c][rows] for c in _TIEBREAK_COLS)),
-    )
-    if order is not None:
-        cols = {c: a[order] for c, a in cols.items()}
+    frags: list[dict] = []
+    cols, fid = fragment_columns(cols, {}, frags, params)
     ts_us = cols["timestamp"]
     doc_id = cols["doc_id"][0]
-    frags: list[dict] = []
-    fid = _run_days(
-        doc_id,
-        ts_us,
-        cols["n_tok"],
-        cols["has_payload"],
-        cols["rec_type"],
-        cols["msgid"],
-        {},
-        frags,
-        params,
-    )
     for f, seg_id in merge_segments(frags, params)[0]:
         f["doc_id"] = doc_id
         f["seg_id"] = seg_id

@@ -55,14 +55,13 @@ def q_segmenter_full_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_segmenter_full_fragments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-engine fragment summaries with boundary msgids/token payloads
-    (records re-attached via the boundary-msgid map join) and both counted
-    arrays — the reference's fragment checkpoint format."""
+    (taken from the tagged records at each fragment's boundary records)
+    and both counted arrays — the reference's fragment checkpoint
+    format."""
     from pipe_segment_spark.operators.fragment import attach_boundary_tokens
 
-    records = token_stream(spark, sf_dir)
-    frags = attach_boundary_tokens(
-        run_batch_pipeline(records, DEFAULT_PARAMS).fragments, records
-    )
+    out = run_batch_pipeline(token_stream(spark, sf_dir), DEFAULT_PARAMS)
+    frags = attach_boundary_tokens(out.fragments, out.tagged_records)
     return frags.select(
         "doc_id",
         "frag_id",

@@ -13,17 +13,18 @@ Per key (doc_id), GroupState carries:
   - open segments (seg_id -> last fragment boundary) for cross-day matching
   - the buffered records not yet released, as one flat set of columns
 
-One rule runs on every call. The buffered and arriving records at or below
-the watermark release as one ``sort_group``-ed run through the batch
-kernel's per-day run (operators/kernel.py ``_run_sorted``: ``_fragment_loop``
-with carried per-day state -> ``_merge_pending`` boundary summaries);
-arriving records above it join the buffer. The days that end at or before
-the watermark close through the greedy matcher (``merge_segments``,
-kind='segmap'). Spark drops arriving records at or below the watermark
-(reference analog: cross-day late data starts a new segment / next run), so
-the output is byte-identical to the batch engine under ARBITRARY intra-day
-disorder. A fired event-time timeout only wakes the key: it is a call with
-no rows, under the same rule.
+One rule runs on every call. The arriving records become the batch
+kernel's record columns (operators/kernel.py ``_record_columns``) once and
+follow the buffered records; one watermark mask splits them. The records
+at or below the watermark release as one run through the kernel's sort and
+per-day run (``fragment_columns``: ``_fragment_loop`` with carried per-day
+state -> ``_merge_pending`` boundary summaries); the rest become the
+buffer. The days that end at or before the watermark close through the
+greedy matcher (``merge_segments``, kind='segmap'). Spark drops arriving
+records at or below the watermark (reference analog: cross-day late data
+starts a new segment / next run), so the output is byte-identical to the
+batch engine under ARBITRARY intra-day disorder. A fired event-time timeout
+only wakes the key: it is a call with no rows, under the same rule.
 
 Nothing releases until the watermark passes it, so a bounded feed ends with
 one end-of-feed record far past its data (``write_end_of_feed``); its
@@ -39,7 +40,6 @@ from __future__ import annotations
 
 import json
 from datetime import datetime, timezone
-from itertools import compress
 
 import numpy as np
 import pandas as pd
@@ -61,10 +61,11 @@ from pipe_segment_spark.operators.fragment import kernel_input
 from pipe_segment_spark.operators.kernel import (
     US_PER_DAY,
     OpenFragState,
+    _concat_columns,
     _date_of,
-    _run_sorted,
+    _record_columns,
+    fragment_columns,
     merge_segments,
-    sort_group,
 )
 
 # the end-of-feed record's reserved doc_id and event time (2200-01-01 UTC,
@@ -183,67 +184,57 @@ def _close_pending_days(doc_id, open_segs, pending_frags, up_to_day_us, params):
     return out, open_segs, remaining
 
 
-def _consume_seeds(batch, open_segs):
-    """Strip SEED rows (reference ReadFragments bootstrap: seg_id in
-    ident_value, last boundary in timestamp/n_tok) into open_segs."""
-    if len(batch) and (batch["rec_type"] == "SEED").any():
-        seeds = batch[batch["rec_type"] == "SEED"]
-        batch = batch[batch["rec_type"] != "SEED"].reset_index(drop=True)
-        for _, s in seeds.iterrows():
-            last_us = int(
-                pd.Timestamp(s["timestamp"])
-                .to_datetime64()
-                .astype("datetime64[us]")
-                .astype("int64")
-            )
-            open_segs[s["ident_value"]] = (last_us, int(s["n_tok"]))
-    return batch
-
-
-def _append_to_buffer(buf, rows, ts_us):
-    """Columnar append of kernel-input ``rows`` (epoch micros ``ts_us``)
-    to the key's flat buffer."""
-    nt = rows["n_tok"].to_numpy(dtype="float64", na_value=np.nan).tolist()
-    buf.setdefault("t", []).extend(ts_us.tolist())
-    buf.setdefault("nt", []).extend(None if v != v else int(v) for v in nt)
-    for name, col in _BUF_OBJ_COLS.items():
-        vals = rows[col].to_numpy(dtype=object)
-        vals[pd.isna(vals)] = None
-        buf.setdefault(name, []).extend(vals.tolist())
-
-
-def _buffer_frame(doc_id, buf, rel):
-    """The buffered rows where ``rel`` holds, as a kernel-input frame."""
-
-    def col(name, dtype=object):
-        return np.asarray(buf[name], dtype=dtype)[rel]
-
-    return pd.DataFrame(
-        {
-            "doc_id": doc_id,
-            "timestamp": pd.to_datetime(col("t", "int64"), unit="us"),
-            "msgid": col("msgid"),
-            "n_tok": col("nt", "float64"),  # None -> NaN, like Arrow's nulls
-            "rec_type": col("rec"),
-            "source": col("src"),
-            "ident_value": col("iv"),
-            "has_payload": col("hp", bool),
-        },
-        copy=False,
+def _buffer_columns(doc_id, buf) -> dict:
+    """The flat buffer's records as ``kernel._record_columns`` (the stream
+    input has no dest_value: NULL)."""
+    n = len(buf.get("t", ()))
+    cols = {
+        col: np.array(buf.get(name, ()), dtype=object)
+        for name, col in _BUF_OBJ_COLS.items()
+    }
+    cols.update(
+        doc_id=np.full(n, doc_id, dtype=object),
+        dest_value=np.full(n, None, dtype=object),
+        timestamp=np.array(buf.get("t", ()), dtype="int64"),
+        n_tok=np.array(buf.get("nt", ()), dtype="float64"),  # None -> NaN
+        has_payload=cols["has_payload"].astype(bool),
     )
+    return cols
 
 
-def _tagged_frame(doc_id, pdf, fid_arr):
+def _buffer_lists(cols) -> dict:
+    """Record columns as the flat buffer (``_BUF_COLS`` lists; empty dict
+    when there are no records)."""
+    if not len(cols["timestamp"]):
+        return {}
+    buf = {
+        "t": cols["timestamp"].tolist(),
+        "nt": [None if v != v else int(v) for v in cols["n_tok"].tolist()],
+    }
+    for name, col in _BUF_OBJ_COLS.items():
+        vals = cols[col]
+        if vals.dtype == object:
+            vals = np.where(pd.isna(vals), None, vals)
+        buf[name] = vals.tolist()
+    return buf
+
+
+def _tagged_frame(cols, fid_arr):
     """Columnar tagged-record output frame in OUTPUT_SCHEMA order."""
-    n = len(pdf)
+    n = len(fid_arr)
     none_col = np.full(n, None, dtype=object)
+    null_nt = np.isnan(cols["n_tok"])
     return pd.DataFrame(
         {
             "kind": np.full(n, "tagged", dtype=object),
-            "doc_id": np.full(n, doc_id, dtype=object),
-            "timestamp": pdf["timestamp"].to_numpy(),
-            "msgid": pdf["msgid"].to_numpy(dtype=object),
-            "n_tok": pd.array(pdf["n_tok"], dtype="Int32"),
+            "doc_id": cols["doc_id"],
+            "timestamp": cols["timestamp"]
+            .view("datetime64[us]")
+            .astype("datetime64[ns]"),
+            "msgid": cols["msgid"],
+            "n_tok": pd.arrays.IntegerArray(
+                np.where(null_nt, 0, cols["n_tok"]).astype("int32"), null_nt
+            ),
             "frag_id": fid_arr,
             "seg_id": none_col,
             "date": none_col,
@@ -284,36 +275,32 @@ def make_stateful_segmenter(params: SegmenterParams = DEFAULT_PARAMS):
         else:  # no watermark yet: nothing is confirmed
             wm_us = close_day_us = float("-inf")
 
-        released = []
-        if buf:
-            rel = np.asarray(buf["t"], dtype="int64") <= wm_us
-            if rel.any():
-                released.append(_buffer_frame(doc_id, buf, rel))
-                keep = (~rel).tolist()
-                buf = {c: list(compress(v, keep)) for c, v in buf.items()}
-                buf = buf if buf["t"] else {}
+        cols = _buffer_columns(doc_id, buf)
         frames = list(pdf_iter)  # none on a fired timeout
         if frames:
-            batch = pd.concat(frames, ignore_index=True)
-            # state bootstrap (reference ReadFragments, read_fragments.py:12-99)
-            batch = _consume_seeds(batch, open_segs)
-            ts_us = batch["timestamp"].to_numpy("datetime64[us]").astype("int64")
-            rel = ts_us <= wm_us
-            if not rel.all():
-                _append_to_buffer(buf, batch[~rel], ts_us[~rel])
-                batch = batch[rel]
-            if len(batch):
-                released.append(batch)
+            new = _concat_columns([_record_columns(f) for f in frames])
+            # state bootstrap (reference ReadFragments, read_fragments.py:12-99):
+            # a SEED row carries a seg_id in ident_value and its last
+            # boundary in timestamp/n_tok
+            seed = new["rec_type"] == "SEED"
+            if seed.any():
+                for seg_id, last_us, last_n_tok in zip(
+                    new["ident_value"][seed].tolist(),
+                    new["timestamp"][seed].tolist(),
+                    new["n_tok"][seed].tolist(),
+                ):
+                    open_segs[seg_id] = (last_us, int(last_n_tok))
+                new = {c: a[~seed] for c, a in new.items()}
+            cols = _concat_columns([cols, new])
+        rel = cols["timestamp"] <= wm_us
+        buf = _buffer_lists({c: a[~rel] for c, a in cols.items()})
 
         tagged = []
-        if released:
-            pdf = sort_group(
-                released[0]
-                if len(released) == 1
-                else pd.concat(released, ignore_index=True)
+        if rel.any():
+            released, fid = fragment_columns(
+                {c: a[rel] for c, a in cols.items()}, frag_days, pending, params
             )
-            fid = _run_sorted(doc_id, pdf, frag_days, pending, params)
-            tagged.append(_tagged_frame(doc_id, pdf, fid))
+            tagged.append(_tagged_frame(released, fid))
         segmap, open_segs, pending = _close_pending_days(
             doc_id, open_segs, pending, close_day_us, params
         )

@@ -293,10 +293,8 @@ def test_fragment_boundary_tokens(spark):
         make_record("d1", T0 + timedelta(hours=2, minutes=5), 90, "mx",
                     tokens=[7, 8, 9])  # interleaved second fragment
     ]
-    df = records_to_df(spark, recs)
-    frags = attach_boundary_tokens(
-        run_batch_pipeline(df, PARAMS).fragments, df
-    ).collect()
+    out = run_batch_pipeline(records_to_df(spark, recs), PARAMS)
+    frags = attach_boundary_tokens(out.fragments, out.tagged_records).collect()
     expected = {
         f["frag_id"]: (tuple(f["first_tokens"]), tuple(f["last_tokens"]))
         for f in oracle.fragment_stream(recs, PARAMS)[0]
@@ -307,6 +305,42 @@ def test_fragment_boundary_tokens(spark):
     }
     assert got == expected
     assert len(got) == 2
+
+
+def test_fragment_boundary_tokens_reused_msgids(spark):
+    """msgid is not a key of the boundary records: m1 opens two fragments
+    on day 0 and one on day 1, the last record of a fragment shares its
+    timestamp and msgid with an earlier one (and its n_tok with a copy
+    from another source), and a fragment's only record has a NULL msgid.
+    Each fragment still comes out once, with the oracle's first/last
+    token payloads."""
+    from collections import Counter
+
+    from pipe_segment_spark.operators.fragment import attach_boundary_tokens
+
+    h = timedelta(hours=1)
+    recs = [
+        make_record("d1", T0, 10, "m1", tokens=[1]),
+        make_record("d1", T0 + h, 500, "m1", tokens=[2]),  # second fragment
+        make_record("d1", T0 + 2 * h, 11, "m2", tokens=[3]),
+        make_record("d1", T0 + 5 * h, 12, "m3", tokens=[4]),
+        make_record("d1", T0 + 5 * h, 13, "m3", tokens=[5]),  # last
+        make_record("d1", T0 + 5 * h, 13, "m3", tokens=[6], source="s0"),
+        make_record("d1", T0 + 8 * h, 900, None, tokens=[7]),
+        make_record("d1", T0 + 25 * h, 10, "m1", tokens=[8]),  # day 1
+    ]
+    out = run_batch_pipeline(records_to_df(spark, recs), PARAMS)
+    frags = attach_boundary_tokens(out.fragments, out.tagged_records).collect()
+    want = Counter(
+        (f["frag_id"], tuple(f["first_tokens"]), tuple(f["last_tokens"]))
+        for f in oracle.fragment_stream(recs, PARAMS)[0]
+    )
+    got = Counter(
+        (f["frag_id"], tuple(f["first_tokens"] or ()), tuple(f["last_tokens"] or ()))
+        for f in frags
+    )
+    assert got == want
+    assert len(frags) == 4
 
 
 @pytest.mark.parametrize("max_gap_hours,max_dtok_rate", [(6.0, 30.0), (2.0, 10.0)])

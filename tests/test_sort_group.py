@@ -1,4 +1,4 @@
-"""sort_group fast-path equivalence: the tie-aware implementation must be
+"""sort_columns fast-path equivalence: the tie-aware implementation must be
 bit-identical to a whole-frame stable lexsort over all six keys (reference
 fragment.py:115-140 ordering), across every path — already-sorted, unique
 timestamps out of order, tied timestamps resolved by secondary keys, and
@@ -10,7 +10,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from pipe_segment_spark.operators.kernel import sort_group
+from pipe_segment_spark.config import SegmenterParams
+from pipe_segment_spark.operators.fragment import assign_frag_ids
+from pipe_segment_spark.operators.kernel import _record_columns, sort_columns
 
 
 def _reference_sort(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -58,22 +60,37 @@ def _frame(ts_s, msgid, n_tok=None, source=None, rec=None, ident=None):
             "source": source if source is not None else ["s"] * n,
             "rec_type": rec if rec is not None else ["POS"] * n,
             "ident_value": ident if ident is not None else [None] * n,
+            "doc_id": ["d"] * n,
+            "has_payload": [True] * n,
         }
     )
 
 
+def _sort(pdf):
+    """``sort_columns`` on the frame's record columns, with each row's
+    position in the frame riding along as ``row``."""
+    cols = _record_columns(pdf)
+    cols["row"] = np.arange(len(pdf))
+    return sort_columns(cols)
+
+
 def _assert_same(pdf):
-    got = sort_group(pdf).reset_index(drop=True)
-    want = _reference_sort(pdf).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want)
-    # index path identical too (stability): compare row order, not just values
-    assert list(sort_group(pdf).index) == list(_reference_sort(pdf).index)
+    got = _sort(pdf)
+    want = _reference_sort(pdf)
+    # every sorted column holds the reference's values
+    for c, a in _record_columns(want).items():
+        np.testing.assert_array_equal(got[c], a, err_msg=c)
+    # row path identical too (stability): compare row order, not just values
+    assert list(got["row"]) == list(want.index)
+    pd.testing.assert_frame_equal(
+        pdf.iloc[got["row"]].reset_index(drop=True), want.reset_index(drop=True)
+    )
 
 
 def test_already_sorted_identity():
     pdf = _frame([1, 2, 3, 4], ["a", "b", "c", "d"])
-    out = sort_group(pdf)
-    assert out is pdf  # fast path returns the frame untouched
+    cols = _record_columns(pdf)
+    assert sort_columns(cols) is cols  # fast path returns the columns untouched
     _assert_same(pdf)
 
 
@@ -84,7 +101,7 @@ def test_unique_unsorted():
 
 def test_ties_broken_by_msgid():
     pdf = _frame([2, 1, 2, 1], ["z", "q", "a", "p"])
-    out = sort_group(pdf)
+    out = _sort(pdf)
     assert list(out["msgid"]) == ["p", "q", "a", "z"]
     _assert_same(pdf)
 
@@ -104,8 +121,8 @@ def test_ties_cascade_through_all_keys():
 
 def test_full_ties_stable_original_order():
     pdf = _frame([9, 9, 9], ["m", "m", "m"], n_tok=[1, 1, 1])
-    out = sort_group(pdf)
-    assert list(out.index) == [0, 1, 2]
+    out = _sort(pdf)
+    assert list(out["row"]) == [0, 1, 2]
     _assert_same(pdf)
 
 
@@ -116,7 +133,7 @@ def test_nulls_sort_greatest():
         [None, "a", "a", "b"],
         n_tok=[None, None, 5, None],
     )
-    assert list(sort_group(pdf).index) == [0, 2, 1, 3]
+    assert list(_sort(pdf)["row"]) == [0, 2, 1, 3]
     _assert_same(pdf)
 
 
@@ -127,8 +144,8 @@ def test_null_n_tok_sorts_last_in_every_dtype(dtype):
     nullable Int32, put NULL n_tok after every value on a tie."""
     n_tok = pd.Series([None, 7, None, 2], dtype=dtype)
     pdf = _frame([4, 4, 4, 4], ["m", "m", "m", "m"], n_tok=n_tok)
-    out = sort_group(pdf)
-    assert list(out.index) == [3, 1, 0, 2]
+    out = _sort(pdf)
+    assert list(out["row"]) == [3, 1, 0, 2]
     _assert_same(pdf)
 
 
@@ -161,3 +178,23 @@ def test_randomized_equivalence(seed):
 def test_no_ident_column():
     pdf = _frame([2, 2, 1], ["b", "a", "c"]).drop(columns=["ident_value"])
     _assert_same(pdf)
+
+
+def test_perfbench_assign_frag_ids_input():
+    """perfbench times ``assign_frag_ids`` on frames of these columns only:
+    no ident_value (and no dest_value). The absent column reads NULL, so
+    ties sort as on a NULL ident_value, and the fragmenter returns the
+    records in that order."""
+    pdf = _frame(
+        [7200, 0, 7200, 3600, 0],
+        ["b", "c", "a", "d", None],
+        n_tok=[12, 10, 12, 11, 10],
+        rec=["POS", "POS", "POS", "IDENT", "POS"],
+    )[["doc_id", "timestamp", "msgid", "n_tok", "rec_type", "source", "has_payload"]]
+    _assert_same(pdf)
+    out = assign_frag_ids(pdf, SegmenterParams())
+    assert list(out["msgid"]) == [None, "c", "d", "a", "b"]
+    assert list(out["timestamp"]) == list(_reference_sort(pdf)["timestamp"])
+    # one fragment: NULL-msgid row opens it, the identity row attaches
+    (fid,) = set(out["frag_id"])
+    assert fid == "d-1970-01-01T00:00:00.000000Z-1"

@@ -663,9 +663,9 @@ def test_stateful_udf_input_has_no_token_payload(spark, tmp_path):
 
 
 def _kernel_rows(records):
-    """(minute, n_tok, payload, rec_type, ident_value, source) tuples ->
-    ``kernel_input(records, "ident_value")`` rows for doc_id d1, msgid
-    m<i>."""
+    """(minute, n_tok, payload, rec_type, ident_value, source, lateness,
+    msgid) tuples -> ``kernel_input(records, "ident_value")`` rows for
+    doc_id d1; msgid ``"own"`` stands for the record's own m<i>."""
     import datetime as dt
 
     import pandas as pd
@@ -677,7 +677,10 @@ def _kernel_rows(records):
             "timestamp": pd.to_datetime(
                 [base + dt.timedelta(minutes=r[0]) for r in records]
             ),
-            "msgid": [f"m{i:03d}" for i in range(len(records))],
+            "msgid": [
+                f"m{i:03d}" if r[7] == "own" else r[7]
+                for i, r in enumerate(records)
+            ],
             "n_tok": pd.array([r[1] for r in records], dtype="Int32"),
             "rec_type": [r[3] for r in records],
             "source": [r[5] for r in records],
@@ -697,13 +700,18 @@ def test_sorted_prefix_equals_segment_key_property():
     microbatches. Records arrive in any order, or in event-time order up
     to a random lateness. Whenever the watermark passes the key's timeout,
     the key gets a timeout call, as in Spark; the feed ends by moving the
-    watermark past every record before the last one."""
+    watermark past every record before the last one. msgids may be NULL
+    or shared, and sources NULL, so the tags compare per record, as a
+    multiset of (timestamp, msgid, n_tok, frag_id): the buffer's NULL
+    round trip shows in every column the stream emits."""
+    from collections import Counter
+
     import numpy as np
     import pandas as pd
 
     from hypothesis import example, given, settings, strategies as st
 
-    from pipe_segment_spark.operators.kernel import segment_key
+    from pipe_segment_spark.operators.kernel import RECORD_KEY, segment_key
     from pipe_segment_spark.streaming.segmenter_stream import (
         END_OF_FEED_TS,
         make_stateful_segmenter,
@@ -716,8 +724,9 @@ def test_sorted_prefix_equals_segment_key_property():
         st.booleans(),  # token payload present
         st.sampled_from(["POS", "POS", "IDENT"]),
         st.sampled_from([None, "a", "b"]),
-        st.sampled_from(["s", "t"]),
+        st.sampled_from(["s", "t", None]),
         st.integers(0, 3 * 24 * 60),  # arrival lateness, minutes
+        st.sampled_from(["own", "own", "own", None, "r0"]),  # msgid
     )
 
     @settings(max_examples=150, deadline=None)
@@ -740,9 +749,9 @@ def test_sorted_prefix_equals_segment_key_property():
     # day 1 01:00, past the key's day-0 timeout; then day 1 03:00 arrives
     @example(
         records=[
-            (20 * 60, 10, True, "POS", None, "s", 0),
-            (29 * 60, 12, True, "POS", None, "s", 0),
-            (27 * 60, 11, True, "POS", None, "s", 0),
+            (20 * 60, 10, True, "POS", None, "s", 0, "own"),
+            (29 * 60, 12, True, "POS", None, "s", 0, "own"),
+            (27 * 60, 11, True, "POS", None, "s", 0, "own"),
         ],
         cuts=[2],
         delay_h=6,
@@ -789,23 +798,34 @@ def test_sorted_prefix_equals_segment_key_property():
         state.wm_ms = int(END_OF_FEED_TS.timestamp() * 1000)
         fire_timeout()
 
-        got_tagged, got_segmap = [], []
+        def rows(frame, cols):
+            return [
+                tuple(None if pd.isna(v) else v for v in row)
+                for row in zip(*(frame[c] for c in cols))
+            ]
+
+        out_cols = ["timestamp", "msgid", "n_tok"]
+        got_tagged, got_segmap = Counter(), []
         for part in parts:
             if (part["kind"] == "tagged").all():
-                got_tagged += zip(part["msgid"], part["frag_id"])
+                got_tagged.update(
+                    (*r, f) for r, f in zip(rows(part, out_cols), part["frag_id"])
+                )
             else:
                 got_segmap += zip(
                     part["frag_id"], part["seg_id"], part["date"]
                 )
 
-        want = segment_key(
-            pdf.iloc[kept].assign(dest_value=None).reset_index(drop=True),
-            PARAMS,
-        )
+        kept_rows = pdf.iloc[kept].assign(dest_value=None).reset_index(drop=True)
+        want = segment_key(kept_rows, PARAMS)
         tagged = want[want["kind"] == "tagged"]
         frags = want[want["kind"] == "fragment"]
-        assert sorted(got_tagged, key=str) == sorted(
-            zip(tagged["msgid"], tagged["frag_id"]), key=str
+        # the kernel tags each distinct record once: look every kept
+        # record up by its record key
+        tag_of = dict(zip(rows(tagged, RECORD_KEY), tagged["frag_id"]))
+        assert got_tagged == Counter(
+            (*r, tag_of[k])
+            for r, k in zip(rows(kept_rows, out_cols), rows(kept_rows, RECORD_KEY))
         )
         assert sorted(got_segmap) == sorted(
             zip(
@@ -1186,7 +1206,7 @@ def test_merge_pending_property_vs_reference_fold():
     def check(runs):
         # IMPORTANT: within one run, rows arrive kernel-SORTED by
         # (t, msgid) — that is _merge_pending's input contract
-        # (sort_group runs upstream); across runs order is arbitrary.
+        # (sort_columns runs upstream); across runs order is arbitrary.
         vec_pending, ref_pending = [], []
         for run in runs:
             run = sorted(run, key=lambda r: (r[1], r[4], r[2]))
