@@ -19,7 +19,6 @@ from pyspark.sql import SparkSession
 def build_session(
     app_name: str = "pipe-segment-spark",
     cores: int | str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cores = cores or os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -41,8 +40,7 @@ def build_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or _default_shuffle_partitions(cores)),
+            "spark.sql.shuffle.partitions", str(_default_shuffle_partitions(cores))
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
@@ -54,25 +52,26 @@ def build_session(
 
 
 def _default_shuffle_partitions(cores: int | str) -> int:
+    """One shuffle partition per core, so each Python stage runs one task
+    wave. The count sets both Python stages: the batch kernel's
+    ``repartition(n, "doc_id")`` (pipeline.py reads it from the conf) and
+    the stream's stateful-operator partitions (fixed at a query's first
+    start and kept in its checkpoint, so an existing checkpoint resumes
+    with its own count).
+
+    Every Python task pays a fixed start-up, about 0.3 s on 4 cores, most
+    of it in PySpark's ``setup_spark_files``: its
+    ``importlib.invalidate_caches()`` re-reads the directory of
+    ``pyspark.zip`` once per cached zipimporter. Two waves (2x cores) ran 8
+    stateful tasks a microbatch on 4 cores, each paying that start-up and
+    a state-store commit, and more than half of the warm batch kernel
+    stage's Python-worker time was this cost. One wave, measured on 4
+    cores in paired runs: perfbench backfill job_s 2.84 s -> 2.15 s, and a
+    20x backfill-shaped input (400k records, one doc_id holding 30%) 7.1 s
+    -> 6.5 s, so the lost balance slack did not show. On a real cluster
+    AQE coalescing from a high initial count, sized by
+    ``advisoryPartitionSizeInBytes``, supersedes this local-mode rule."""
     try:
-        n = int(cores)
+        return int(cores)
     except (TypeError, ValueError):
-        n = os.cpu_count() or 8
-    # Piecewise, both branches MEASURED (BENCH/BASELINE.md r4 sweep):
-    # - wide boxes (>=16 cores): 1x cores. The hot paths are
-    #   groupBy().applyInPandas exchanges whose per-partition cost is
-    #   dominated by Python-worker/Arrow batch overhead — 2x cores means
-    #   two task waves of that overhead per stage (flagship 11.6s @64
-    #   partitions vs 9.7s @32 on 32 cores; 128/256 worse still).
-    # - narrow boxes (<16 cores): 2x cores. At 8 cores, 8 partitions is a
-    #   single wave with NO balance slack — the slowest partition gates
-    #   the stage (batch scaling thr@8c dropped 458k -> 391k rec/s when
-    #   r4 briefly shipped 1x across the board); 2 waves restore the
-    #   skew tolerance and the worker overhead is small at this width.
-    # Local-mode logic only: on a real cluster this is superseded by AQE
-    # coalescing from a high initial partition count, where target
-    # partition BYTES (advisoryPartitionSizeInBytes), not a wave count,
-    # sets the granularity.
-    if n >= 16:
-        return n
-    return max(2 * n, 8)
+        return os.cpu_count() or 8

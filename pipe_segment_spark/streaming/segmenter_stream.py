@@ -24,7 +24,12 @@ greedy matcher (``merge_segments``, kind='segmap'). Spark drops arriving
 records at or below the watermark (reference analog: cross-day late data
 starts a new segment / next run), so the output is byte-identical to the
 batch engine under ARBITRARY intra-day disorder. A fired event-time timeout
-only wakes the key: it is a call with no rows, under the same rule.
+only wakes the key: it is a call with no rows, under the same rule. The
+key's timeout is the earlier of the watermark reaching its earliest
+buffered record and passing the end of its earliest pending day, so a
+record emits in the first microbatch whose watermark reaches it, even when
+its key gets no further data. Each call yields at most one output frame,
+its tagged rows and then its segmap rows.
 
 Nothing releases until the watermark passes it, so a bounded feed ends with
 one end-of-feed record far past its data (``write_end_of_feed``); its
@@ -158,32 +163,6 @@ def _decode_state(tup):
     )
 
 
-def _close_pending_days(doc_id, open_segs, pending_frags, up_to_day_us, params):
-    """Greedy-match every pending day < up_to_day_us in one
-    ``merge_segments`` call; returns (segmap row dicts, new open_segs,
-    remaining pending)."""
-    closing = [f for f in pending_frags if f["day_us"] < up_to_day_us]
-    remaining = [f for f in pending_frags if f["day_us"] >= up_to_day_us]
-    matched, open_segs = merge_segments(closing, params, open_segs)
-    out = [
-        {
-            "kind": "segmap",
-            "doc_id": doc_id,
-            "timestamp": pd.Timestamp(f["day_us"], unit="us"),
-            "msgid": None,
-            "n_tok": None,
-            "frag_id": f["frag_id"],
-            "seg_id": seg_id,
-            "date": _date_of(f["day_us"]).isoformat(),
-            "msg_count": int(f["msg_count"]),
-            "first_us": int(f["first_us"]),
-            "last_us": int(f["last_us"]),
-        }
-        for f, seg_id in matched
-    ]
-    return out, open_segs, remaining
-
-
 def _buffer_columns(doc_id, buf) -> dict:
     """The flat buffer's records as ``kernel._record_columns`` (the stream
     input has no dest_value: NULL)."""
@@ -219,28 +198,54 @@ def _buffer_lists(cols) -> dict:
     return buf
 
 
-def _tagged_frame(cols, fid_arr):
-    """Columnar tagged-record output frame in OUTPUT_SCHEMA order."""
-    n = len(fid_arr)
-    none_col = np.full(n, None, dtype=object)
-    null_nt = np.isnan(cols["n_tok"])
+def _output_frame(doc_id, cols, fid_arr, matched):
+    """One ``OUTPUT_SCHEMA`` frame: the released records' tagged rows, then
+    the closed days' segmap rows (``merge_segments``' (summary, seg_id)
+    pairs)."""
+    n, m = len(fid_arr), len(matched)
+    frags = [f for f, _ in matched]
+
+    def column(name, dtype=object):
+        return np.fromiter((f[name] for f in frags), dtype=dtype, count=m)
+
+    def objects(tagged=None, segmap=None):
+        out = np.full(n + m, None, dtype=object)
+        if tagged is not None:
+            out[:n] = tagged
+        if segmap is not None:
+            out[n:] = segmap
+        return out
+
+    def ints(frag=None, name=None, dtype="int64"):
+        vals = np.zeros(n + m, dtype=dtype)
+        null = np.ones(n + m, dtype=bool)
+        if frag is not None:
+            vals[n:] = column(frag, dtype)
+            null[n:] = False
+        if name is not None:
+            null[:n] = np.isnan(cols[name])
+            vals[:n] = np.where(null[:n], 0, cols[name])
+        return pd.arrays.IntegerArray(vals, null)
+
+    day_us = column("day_us", "int64")
+    us = np.concatenate([cols["timestamp"], day_us])
+    kind = np.full(n + m, "segmap", dtype=object)
+    kind[:n] = "tagged"
     return pd.DataFrame(
         {
-            "kind": np.full(n, "tagged", dtype=object),
-            "doc_id": cols["doc_id"],
-            "timestamp": cols["timestamp"]
-            .view("datetime64[us]")
-            .astype("datetime64[ns]"),
-            "msgid": cols["msgid"],
-            "n_tok": pd.arrays.IntegerArray(
-                np.where(null_nt, 0, cols["n_tok"]).astype("int32"), null_nt
+            "kind": kind,
+            "doc_id": np.full(n + m, doc_id, dtype=object),
+            "timestamp": us.view("datetime64[us]").astype("datetime64[ns]"),
+            "msgid": objects(cols["msgid"]),
+            "n_tok": ints(name="n_tok", dtype="int32"),
+            "frag_id": objects(fid_arr, column("frag_id")),
+            "seg_id": objects(segmap=[seg_id for _, seg_id in matched]),
+            "date": objects(
+                segmap=[_date_of(d).isoformat() for d in day_us.tolist()]
             ),
-            "frag_id": fid_arr,
-            "seg_id": none_col,
-            "date": none_col,
-            "msg_count": pd.array([None] * n, dtype="Int64"),
-            "first_us": pd.array([None] * n, dtype="Int64"),
-            "last_us": pd.array([None] * n, dtype="Int64"),
+            "msg_count": ints("msg_count"),
+            "first_us": ints("first_us"),
+            "last_us": ints("last_us"),
         },
         copy=False,
     )
@@ -295,30 +300,32 @@ def make_stateful_segmenter(params: SegmenterParams = DEFAULT_PARAMS):
         rel = cols["timestamp"] <= wm_us
         buf = _buffer_lists({c: a[~rel] for c, a in cols.items()})
 
-        tagged = []
+        released = {c: a[rel] for c, a in cols.items()}
+        fid = np.empty(0, dtype=object)
         if rel.any():
-            released, fid = fragment_columns(
-                {c: a[rel] for c, a in cols.items()}, frag_days, pending, params
-            )
-            tagged.append(_tagged_frame(released, fid))
-        segmap, open_segs, pending = _close_pending_days(
-            doc_id, open_segs, pending, close_day_us, params
-        )
+            released, fid = fragment_columns(released, frag_days, pending, params)
+        # the pending days that end at or before the watermark close
+        closing = [f for f in pending if f["day_us"] < close_day_us]
+        pending = [f for f in pending if f["day_us"] >= close_day_us]
+        matched, open_segs = merge_segments(closing, params, open_segs)
         # fragmenter state for closed days can never be touched again
         # (records at or below the watermark are dropped upstream) — prune
         # it so state stays O(open days)
         frag_days = {d: v for d, v in frag_days.items() if d >= close_day_us}
         state.update(_encode_state(frag_days, open_segs, pending, buf))
-        open_days = [f["day_us"] for f in pending]
+        # Spark fires the timeout once the watermark is strictly past it:
+        # wake the key when the watermark reaches its earliest buffered
+        # record (release is t <= wm, so the ms ceiling - 1) or passes the
+        # end of its earliest pending day, whichever comes first
+        wake = [(f["day_us"] + US_PER_DAY) // 1000 for f in pending]
         if buf:
-            open_days.append(min(buf["t"]) // US_PER_DAY * US_PER_DAY)
-        if open_days:
-            next_close = min(open_days) + US_PER_DAY
-            state.setTimeoutTimestamp(max(next_close // 1000, wm_ms + 1))
+            wake.append(-(-min(buf["t"]) // 1000) - 1)
+        if wake:
+            # GroupState rejects a timeout below the watermark or at 0
+            state.setTimeoutTimestamp(max(min(wake), wm_ms, 1))
 
-        yield from tagged
-        if segmap:
-            yield pd.DataFrame(segmap)
+        if len(fid) or matched:
+            yield _output_frame(doc_id, released, fid, matched)
 
     return fn
 
@@ -331,11 +338,12 @@ def stream_segment(
 ) -> DataFrame:
     """records stream -> union-typed output (tagged records + segmap rows).
 
-    A record's tagged row emits once the watermark reaches it, and a day's
-    segmap rows once the watermark passes the day's end: byte-identical to
-    the one-shot batch engine under ARBITRARY intra-day disorder, with state
-    bounded by the out-of-order suffix. A fired event-time timeout only
-    wakes an idle key so its days close on time. Size ``watermark`` to the
+    A record's tagged row emits in the first microbatch whose watermark
+    reaches it, and a day's segmap rows in the first whose watermark passes
+    the day's end: byte-identical to the one-shot batch engine under
+    ARBITRARY intra-day disorder, with state bounded by the out-of-order
+    suffix. A fired event-time timeout only wakes an idle key, at the first
+    of those two moments, so it emits on time. Size ``watermark`` to the
     feed's real disorder; end a bounded feed with ``write_end_of_feed`` and
     filter ``END_OF_FEED_DOC_ID`` out of the sink.
 

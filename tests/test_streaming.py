@@ -169,6 +169,46 @@ def test_stream_equals_batch_and_recovers(spark, stream_case):
     assert got_segmap == exp_segmap
 
 
+def test_checkpoint_keeps_its_partition_count(spark, stream_case, tmp_path):
+    """A checkpoint written under 8 shuffle partitions (the earlier default
+    on 4 cores) resumes under the current default: Spark keeps the stateful
+    operator's partition count in the checkpoint, and the drained output
+    equals the batch engine."""
+    tmpdir, full, _, paths = stream_case
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(in_dir)
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+
+    _feed(spark, in_dir, paths[0], 0)
+    _feed(spark, in_dir, paths[1], 1)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        _await(_run_stream(spark, in_dir, out_dir, ckpt))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+
+    for i in (2, 3):
+        _feed(spark, in_dir, paths[i], i)
+    write_end_of_feed(spark, in_dir)
+    _await(_run_stream(spark, in_dir, out_dir, ckpt))
+
+    state_parts = os.listdir(os.path.join(ckpt, "state", "0"))
+    assert sorted(int(p) for p in state_parts if p.isdigit()) == list(range(8))
+    result = _read_drained(spark, out_dir)
+    got_tagged = {
+        r["msgid"]: r["frag_id"]
+        for r in result.where(F.col("kind") == "tagged").collect()
+    }
+    got_segmap = {
+        r["frag_id"]: (r["seg_id"], r["date"])
+        for r in result.where(F.col("kind") == "segmap").collect()
+    }
+    assert result.where(F.col("kind") == "segmap").count() == len(got_segmap)
+    assert (got_tagged, got_segmap) == _batch_expected(full)
+
+
 def test_exactly_once_replay(spark, stream_case, tmp_path):
     """Re-running an identical microbatch (same batch_id) must leave the
     sink unchanged: partition-scoped overwrite is idempotent."""
@@ -555,6 +595,50 @@ class _FakeGroupState:
         self.timeout_set = ts
 
 
+def test_buffered_record_releases_when_watermark_reaches_it():
+    """A buffered record emits in the first microbatch whose watermark
+    reaches it, even when its key gets no further data: the key's timeout
+    fires once the watermark reaches the record, well before its day
+    ends."""
+    import pandas as pd
+
+    from pipe_segment_spark.streaming.segmenter_stream import (
+        make_stateful_segmenter,
+    )
+
+    fn = make_stateful_segmenter(PARAMS)
+    # 10:00:00.0005 on 2024-01-01: not a whole millisecond
+    t = pd.Timestamp("2024-01-01 10:00:00.000500")
+    t_us = t.value // 1000
+    rec = pd.DataFrame(
+        {
+            "doc_id": ["d1"], "timestamp": [t], "msgid": ["a0"],
+            "n_tok": [10], "rec_type": ["POS"], "source": ["s"],
+            "ident_value": [None], "has_payload": [True],
+        }
+    )
+    st = _FakeGroupState(wm_ms=t_us // 1000 - 3_600_000)
+    assert list(fn(("d1",), iter([rec]), st)) == []  # above the watermark
+    timeout = st.timeout_set
+    assert timeout is not None
+
+    def fires(wm_ms):  # Spark: the watermark is strictly past the timeout
+        return wm_ms > timeout
+
+    # the watermark at 10:00:00.000 is below the record; 10:00:00.001 is
+    # the first that reaches it
+    assert not fires(t_us // 1000)
+    wm_ms = t_us // 1000 + 1
+    assert fires(wm_ms)
+    st.wm_ms, st.timeout_set, st.hasTimedOut = wm_ms, None, True
+    (out,) = fn(("d1",), iter([]), st)
+    assert list(out["kind"]) == ["tagged"]
+    assert list(out["msgid"]) == ["a0"]
+    assert out["frag_id"].iloc[0] is not None
+    # its day stays open: the next timeout is the day's end
+    assert st.timeout_set == pd.Timestamp("2024-01-02").value // 1_000_000
+
+
 def test_sorted_prefix_state_bounded_by_suffix():
     """sorted_prefix keeps ONLY the out-of-order suffix (records >= the
     watermark) buffered; the watermark-confirmed prefix is released through
@@ -775,7 +859,9 @@ def test_sorted_prefix_equals_segment_key_property():
         def call(frames, timed_out):
             state.hasTimedOut = timed_out
             state.timeout_set = None  # Spark resets it on every call
-            parts.extend(fn(("d1",), iter(frames), state))
+            out = list(fn(("d1",), iter(frames), state))
+            assert len(out) <= 1  # tagged and segmap rows in one frame
+            parts.extend(out)
 
         def fire_timeout():
             if state.timeout_set is not None and (
@@ -807,14 +893,12 @@ def test_sorted_prefix_equals_segment_key_property():
         out_cols = ["timestamp", "msgid", "n_tok"]
         got_tagged, got_segmap = Counter(), []
         for part in parts:
-            if (part["kind"] == "tagged").all():
-                got_tagged.update(
-                    (*r, f) for r, f in zip(rows(part, out_cols), part["frag_id"])
-                )
-            else:
-                got_segmap += zip(
-                    part["frag_id"], part["seg_id"], part["date"]
-                )
+            tag = part[part["kind"] == "tagged"]
+            got_tagged.update(
+                (*r, f) for r, f in zip(rows(tag, out_cols), tag["frag_id"])
+            )
+            seg = part[part["kind"] == "segmap"]
+            got_segmap += zip(seg["frag_id"], seg["seg_id"], seg["date"])
 
         kept_rows = pdf.iloc[kept].assign(dest_value=None).reset_index(drop=True)
         want = segment_key(kept_rows, PARAMS)

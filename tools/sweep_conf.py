@@ -43,7 +43,7 @@ def main():
     from pipe_segment_spark.queries import QUERIES as REGISTRY
     from pipe_segment_spark.session import build_session
 
-    extra = {}
+    extra = {"spark.sql.shuffle.partitions": str(args.shuffle)}
     if args.offheap:
         extra["spark.memory.offHeap.enabled"] = "true"
         extra["spark.memory.offHeap.size"] = args.offheap
@@ -51,7 +51,6 @@ def main():
     spark = build_session(
         app_name="sweep",
         cores=args.cpus,
-        shuffle_partitions=args.shuffle,
         extra_conf=extra,
     )
     spark.sparkContext.setLogLevel("ERROR")
