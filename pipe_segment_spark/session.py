@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(
     app_name: str = "pipe-segment-spark",
@@ -25,9 +27,19 @@ def build_session(
     builder = SparkSession.builder.appName(app_name)
     # Under spark-submit (which hands PySpark its gateway, the same test
     # pyspark.java_gateway makes) the launcher has already set the master:
-    # its --master, or its local[*] default. Keep it.
+    # its --master, or its local[*] default. Keep it, and its Python daemon:
+    # on a cluster this package reaches the workers per task (--py-files),
+    # after the daemon has started.
     if "PYSPARK_GATEWAY_PORT" not in os.environ:
-        builder = builder.master(f"local[{cores}]")
+        builder = (
+            builder.master(f"local[{cores}]")
+            # Python workers import the installed pyspark, not Spark's
+            # zipped copy (worker_daemon.py). The daemon starts in the
+            # driver's working directory, so the package's parent goes on
+            # the workers' path for a driver started anywhere.
+            .config("spark.python.daemon.module", "pipe_segment_spark.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        )
     builder = (
         builder
         # Event time is canonical UTC (reference keeps float unix-seconds UTC,
@@ -59,12 +71,13 @@ def _default_shuffle_partitions(cores: int | str) -> int:
     start and kept in its checkpoint, so an existing checkpoint resumes
     with its own count).
 
-    Every Python task pays a fixed start-up, about 0.3 s on 4 cores, most
-    of it in PySpark's ``setup_spark_files``: its
-    ``importlib.invalidate_caches()`` re-reads the directory of
-    ``pyspark.zip`` once per cached zipimporter. Two waves (2x cores) ran 8
-    stateful tasks a microbatch on 4 cores, each paying that start-up and
-    a state-store commit, and more than half of the warm batch kernel
+    Every Python task pays a fixed start-up and every stateful task a
+    state-store commit. When this rule was set, the start-up was about
+    0.3 s on 4 cores (PySpark's ``setup_spark_files`` re-read the
+    directory of Spark's zipped pyspark once per cached zipimporter; the
+    local daemon now runs on the installed pyspark, worker_daemon.py, and
+    that part is gone). Two waves (2x cores) ran 8 stateful tasks a
+    microbatch on 4 cores, and more than half of the warm batch kernel
     stage's Python-worker time was this cost. One wave, measured on 4
     cores in paired runs: perfbench backfill job_s 2.84 s -> 2.15 s, and a
     20x backfill-shaped input (400k records, one doc_id holding 30%) 7.1 s
